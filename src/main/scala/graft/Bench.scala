@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * `$SPARK_GRAFT_SF_DIR`, prints ONE JSON line with total + per-query
   * seconds.
@@ -209,39 +207,9 @@ object HostCanary {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Split small parquet files across the cores (r12 StageClock
-      // audit): the default openCostInBytes (4 MB) clamps every
-      // bench-SF table (0.3-11 MB single files) to ONE scan partition,
-      // so CPU-dense map queries (codec sign/verify over 100k events,
-      // media decode) ran single-task at 3% utilization — and the
-      // terminal sort's sample pass re-executed that single task. At
-      // the 100 TB target files dwarf maxPartitionBytes and these two
-      // knobs are inert; locally they are exactly the "size partitions
-      // to the SF" dial. No new exchanges — byte metrics unchanged.
-      .config("spark.sql.files.openCostInBytes", 16384)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      // Align the shuffle WRITER with the at-scale regime (r15 stack
-      // audit): with reducer counts under the 200-partition default,
-      // Spark picks BypassMergeSortShuffleWriter, which opens one file
-      // PER (map task × reduce partition) — ~1k file creates per local
-      // exchange, measured as the dominant cost of small shuffles here
-      // (DiskBlockObjectWriter.open hot in every sampled heavy stage;
-      // q98 3.9 s → 2.4 s from this alone). At the 100 TB target the
-      // byte-derived widths put every real exchange FAR above 200
-      // partitions, where the sort-based writer (one spill file per map
-      // task) is what runs anyway — so threshold=1 makes the bench
-      // exercise the writer the production plan uses instead of a
-      // small-R special case production never hits. Plans unchanged.
-      .config("spark.shuffle.sort.bypassMergeThreshold", 1)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // cores: SPARK_GRAFT_CPUS, else the processor count; the session's
+    // scan-splitting and shuffle-writer settings live in graft.Session
+    val spark = Session.local(Session.cores)
 
     // schema-drift tripwire: fail loudly with ONE labeled message if the
     // driver regenerated testdata under types the queries don't expect
@@ -569,14 +537,8 @@ object Bench {
         f" vs BENCH_REF) — attempt ${recs.size + 1}/$maxAttempts after quiet-wait")
       val waited = waitForQuiet(waitBudget)
       waitBudget = math.max(0.0, waitBudget - waited)
-      // release the registry FIRST so the attempt's live frames are
-      // counted into the run-level total (clearCache would zero their
-      // storage levels and the count with them), then clear whatever
-      // non-registry caches remain
-      cachesReleasedTotal += graft.CacheRegistry.releaseAll()
-      spark.sharedState.cacheManager.clearCache()
-      graft.queries.TextOps.clearTrainMemo()
-      System.gc()
+      // the attempt's live registry frames count into the run-level total
+      cachesReleasedTotal += Session.isolate(spark)
       val can = HostCanary.measure()
       val a = runAttempt()
       recs = recs :+ Rec(a, medianRatio(a), waited, can._1, can._2)

@@ -1,28 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // small-file scan splitting, the Bench treatment (r12): inert at
-      // real scale, parallelizes CPU-dense map queries at test SFs
-      .config("spark.sql.files.openCostInBytes", 16384)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      // sort-based shuffle writer even at small reducer counts, the
-      // Bench treatment (r15): the bypass-merge writer's one-file-per-
-      // (map × reducer) is a small-R special case the byte-derived
-      // production widths never select; plans unchanged
-      .config("spark.shuffle.sort.bypassMergeThreshold", 1)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cores)
     // schema-drift tripwire: fail loudly with ONE labeled message if the
     // driver regenerated testdata under types the queries don't expect
     Tables.validate(spark, sfDir)
@@ -41,20 +24,11 @@ object Verify {
         finally st.close()
       }
     SparkEntry.queries.foreach { case (name, fn) =>
-      // isolation: drop cached relations the previous query registered
-      // (intra-query persists) so 100+ queries don't accumulate cached
-      // blocks and never cross-feed each other's caches. The q104/q105
-      // train memo holds localCheckpointed RDDs the CacheManager cannot
-      // see — clear it too (the ScaleSweep/StageClock treatment), so
-      // each query's correctness dump computes in genuine isolation and
-      // the checkpoint blocks don't stay resident for the rest of the
-      // run
-      spark.sharedState.cacheManager.clearCache()
-      // keep the CacheRegistry's frame list from growing across 105
-      // queries: clearCache already dropped the blocks, this forgets
-      // the (now-unpersisted) frames so the registry stays bounded
-      graft.CacheRegistry.releaseAll()
-      graft.queries.TextOps.clearTrainMemo()
+      // isolation: drop the previous query's cached relations, helper
+      // persists and training/label memos, so 100+ queries never
+      // accumulate cached blocks or cross-feed each other's caches and
+      // each correctness dump computes in genuine isolation
+      Session.isolate(spark)
       rmTree(Paths.get(outDir, name))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

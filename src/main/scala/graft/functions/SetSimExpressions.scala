@@ -69,9 +69,18 @@ object SetSimKernels {
     var keys = new Array[UTF8String](cap)
     var stamps = new Array[Int](cap)
     var gen = 0
+    /** Whether the current set holds a null element: nulls never enter
+      * the table (UTF8String.hashCode would NPE), but a set-side null
+      * still matches a probe-side null, as in java.util.HashSet. */
+    var hasNull = false
     def next(ns: Int): Unit = {
-      if (ns * 2 > cap) {
-        while (ns * 2 > cap) cap <<= 1
+      if (ns.toLong * 2 > cap) {
+        // Long arithmetic: doubling an Int cap past 2^30 would wrap
+        // negative and never terminate; array slots stop at 2^30
+        require(ns <= (1 << 29), s"set side of $ns elements exceeds the 2^29 scratch bound")
+        var c = cap.toLong
+        while (ns.toLong * 2 > c) c <<= 1
+        cap = c.toInt
         mask = cap - 1
         keys = new Array[UTF8String](cap)
         stamps = new Array[Int](cap)
@@ -79,25 +88,30 @@ object SetSimKernels {
       }
       if (gen == Int.MaxValue) { java.util.Arrays.fill(stamps, 0); gen = 0 }
       gen += 1
+      hasNull = false
       // drop stale refs periodically: a slot not overwritten since an
       // old row would otherwise pin that row's underlying buffer (the
       // UTF8Strings are zero-copy views) for the task's lifetime
       if ((gen & 0x3ff) == 0) java.util.Arrays.fill(
         keys.asInstanceOf[Array[AnyRef]], null)
     }
-    def add(s: UTF8String): Unit = {
-      var idx = s.hashCode & mask
-      while (stamps(idx) == gen && !keys(idx).equals(s)) idx = (idx + 1) & mask
-      if (stamps(idx) != gen) { stamps(idx) = gen; keys(idx) = s }
-    }
-    def contains(s: UTF8String): Boolean = {
-      var idx = s.hashCode & mask
-      while (stamps(idx) == gen) {
-        if (keys(idx).equals(s)) return true
-        idx = (idx + 1) & mask
+    def add(s: UTF8String): Unit =
+      if (s == null) hasNull = true
+      else {
+        var idx = s.hashCode & mask
+        while (stamps(idx) == gen && !keys(idx).equals(s)) idx = (idx + 1) & mask
+        if (stamps(idx) != gen) { stamps(idx) = gen; keys(idx) = s }
       }
-      false
-    }
+    def contains(s: UTF8String): Boolean =
+      if (s == null) hasNull
+      else {
+        var idx = s.hashCode & mask
+        while (stamps(idx) == gen) {
+          if (keys(idx).equals(s)) return true
+          idx = (idx + 1) & mask
+        }
+        false
+      }
   }
   private val scratch = new ThreadLocal[SetScratch] {
     override def initialValue(): SetScratch = new SetScratch
@@ -726,9 +740,11 @@ object LiteralSplitKernel {
 
 /** [[LiteralSplitKernel.eval]] as a codegen'd unary expression; the
   * separator is a construction-time constant, held as bytes in a
-  * static-per-plan codegen reference. Output type matches the builtin
-  * `split` exactly (ARRAY<STRING>, containsNull = true) so swapped
-  * call sites keep their schema bit-for-bit. */
+  * static-per-plan codegen reference. Output is ARRAY<STRING> with a
+  * non-null element contract (containsNull = false, see [[dataType]]):
+  * the array is null only for a null input, and its elements never are.
+  * Values equal the builtin `split`'s; the schema differs from it only
+  * in that element nullability. */
 case class LiteralSplit(child: Expression, sep: String)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
   require(sep.nonEmpty && sep.forall(c => c < 128 && !"\\[](){}*+?.^$|".contains(c)),

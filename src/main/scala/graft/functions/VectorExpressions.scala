@@ -272,7 +272,7 @@ object GraftFunctions {
   }
 }
 
-/** `SparkSession.builder().withExtensions(new GraftExtensions)` — or
+/** `withExtensions(new GraftExtensions)` on a session builder — or
   * `spark.sql.extensions=graft.functions.GraftExtensions`.
   *
   * Injects every NATIVE expression `ensureRegistered` exposes (one

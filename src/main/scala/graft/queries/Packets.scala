@@ -355,10 +355,9 @@ object Packets {
     * parallelism with one state shuffle. Rows-only check (envelope
     * emission depends on the state machine; its semantics are pinned by
     * StateOpsSpec + the q22-q25 window-analog oracles). */
-  /** q50's synthesized raw-message frame, shared with the dev tools
-    * (Profile50/Stress50) that profile the same workload — ONE
-    * definition so a change to the message shape cannot leave a tool
-    * silently profiling something else. `e` carries
+  /** q50's synthesized raw-message frame — ONE definition, so anything
+    * that profiles q50's workload (StageClock on q50_pipeline_e2e)
+    * measures the message shape q50 actually runs. `e` carries
     * (event_id, user_id, ts_us); `collectors` sets the per-collector
     * fan (8 for the graded query, more for state-parallelism stress). */
   def synthRawMessages(e: DataFrame, collectors: Int): DataFrame = {

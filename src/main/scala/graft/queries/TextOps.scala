@@ -1961,7 +1961,7 @@ object TextOps {
     // gram→df aggregation subtree while the mean-df scalar's copy had
     // none, the canonicalized exchanges stopped matching, and the
     // corpus paid the full explode+aggregate pass TWICE (found by the
-    // CanonCheck all-query sweep). With the filter stated once here,
+    // `PlanDump canon` all-query sweep). With the filter stated once here,
     // both consumers inherit the same constraint, the subtrees
     // canonicalize equal, and the second pass becomes a ReusedExchange.
     val g = shingled(documents(s, d))
@@ -2016,7 +2016,7 @@ object TextOps {
   /** Character-gram width for q99 — long enough that a duplicated gram
     * is training-relevant verbatim reuse, short enough that partial
     * phrase reuse (not just whole-doc copies) still surfaces at test SF. */
-  private[graft] val SubstrL = 25 // shared with tools.GramCensus — the census must count the same grams q99 windows over
+  private[graft] val SubstrL = 25
 
   /** Codepoints per generation chunk in [[q99Grams]]' big-corpus path:
     * one document contributes at most this many gram rows (~64 B

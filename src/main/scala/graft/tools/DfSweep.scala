@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{QueryProfile, Session}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
@@ -63,37 +63,8 @@ object DfSweep {
       .split(",").map(_.trim.toLong).toSeq
     val background = sys.env.getOrElse("DFSWEEP_BACKGROUND", "33554432").toLong
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val stageTasks = mutable.Map.empty[Int, mutable.ArrayBuffer[Long]]
-    val bytes = new java.util.concurrent.atomic.AtomicLongArray(4)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskInfo != null && e.taskInfo.successful) {
-          stageTasks.synchronized {
-            stageTasks.getOrElseUpdate(e.stageId,
-              mutable.ArrayBuffer.empty[Long]) += e.taskInfo.duration
-          }
-          val m = e.taskMetrics
-          if (m != null) {
-            bytes.addAndGet(0, m.shuffleWriteMetrics.bytesWritten)
-            bytes.addAndGet(1, m.shuffleReadMetrics.totalBytesRead)
-            bytes.addAndGet(2, m.memoryBytesSpilled)
-            bytes.addAndGet(3, m.diskBytesSpilled)
-          }
-        }
-    })
-    def reset(): Unit = {
-      stageTasks.synchronized(stageTasks.clear())
-      (0 until 4).foreach(bytes.set(_, 0L))
-    }
+    val spark = Session.local(Session.cores)
+    val profile = QueryProfile.attach(spark)
 
     // The synthetic inventory: (doc_id, pos, gram) exactly as q99Grams
     // emits it. Background grams are unique 25-char strings (df = 1 —
@@ -145,15 +116,6 @@ object DfSweep {
 
     import graft.JsonNum.num
     val rows = mutable.ArrayBuffer.empty[String]
-    def publish(): Unit = {
-      val out = java.nio.file.Paths.get(outPath)
-      val tmp = out.resolveSibling(out.getFileName.toString + ".tmp")
-      java.nio.file.Files.write(tmp,
-        rows.mkString("[\n", ",\n", "\n]\n").getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, out,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
 
     // Global per-form warmup, un-recorded: the first sweep showed the
     // first recorded (form, df) pair carrying compile-churn walls (a
@@ -164,54 +126,42 @@ object DfSweep {
       val b: Long => DataFrame =
         if (form == "window") windowForm else twoPassForm
       (1 to 2).foreach(_ =>
-        org.apache.spark.sql.GraftColumnBridge.forceOwnPlan(b(1000L)))
+        GraftColumnBridge.forceOwnPlan(b(1000L)))
     }
 
     for (form <- forms; df <- dfs) {
       val build: Long => DataFrame =
         if (form == "window") windowForm else twoPassForm
-      var wall = 0.0; var n = 0L
-      var stats: Seq[(Int, Int, Long, Long)] = Nil
       val reps = sys.env.getOrElse("DFSWEEP_REPS", "3").toInt
-      for (rep <- 1 to reps) {
-        org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
-        System.gc()
-        reset()
-        val t0 = System.nanoTime()
-        n = org.apache.spark.sql.GraftColumnBridge.forceOwnPlan(build(df))
-        wall = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
-        if (rep == reps) stats = stageTasks.synchronized {
-          stageTasks.toSeq.map { case (sid, ds) =>
-            val sorted = ds.sorted
-            (sid, ds.size, sorted.last, sorted(sorted.size / 2))
-          }
-        }
-      }
+      val run = (1 to reps).map { _ =>
+        Session.isolate(spark)
+        profile.measure(GraftColumnBridge.forceOwnPlan(build(df)))
+      }.last
+      val stats = run.spreads
       val w = widthFor(background + df)
       // the contested stage is the widest one (the W-task gram stage);
       // in the two-pass form AQE may split the hot probe partition, so
       // match on >= W/2 tasks and take the largest max among those
-      val wide = stats.filter(_._2 >= w / 2)
-      val contested = if (wide.nonEmpty) wide.maxBy(_._3)
-        else if (stats.nonEmpty) stats.maxBy(_._3)
-        else (0, 0, 0L, 0L)
+      val wide = stats.filter(_.tasks >= w / 2)
+      val contested = if (wide.nonEmpty) wide.maxBy(_.maxMs)
+        else if (stats.nonEmpty) stats.maxBy(_.maxMs)
+        else QueryProfile.Spread(0, 0, 0L, 0L, 0L, 0L)
       val marginalUs =
-        if (df > 0) (contested._3 - contested._4).toDouble * 1000.0 / df
+        if (df > 0) (contested.maxMs - contested.medMs).toDouble * 1000.0 / df
         else 0.0
-      def gb(i: Int) = num("%.3f", bytes.get(i) / 1e9)
+      def gb(f: QueryProfile.Stage => Long) = num("%.3f", run.total(f) / 1e9)
       val line =
-        s"""{"form":"$form","df":$df,"width":$w,"rows_out":$n,""" +
-          s""""wall_s":${num("%.3f", wall)},""" +
-          s""""stage":{"tasks":${contested._2},"max_ms":${contested._3},""" +
-          s""""med_ms":${contested._4},""" +
-          s""""ratio":${num("%.2f", contested._3.toDouble / math.max(contested._4, 1L))}},""" +
+        s"""{"form":"$form","df":$df,"width":$w,"rows_out":${run.value},""" +
+          s""""wall_s":${num("%.3f", run.wallS)},""" +
+          s""""stage":{"tasks":${contested.tasks},"max_ms":${contested.maxMs},""" +
+          s""""med_ms":${contested.medMs},""" +
+          s""""ratio":${num("%.2f", contested.maxMs.toDouble / math.max(contested.medMs, 1L))}},""" +
           s""""marginal_us_per_row":${num("%.3f", marginalUs)},""" +
-          s""""shuffle_write_gb":${gb(0)},"shuffle_read_gb":${gb(1)},""" +
-          s""""mem_spill_gb":${gb(2)},"disk_spill_gb":${gb(3)}}"""
+          s""""shuffle_write_gb":${gb(_.writeBytes)},"shuffle_read_gb":${gb(_.readBytes)},""" +
+          s""""mem_spill_gb":${gb(_.memSpill)},"disk_spill_gb":${gb(_.diskSpill)}}"""
       println(line)
       rows += line
-      publish()
+      QueryProfile.publish(outPath, rows)
     }
     spark.stop()
   }

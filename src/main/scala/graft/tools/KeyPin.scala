@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.codec.{Lorawan, LorawanCrypto}
@@ -40,13 +39,7 @@ object KeyPin {
     val outPath = if (args.length > 1) args(1)
       else s"tools/pins/q29_${new java.io.File(sfDir).getName}.sql"
 
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cores)
 
     val rows = graft.Tables.events(spark, sfDir)
       .filter(col("event_id") < 400)

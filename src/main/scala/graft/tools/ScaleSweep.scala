@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.{QueryProfile, Session}
+import org.apache.spark.sql.GraftColumnBridge
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -52,105 +52,35 @@ object ScaleSweep {
     val queries = sys.env.get("SCALESWEEP_QUERIES")
       .map(_.split(",").map(_.trim).toSeq).getOrElse(defaultQueries)
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    final case class M(var taskMs: Long = 0L, var shufWrite: Long = 0L,
-                       var shufRead: Long = 0L,
-                       var spillMem: Long = 0L, var spillDisk: Long = 0L,
-                       var tasks: Long = 0L, var stages: Long = 0L)
-    val cur = new M
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val tm = e.stageInfo.taskMetrics
-        cur.synchronized {
-          cur.taskMs += tm.executorRunTime
-          cur.shufWrite += tm.shuffleWriteMetrics.bytesWritten
-          cur.shufRead += tm.shuffleReadMetrics.totalBytesRead
-          cur.spillMem += tm.memoryBytesSpilled
-          cur.spillDisk += tm.diskBytesSpilled
-          cur.tasks += e.stageInfo.numTasks
-          cur.stages += 1
-        }
-      }
-    })
-    def reset(): Unit = cur.synchronized {
-      cur.taskMs = 0; cur.shufWrite = 0; cur.shufRead = 0
-      cur.spillMem = 0; cur.spillDisk = 0; cur.tasks = 0; cur.stages = 0
-    }
-
+    val spark = Session.local(Session.cores)
+    val profile = QueryProfile.attach(spark)
     import graft.JsonNum.num // Locale.ROOT JSON numerals (shared helper)
 
     val rows = ArrayBuffer.empty[String]
-    // incremental publish: a failure in query N of a long sweep must
-    // not lose the N-1 rows already measured — rewrite the (small)
-    // artifact after every row. Write-then-rename (the Bench self-record
-    // recipe): an in-place write killed mid-flush would corrupt the very
-    // rows the per-row rewrite exists to preserve.
-    def publish(): Unit = {
-      val out = java.nio.file.Paths.get(outPath)
-      val tmp = out.resolveSibling(out.getFileName.toString + ".tmp")
-      java.nio.file.Files.write(tmp,
-        rows.mkString("[\n", ",\n", "\n]\n").getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, out,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
     // JVM/JIT warm-up outside measurement so the smallest SF (first in
     // the arg order) isn't charged the compile cost of every kernel.
     queries.foreach { q =>
       graft.SparkEntry.queries.get(q).foreach(f =>
-        org.apache.spark.sql.GraftColumnBridge.forceOwnPlan(f(spark, sfDirs.head)))
+        GraftColumnBridge.forceOwnPlan(f(spark, sfDirs.head)))
     }
     for (sf <- sfDirs; q <- queries) {
       graft.SparkEntry.queries.get(q) match {
         case None => System.err.println(s"[scalesweep] unknown query $q — skipped")
         case Some(f) =>
           // two executions: rep1 absorbs per-(sf,query) first-execution
-          // JIT/codegen; rep2 is the recorded wall. clearCache() runs
+          // JIT/codegen; rep2 is the recorded wall. Session.isolate runs
           // before BOTH reps deliberately — cached subtrees skip their
           // exchanges, so byte metrics from a warm-cache rep would
-          // undercount what the design actually ships. wall_s is
-          // therefore warm-CODE / cold-CACHE: it re-pays intra-query
-          // persist materialization, which is exactly the per-query
-          // cost a fresh production job pays.
-          var wallCold = 0.0; var wall = 0.0; var n = 0L
-          var snap = (0L, 0L, 0L, 0L, 0L, 0L, 0L)
-          for (rep <- 1 to 2) {
-            org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
-            spark.sharedState.cacheManager.clearCache()
-            // clearCache dropped the blocks; this forgets the frames so
-            // the registry list stays bounded across a multi-decade
-            // sweep (the Verify.scala treatment)
-            graft.CacheRegistry.releaseAll()
-            // q104/q105 memoize their training trajectory outside the
-            // CacheManager — clear it too, or their rows under-report;
-            // the GC nudge lets the ContextCleaner reclaim the evicted
-            // runs' checkpoint blocks before the next measurement
-            // instead of mid-rep
-            graft.queries.TextOps.clearTrainMemo()
-            System.gc()
-            reset()
-            val t0 = System.nanoTime()
-            // own-plan forcing (r12): count() pruned q76's whole verify
-            // tail (terminal unique-keyed left join) to a 4-stage scan
-            n = org.apache.spark.sql.GraftColumnBridge.forceOwnPlan(f(spark, sf))
-            val w = (System.nanoTime() - t0) / 1e9
-            org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
-            if (rep == 1) wallCold = w
-            else {
-              wall = w
-              snap = cur.synchronized {
-                (cur.taskMs, cur.shufWrite, cur.shufRead,
-                 cur.spillMem, cur.spillDisk, cur.tasks, cur.stages)
-              }
-            }
+          // undercount what the design actually ships, and the q104/q105
+          // training memo would skip training. wall_s is therefore
+          // warm-CODE / cold-CACHE: it re-pays intra-query persist
+          // materialization, which is exactly the per-query cost a fresh
+          // production job pays. Own-plan forcing (r12): count() pruned
+          // q76's whole verify tail (terminal unique-keyed left join) to
+          // a 4-stage scan.
+          val Seq(cold, run) = (1 to 2).map { _ =>
+            Session.isolate(spark)
+            profile.measure(GraftColumnBridge.forceOwnPlan(f(spark, sf)))
           }
           // volatile_cols makes each row self-describing (r11 verdict
           // nit 3): wall/CPU are single-host readings with documented
@@ -160,16 +90,16 @@ object ScaleSweep {
           // are deterministic functions of plan+data and are the
           // signals a reader may compare across rows.
           val line =
-            s"""{"sf":"${sf.split('/').filter(_.nonEmpty).last}","query":"$q","wall_s":${num("%.3f", wall)},""" +
-            s""""wall_cold_s":${num("%.3f", wallCold)},""" +
-            s""""rows":$n,"task_cpu_s":${num("%.2f", snap._1 / 1e3)},""" +
-            s""""shuffle_write_b":${snap._2},"shuffle_read_b":${snap._3},""" +
-            s""""spill_mem_b":${snap._4},""" +
-            s""""spill_disk_b":${snap._5},"tasks":${snap._6},"stages":${snap._7},""" +
+            s"""{"sf":"${sf.split('/').filter(_.nonEmpty).last}","query":"$q","wall_s":${num("%.3f", run.wallS)},""" +
+            s""""wall_cold_s":${num("%.3f", cold.wallS)},""" +
+            s""""rows":${run.value},"task_cpu_s":${num("%.2f", run.total(_.runMs) / 1e3)},""" +
+            s""""shuffle_write_b":${run.total(_.writeBytes)},"shuffle_read_b":${run.total(_.readBytes)},""" +
+            s""""spill_mem_b":${run.total(_.memSpill)},""" +
+            s""""spill_disk_b":${run.total(_.diskSpill)},"tasks":${run.total(_.tasks)},"stages":${run.stages.size},""" +
             s""""volatile_cols":"wall_s,wall_cold_s,task_cpu_s"}"""
           println(line)
           rows += line
-          publish()
+          QueryProfile.publish(outPath, rows)
       }
     }
     spark.stop()

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{Column, SparkSession}
+import graft.{QueryProfile, Session}
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
@@ -70,14 +70,8 @@ object SkewProbe {
         "q106_bcast" -> (graft.queries.TextOps.q106BpeEncodeBroadcast _),
         "q100_bcast" -> (graft.queries.TextOps.q100BpeMergesBroadcast _))
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cores)
+    val profile = QueryProfile.attach(spark)
 
     // --- synthesize the hot-key corpus -------------------------------
     // Two document adversaries (SKEW_ADVERSARY):
@@ -224,51 +218,8 @@ object SkewProbe {
     java.nio.file.Files.write(provPath, (provenance + "\n").getBytes("UTF-8"))
     }
 
-    // --- per-task listener: durations per stage + byte totals --------
-    // bytes/spill ride along (r10 verdict task 1: beyond-cap rows need
-    // the no-spill proof IN the artifact — walls at those decades are
-    // single-disk noise, bytes and spill are the recordable signals)
-    // (duration ms, shuffle-read records) per task: the ROWS ratio is
-    // the scale-stable skew signal (r15) — on this ambient-bursty host
-    // identical-row tasks have measured 17× duration spreads, so a
-    // duration ratio alone cannot distinguish a key funnel from a
-    // hypervisor burst; rows max/med can.
-    val stageTasks = mutable.Map.empty[Int, mutable.ArrayBuffer[(Long, Long)]]
-    val bytes = new java.util.concurrent.atomic.AtomicLongArray(4) // sw, sr, memSpill, diskSpill
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskInfo != null && e.taskInfo.successful) {
-          val m = e.taskMetrics
-          val recs = if (m != null) m.shuffleReadMetrics.recordsRead else 0L
-          stageTasks.synchronized {
-            stageTasks.getOrElseUpdate(e.stageId,
-              mutable.ArrayBuffer.empty[(Long, Long)]) +=
-              ((e.taskInfo.duration, recs))
-          }
-          if (m != null) {
-            bytes.addAndGet(0, m.shuffleWriteMetrics.bytesWritten)
-            bytes.addAndGet(1, m.shuffleReadMetrics.totalBytesRead)
-            bytes.addAndGet(2, m.memoryBytesSpilled)
-            bytes.addAndGet(3, m.diskBytesSpilled)
-          }
-        }
-    })
-    def reset(): Unit = {
-      stageTasks.synchronized(stageTasks.clear())
-      (0 until 4).foreach(bytes.set(_, 0L))
-    }
-
     import graft.JsonNum.num
     val rows = mutable.ArrayBuffer.empty[String]
-    def publish(): Unit = {
-      val out = java.nio.file.Paths.get(outPath)
-      val tmp = out.resolveSibling(out.getFileName.toString + ".tmp")
-      java.nio.file.Files.write(tmp,
-        rows.mkString("[\n", ",\n", "\n]\n").getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, out,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
 
     def lookup(q: String) = extra.get(q).orElse(graft.SparkEntry.queries.get(q))
 
@@ -296,7 +247,7 @@ object SkewProbe {
         require(a == c, s"q33 hybrid prefix order diverges on $label")
       }
       println(s"[skewprobe] q33 variants identical on $label (${a.size} pairs)")
-      spark.sharedState.cacheManager.clearCache()
+      Session.isolate(spark)
     }
 
     // adversarial losslessness (r11): with SKEW_AB=1, every *_nopref
@@ -328,21 +279,19 @@ object SkewProbe {
       for (q <- queries; base <- twin.get(q)) {
         val a = lookup(q).get.apply(spark, skewDir)
           .collect().map(_.toString).sorted.toSeq
-        spark.sharedState.cacheManager.clearCache()
-        graft.CacheRegistry.releaseAll()
+        Session.isolate(spark)
         val b = lookup(base).get.apply(spark, skewDir)
           .collect().map(_.toString).sorted.toSeq
         require(a == b, s"$q diverges from $base on the hot corpus " +
           s"(${a.size} vs ${b.size} rows)")
         println(s"[skewprobe] $q == $base on hotkey (${a.size} rows)")
-        spark.sharedState.cacheManager.clearCache()
-        graft.CacheRegistry.releaseAll()
+        Session.isolate(spark)
       }
     }
 
     // warm the kernels once so neither dataset is charged JIT
     queries.foreach(q => lookup(q).foreach(f =>
-      org.apache.spark.sql.GraftColumnBridge.forceOwnPlan(f(spark, baseSf))))
+      GraftColumnBridge.forceOwnPlan(f(spark, baseSf))))
 
     for ((label, dir) <- Seq("base" -> baseSf, "hotkey" -> skewDir);
          q <- queries) {
@@ -351,31 +300,14 @@ object SkewProbe {
         case Some(f) =>
           // rep1 absorbs per-(dataset,query) first-execution codegen;
           // rep2 is recorded. Cold cache both reps (ScaleSweep recipe).
-          var wall = 0.0; var n = 0L
-          // (stage, tasks, maxDur, medDur, maxRows, medRows)
-          var stats: Seq[(Int, Int, Long, Long, Long, Long)] = Nil
-          for (rep <- 1 to 2) {
-            org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
-            spark.sharedState.cacheManager.clearCache()
-            graft.queries.TextOps.clearTrainMemo()
-            System.gc()
-            reset()
-            val t0 = System.nanoTime()
-            // own-plan forcing (r12, the ScaleSweep/Bench treatment):
-            // count() would prune terminal sorts/projections and can
-            // eliminate a unique-keyed left-join tail entirely
-            n = org.apache.spark.sql.GraftColumnBridge.forceOwnPlan(f(spark, dir))
-            wall = (System.nanoTime() - t0) / 1e9
-            org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
-            if (rep == 2) stats = stageTasks.synchronized {
-              stageTasks.toSeq.map { case (sid, ds) =>
-                val durs = ds.map(_._1).sorted
-                val recs = ds.map(_._2).sorted
-                (sid, ds.size, durs.last, durs(durs.size / 2),
-                  recs.last, recs(recs.size / 2))
-              }
-            }
-          }
+          // Own-plan forcing (r12, the ScaleSweep/Bench treatment):
+          // count() would prune terminal sorts/projections and can
+          // eliminate a unique-keyed left-join tail entirely.
+          val run = (1 to 2).map { _ =>
+            Session.isolate(spark)
+            profile.measure(GraftColumnBridge.forceOwnPlan(f(spark, dir)))
+          }.last
+          val stats = run.spreads
           // the dominant stage (largest max task) carries the skew
           // verdict; ratios on sub-200ms stages are scheduling noise,
           // so the "meaningful" worst ratio only looks above that floor.
@@ -383,9 +315,9 @@ object SkewProbe {
           // (collapsed to a driver-local/cached result) still emits its
           // row — with dominant_stage null — instead of aborting the
           // probe and losing every other query's rows (r9 advice).
-          val meaningful = stats.filter(s => s._3 >= 200 && s._2 >= 8)
+          val meaningful = stats.filter(s => s.maxMs >= 200 && s.tasks >= 8)
           val worst = if (meaningful.isEmpty) 0.0
-            else meaningful.map(s => s._3.toDouble / math.max(s._4, 1L)).max
+            else meaningful.map(s => s.maxMs.toDouble / math.max(s.medMs, 1L)).max
           // r11: at beyond-cap widths the max>=200ms floor alone is not
           // enough — OUTPUT-scale stages (survivor persist/semi-joins:
           // tens of thousands of pairs across 42 partitions) run with a
@@ -397,39 +329,39 @@ object SkewProbe {
           // grinding df²/25) stays visible, while a straggler in an
           // otherwise-idle stage is judged by stages_top3's ABSOLUTE
           // max_ms instead of a ratio over idle neighbors.
-          val loaded = stats.filter(s => s._4 >= 200 && s._2 >= 8)
+          val loaded = stats.filter(s => s.medMs >= 200 && s.tasks >= 8)
           val worstLoaded = if (loaded.isEmpty) 0.0
-            else loaded.map(s => s._3.toDouble / math.max(s._4, 1L)).max
+            else loaded.map(s => s.maxMs.toDouble / math.max(s.medMs, 1L)).max
           // the rows twin of worst_loaded (r15): max/med shuffle-read
           // records over the same loaded stages — ambient-immune
           val worstLoadedRows = if (loaded.isEmpty) 0.0
-            else loaded.map(s => s._5.toDouble / math.max(s._6, 1L)).max
-          def stageJson(s: (Int, Int, Long, Long, Long, Long)) =
-            s"""{"tasks":${s._2},"max_ms":${s._3},"med_ms":${s._4},""" +
-              s""""ratio":${num("%.2f", s._3.toDouble / math.max(s._4, 1L))},""" +
-              s""""rows_max":${s._5},"rows_med":${s._6},""" +
-              s""""rows_ratio":${num("%.2f", s._5.toDouble / math.max(s._6, 1L))}}"""
+            else loaded.map(s => s.maxRows.toDouble / math.max(s.medRows, 1L)).max
+          def stageJson(s: QueryProfile.Spread) =
+            s"""{"tasks":${s.tasks},"max_ms":${s.maxMs},"med_ms":${s.medMs},""" +
+              s""""ratio":${num("%.2f", s.maxMs.toDouble / math.max(s.medMs, 1L))},""" +
+              s""""rows_max":${s.maxRows},"rows_med":${s.medRows},""" +
+              s""""rows_ratio":${num("%.2f", s.maxRows.toDouble / math.max(s.medRows, 1L))}}"""
           val dominantJson =
-            if (stats.isEmpty) "null" else stageJson(stats.maxBy(_._3))
-          val top3Json = stats.sortBy(-_._3).take(3)
+            if (stats.isEmpty) "null" else stageJson(stats.maxBy(_.maxMs))
+          val top3Json = stats.sortBy(-_.maxMs).take(3)
             .map(stageJson).mkString("[", ",", "]")
-          // rep-2 byte totals (reset() zeroed them at rep-2 start):
-          // the no-spill proof and the prefilter A/B's recordable
-          // signal — beyond-cap walls are single-disk noise
-          def gb(i: Int) = num("%.3f", bytes.get(i) / 1e9)
+          // rep-2 byte totals: the no-spill proof and the prefilter
+          // A/B's recordable signal — beyond-cap walls are single-disk
+          // noise (r10 verdict task 1)
+          def gb(f: QueryProfile.Stage => Long) = num("%.3f", run.total(f) / 1e9)
           val line =
-            s"""{"dataset":"$label","query":"$q","rows":$n,""" +
-              s""""wall_s":${num("%.3f", wall)},"n_stages":${stats.size},""" +
+            s"""{"dataset":"$label","query":"$q","rows":${run.value},""" +
+              s""""wall_s":${num("%.3f", run.wallS)},"n_stages":${stats.size},""" +
               s""""dominant_stage":$dominantJson,""" +
               s""""worst_meaningful_ratio":${num("%.2f", worst)},""" +
               s""""worst_loaded_ratio":${num("%.2f", worstLoaded)},""" +
               s""""worst_loaded_rows_ratio":${num("%.2f", worstLoadedRows)},""" +
               s""""stages_top3":$top3Json,""" +
-              s""""shuffle_write_gb":${gb(0)},"shuffle_read_gb":${gb(1)},""" +
-              s""""mem_spill_gb":${gb(2)},"disk_spill_gb":${gb(3)}}"""
+              s""""shuffle_write_gb":${gb(_.writeBytes)},"shuffle_read_gb":${gb(_.readBytes)},""" +
+              s""""mem_spill_gb":${gb(_.memSpill)},"disk_spill_gb":${gb(_.diskSpill)}}"""
           println(line)
           rows += line
-          publish()
+          QueryProfile.publish(outPath, rows)
       }
     }
     spark.stop()

@@ -1,13 +1,12 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
-import scala.collection.mutable.ArrayBuffer
+import graft.{QueryProfile, Session}
+import org.apache.spark.sql.GraftColumnBridge
 
 /** Dev-only: per-stage wall/task-time breakdown for one query — shows
   * whether wall time is task execution (plan cost) or gaps between
-  * stages (driver/scheduling/codegen/broadcast overhead).
+  * stages (driver/scheduling/codegen/broadcast overhead). Rep 1 is the
+  * cold reading, rep 2 the warm one.
   *
   * runMain graft.tools.StageClock <sfDir> <query> [reps]
   */
@@ -16,39 +15,8 @@ object StageClock {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    final case class St(id: Int, name: String, submitted: Long, completed: Long,
-                        taskMs: Long, tasks: Int, gcMs: Long,
-                        swB: Long, srB: Long, spillMemB: Long, spillDiskB: Long)
-    val stages = ArrayBuffer.empty[St]
-    // Listener callbacks arrive on the async listener-bus thread while
-    // main clears/reads the buffers between reps — guard every access
-    // with the buffer's own lock, and drain the bus before each read so
-    // late-delivered tail stages (the ones this tool exists to show)
-    // aren't silently missed.
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        stages.synchronized {
-          stages += St(si.stageId, si.name.take(60),
-            si.submissionTime.getOrElse(0L), si.completionTime.getOrElse(0L),
-            si.taskMetrics.executorRunTime, si.numTasks,
-            si.taskMetrics.jvmGCTime,
-            si.taskMetrics.shuffleWriteMetrics.bytesWritten,
-            si.taskMetrics.shuffleReadMetrics.totalBytesRead,
-            si.taskMetrics.memoryBytesSpilled,
-            si.taskMetrics.diskBytesSpilled)
-        }
-      }
-    })
+    val spark = Session.local(Session.cores)
+    val profile = QueryProfile.attach(spark)
 
     graft.SparkEntry.queries.get("q01_pricing_summary").foreach(f => f(spark, sfDir).count())
     // STAGECLOCK_PRE=qA,qB runs other queries first (uncounted) to
@@ -56,53 +24,20 @@ object StageClock {
     sys.env.get("STAGECLOCK_PRE").foreach(_.split(",").foreach { pre =>
       graft.SparkEntry.queries.get(pre.trim).foreach(f => f(spark, sfDir).count())
     })
-    if (sys.env.get("STAGECLOCK_EXPLAIN").contains("1")) {
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"/tmp/explain_$name.txt"),
-        plan.getBytes("UTF-8"))
-    }
     for (r <- 1 to reps) {
-      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
-      stages.synchronized(stages.clear())
-      spark.sharedState.cacheManager.clearCache()
-      // keep the CacheRegistry's frame list bounded across reps (the
-      // Verify.scala treatment; blocks are already gone)
-      graft.CacheRegistry.releaseAll()
-      // q104/q105 memoize their training trajectory outside the
-      // CacheManager — without this, reps 2+ skip training entirely
-      graft.queries.TextOps.clearTrainMemo()
-      System.gc()
-      val t0 = System.nanoTime()
+      Session.isolate(spark)
       // own-plan forcing (r12): stage rows must describe the query's
       // plan, not a count-pruned rewrite of it
-      val cnt = org.apache.spark.sql.GraftColumnBridge.forceOwnPlan(
-        graft.SparkEntry.queries(name)(spark, sfDir))
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"== $name rep$r wall=$wall%.2f s rows=$cnt")
-      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
-      val sorted = stages.synchronized(stages.sortBy(_.submitted))
-      // Stages are NOT always sequential: AQE submits independent
-      // shuffle stages concurrently, so gapBefore clamps at 0 (a raw
-      // difference goes negative under overlap) and the union sum
-      // de-overlaps intervals — a raw per-stage wall sum double-counts
-      // concurrent time and misattributes exactly the scheduling gaps
-      // this tool exists to expose.
-      var rawSum = 0L
-      var union = 0L
-      var unionEnd = 0L
-      sorted.foreach { s =>
-        if (unionEnd == 0L) unionEnd = s.submitted
-        val gap = math.max(0L, s.submitted - unionEnd)
-        union += math.max(0L, s.completed - math.max(s.submitted, unionEnd))
-        unionEnd = math.max(unionEnd, s.completed)
-        println(f"  stage ${s.id}%4d wall=${(s.completed - s.submitted) / 1e3}%6.2f gapBefore=${gap / 1e3}%6.2f taskSum=${s.taskMs / 1e3}%7.2f gc=${s.gcMs / 1e3}%5.2f tasks=${s.tasks}%3d sw=${s.swB / 1e9}%6.2fG sr=${s.srB / 1e9}%6.2fG spill=${s.spillMemB / 1e9}%5.2f/${s.spillDiskB / 1e9}%5.2fG  ${s.name}")
-        rawSum += s.completed - s.submitted
+      val run = profile.measure(
+        GraftColumnBridge.forceOwnPlan(graft.SparkEntry.queries(name)(spark, sfDir)))
+      val wall = run.wallS
+      println(f"== $name rep$r wall=$wall%.2f s rows=${run.value}")
+      val span = run.span
+      span.stages.foreach { case (s, gap) =>
+        println(f"  stage ${s.id}%4d wall=${s.wallMs / 1e3}%6.2f gapBefore=${gap / 1e3}%6.2f taskSum=${s.runMs / 1e3}%7.2f gc=${s.gcMs / 1e3}%5.2f tasks=${s.tasks}%3d sw=${s.writeBytes / 1e9}%6.2fG sr=${s.readBytes / 1e9}%6.2fG spill=${s.memSpill / 1e9}%5.2f/${s.diskSpill / 1e9}%5.2fG  ${s.name.take(60)}")
       }
-      val span = if (sorted.nonEmpty) (sorted.map(_.completed).max - sorted.map(_.submitted).min) / 1e3 else 0.0
-      println(f"  stageWallSum=${rawSum / 1e3}%.2f s (union=${union / 1e3}%.2f s), stageSpan=$span%.2f s, outsideStages=${wall - span}%.2f s")
+      val rawSum = run.total(_.wallMs)
+      println(f"  stageWallSum=${rawSum / 1e3}%.2f s (union=${span.union / 1e3}%.2f s), stageSpan=${span.extent / 1e3}%.2f s, outsideStages=${wall - span.extent / 1e3}%.2f s")
     }
     spark.stop()
   }

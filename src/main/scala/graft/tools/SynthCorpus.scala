@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: synthesize an sf1-equivalent corpus from the driver's sf0.1
@@ -47,14 +46,7 @@ object SynthCorpus {
       s"unknown tables ${(tables -- knownTables).mkString(",")} — " +
         s"pick from ${knownTables.mkString(",")}")
     require(reps >= 1 && reps <= 1024, s"replicas in [1,1024], got $reps")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cores)
 
     val docStride = 1000000L
 

@@ -1,9 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
-import scala.collection.mutable.ArrayBuffer
+import graft.{QueryProfile, Session}
+import org.apache.spark.sql.GraftColumnBridge
 
 /** Dev-only: PER-TASK duration/row distribution of one query's stages —
   * the drill-down SkewProbe's per-stage max/med cannot provide. When a
@@ -26,56 +24,29 @@ object TaskSkew {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // (stage, durMs, srRecords, srBytes, gcMs, runMs, launchMs)
-    val tasks = ArrayBuffer.empty[(Int, Long, Long, Long, Long, Long, Long)]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskInfo != null && e.taskInfo.successful && e.taskMetrics != null)
-          tasks.synchronized {
-            tasks += ((e.stageId, e.taskInfo.duration,
-              e.taskMetrics.shuffleReadMetrics.recordsRead,
-              e.taskMetrics.shuffleReadMetrics.totalBytesRead,
-              e.taskMetrics.jvmGCTime, e.taskMetrics.executorRunTime,
-              e.taskInfo.launchTime))
-          }
-    })
+    val spark = Session.local(Session.cores)
+    val profile = QueryProfile.attach(spark)
 
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name"))
     for (rep <- 1 to reps) {
-      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
-      spark.sharedState.cacheManager.clearCache()
-      graft.queries.TextOps.clearTrainMemo()
-      System.gc()
-      tasks.synchronized(tasks.clear())
-      val t0 = System.nanoTime()
-      val n = org.apache.spark.sql.GraftColumnBridge.forceOwnPlan(fn(spark, sfDir))
-      val wall = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
-      println(f"== rep $rep: wall $wall%.2f s, rows $n")
+      Session.isolate(spark)
+      val run = profile.measure(GraftColumnBridge.forceOwnPlan(fn(spark, sfDir)))
+      println(f"== rep $rep: wall ${run.wallS}%.2f s, rows ${run.value}")
       if (rep == reps) {
-        val byStage = tasks.synchronized(tasks.toVector).groupBy(_._1).toSeq.sortBy(_._1)
-        for ((sid, ts) <- byStage if ts.size >= 8 && ts.map(_._2).max >= 500) {
-          val durs = ts.map(_._2).sorted
-          val recs = ts.map(_._3).sorted
+        for ((sid, ts) <- run.tasksByStage.toSeq.sortBy(_._1)
+             if ts.size >= 8 && ts.map(_.durationMs).max >= 500) {
+          val durs = ts.map(_.durationMs).sorted
+          val recs = ts.map(_.recordsRead).sorted
           def p(v: Vector[Long], q: Double) = v((v.size * q).toInt.min(v.size - 1))
-          val t0 = ts.map(_._7).min
+          val t0 = ts.map(_.launchTime).min
           println(f"stage $sid: ${ts.size} tasks, dur p50 ${p(durs, 0.5)} ms " +
             f"p90 ${p(durs, 0.9)} max ${durs.last}; rows p50 ${p(recs, 0.5)}")
-          def line(tag: String, t: (Int, Long, Long, Long, Long, Long, Long)) =
-            println(f"  $tag: dur ${t._2} run ${t._6} gc ${t._5} ms, ${t._3} rows, " +
-              f"${t._4 / 1e6}%.1f MB read, launch +${t._7 - t0} ms")
-          ts.sortBy(-_._2).take(3).foreach(line("slow", _))
-          ts.sortBy(_._2).take(2).foreach(line("fast", _))
+          def line(tag: String, t: QueryProfile.Task) =
+            println(f"  $tag: dur ${t.durationMs} run ${t.runMs} gc ${t.gcMs} ms, ${t.recordsRead} rows, " +
+              f"${t.bytesRead / 1e6}%.1f MB read, launch +${t.launchTime - t0} ms")
+          ts.sortBy(-_.durationMs).take(3).foreach(line("slow", _))
+          ts.sortBy(_.durationMs).take(2).foreach(line("fast", _))
         }
       }
     }

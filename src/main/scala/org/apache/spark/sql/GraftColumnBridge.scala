@@ -56,7 +56,7 @@ object GraftColumnBridge {
     * (the `private[spark]` `waitUntilEmpty` test hook). Listener
     * callbacks run on an async bus thread; a tool that reads its
     * listener buffers right after an action returns would otherwise
-    * race late deliveries (graft.tools.StageClock). */
+    * race late deliveries (graft.QueryProfile). */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 

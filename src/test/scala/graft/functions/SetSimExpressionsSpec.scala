@@ -465,4 +465,38 @@ class SetSimExpressionsSpec extends SparkSuite {
     assert(SetSimKernels.commonCount(arr(Seq("a")), arr(Seq())) == 0)
     assert(SetSimKernels.commonCount(arr(Seq()), arr(Seq("a"))) == 0)
   }
+
+  test("null elements: commonCount/jaccard/containment follow java.util.HashSet semantics") {
+    // a null element is a value like any other to a HashSet: it matches
+    // a null on the other side and counts in both sizes
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    def arr(ss: Seq[String]): GenericArrayData =
+      new GenericArrayData(ss.map(UTF8String.fromString).toArray[Any])
+    def common(probe: Seq[String], set: Seq[String]): Int = {
+      val hs = new java.util.HashSet[String]()
+      set.foreach(hs.add)
+      probe.count(hs.contains)
+    }
+    val cases = Seq(
+      (Seq("a", null, "b"), Seq(null, "b", "c")),
+      (Seq("a", null, null), Seq("a", "b")),
+      (Seq("a", "b"), Seq(null, "a", null)),
+      (Seq[String](null), Seq[String](null)),
+      (Seq[String](null, null), Seq("x")))
+    cases.foreach { case (a, b) =>
+      val c = common(b, a) // jaccard: set over a, probe b
+      val jaccard = c.toDouble / (a.size + b.size - c)
+      val containment = common(a, b).toDouble / a.size // set over b, probe a
+      assert(SetSimKernels.commonCount(arr(b), arr(a)) == c, s"$a $b")
+      assert(SetSimKernels.jaccard(arr(a), arr(b)) == jaccard, s"$a $b")
+      assert(SetSimKernels.containment(arr(a), arr(b)) == containment, s"$a $b")
+      // and through the expressions, codegen'd over a real frame
+      val r = Seq((a.toArray, b.toArray)).toDF("a", "b")
+        .select(GraftFunctions.jaccardSim(col("a"), col("b")),
+          GraftFunctions.containmentSim(col("a"), col("b")))
+        .collect().head
+      assert(r.getDouble(0) == jaccard && r.getDouble(1) == containment, s"$a $b")
+    }
+  }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.scalacheck.{Gen, Properties, Test}
+import graft.SparkSuite
+import org.scalacheck.{Gen, Test}
 import org.scalacheck.Prop.forAll
 
 /** Property fuzz for the custom as-of exec: arbitrary small inputs with
@@ -11,17 +11,7 @@ import org.scalacheck.Prop.forAll
   * null when nothing qualifies. Each case is a real Spark job through
   * the full strategy + EnsureRequirements + merge path, so the count is
   * kept small; the deterministic AsOfJoinSpec covers volume. */
-object AsOfJoinPropSpec extends Properties("AsOfJoinExec") {
-
-  override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(12)
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("AsOfJoinPropSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AsOfJoinPropSpec extends SparkSuite {
 
   private val genRow: Gen[(Long, Long)] = for {
     u <- Gen.choose(0L, 3L)
@@ -44,8 +34,8 @@ object AsOfJoinPropSpec extends Properties("AsOfJoinExec") {
       (pid, best.map(b => (b._1, b._3)))
     }.toSet
 
-  property("matches the brute-force reference on arbitrary inputs") =
-    forAll(genCase) { case (lrows, rrows) =>
+  test("AsOfJoinExec.matches the brute-force reference on arbitrary inputs") {
+    val prop = forAll(genCase) { case (lrows, rrows) =>
       val s = spark
       import s.implicits._
       val left = lrows.zipWithIndex
@@ -64,4 +54,7 @@ object AsOfJoinPropSpec extends Properties("AsOfJoinExec") {
         }.toSet
       got == reference(left, right)
     }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(result.passed, result.status)
+  }
 }

@@ -3,19 +3,78 @@ package graft.state
 import graft.state.StateOps.{Envelope, Rec}
 import graft.streaming.Pipeline
 import graft.SparkSuite
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
-/** Kill/restart proof for the flagship stateful operator: the chirp
-  * transformWithState pipeline stopped mid-stream and restarted from
-  * its checkpoint must produce EXACTLY what an uninterrupted run
-  * produces — the device map, pairing buffer, and emit decisions all
-  * live in the recovered RocksDB state, so any divergence (a re-emitted
-  * envelope, a lost buffered packet, a forgotten device identity) shows
-  * up as a diff. Complements ChirpProcessorSpec (host equality) and
-  * CheckpointRecoverySpec (dedup op): this one restarts the custom
-  * StatefulProcessor itself. */
+/** Kill/restart proof for the stateful hosts: a pipeline stopped
+  * mid-stream and restarted from its checkpoint must produce EXACTLY
+  * what an uninterrupted run produces — the device map, pairing buffer,
+  * held location and emit decisions all live in the recovered state, so
+  * any divergence (a re-emitted envelope, a lost buffered packet, a
+  * forgotten device identity) shows up as a diff. Every case runs on
+  * both hosts: the flatMapGroupsWithState host on the default state
+  * store (what startEnvelopeSink and every other caller runs) and its
+  * transformWithState twin on RocksDB. Complements ChirpProcessorSpec
+  * (host equality) and CheckpointRecoverySpec (dedup op). */
 class PipelineRestartSpec extends SparkSuite {
+  import PipelineRestartSpec.Host
+
+  private val chirpHosts = Seq(
+    Host("chirp_fmgws", rocksDb = false, Pipeline.chirpEnvelopes(_)(_)),
+    Host("chirp_tws", rocksDb = true, Pipeline.chirpEnvelopesTws(_)(_)))
+  private val locationHosts = Seq(
+    Host("loc_fmgws", rocksDb = false, Pipeline.ttnEnvelopes(_)(_)),
+    Host("loc_tws", rocksDb = true, Pipeline.ttnEnvelopesTws(_)(_)))
+
+  /** Runs `host` over three batches twice — once uninterrupted into a
+    * memory sink, once stopped after batch 1 and restarted from the same
+    * checkpoint into a parquet sink, with batch 2 arriving while the query
+    * is DOWN — and returns (uninterrupted, restarted), each sorted. */
+  private def restart(host: Host, tag: String, b1: Seq[Rec], b2: Seq[Rec],
+                      b3: Seq[Rec]): (Seq[Envelope], Seq[Envelope]) = {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    if (host.rocksDb) spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    else spark.conf.unset(key)
+    try {
+      val name = s"${tag}_${host.id}_cont"
+      val contStream = MemoryStream[Rec]
+      val contQ = host.envelopes(contStream.toDS(), s)
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append).start()
+      val expected = try {
+        Seq(b1, b2, b3).foreach { b => contStream.addData(b: _*); contQ.processAllAvailable() }
+        spark.table(name).as[Envelope].collect().toSeq.sortBy(_.toString)
+      } finally contQ.stop()
+
+      val ckpt = java.nio.file.Files.createTempDirectory(s"${tag}_ckpt").toString
+      val outDir = java.nio.file.Files.createTempDirectory(s"${tag}_sink").toString
+      val stream = MemoryStream[Rec]
+      def start() = host.envelopes(stream.toDS(), s)
+        .writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append).start()
+      val q1 = start()
+      try {
+        stream.addData(b1: _*); q1.processAllAvailable()
+      } finally q1.stop()
+      stream.addData(b2: _*) // arrives while down
+      val q2 = start()
+      val actual = try {
+        stream.addData(b3: _*); q2.processAllAvailable()
+        spark.read.parquet(outDir).as[Envelope].collect().toSeq.sortBy(_.toString)
+      } finally q2.stop()
+      (expected, actual)
+    } finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
 
   private def mkUp(daHex: String, fCnt: Int): String = graft.codec.Lorawan.b64encode(
     Array(0x40.toByte) ++ graft.codec.Lorawan.hexToLe(daHex) ++
@@ -52,225 +111,116 @@ class PipelineRestartSpec extends SparkSuite {
     Pipeline.toChirpRecs(df).collect().toSeq.sortBy(_.seq)
   }
 
-  test("chirp transformWithState survives a checkpoint restart unchanged") {
-    implicit val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val recs = mixedRecs
-      val (b1, rest) = recs.splitAt(30)
-      val (b2, b3) = rest.splitAt(30)
-
-      // reference: one uninterrupted incarnation over all three batches
-      val contStream = MemoryStream[Rec]
-      val contQ = Pipeline.chirpEnvelopesTws(contStream.toDS())
-        .writeStream.format("memory").queryName("chirp_cont")
-        .outputMode(OutputMode.Append).start()
-      val expected = try {
-        contStream.addData(b1: _*); contQ.processAllAvailable()
-        contStream.addData(b2: _*); contQ.processAllAvailable()
-        contStream.addData(b3: _*); contQ.processAllAvailable()
-        spark.table("chirp_cont").as[Envelope].collect().toSeq.sortBy(_.toString)
-      } finally contQ.stop()
-
-      // restarted: same checkpoint + file sink across two incarnations,
-      // with a batch arriving while the query is DOWN
-      val ckpt = java.nio.file.Files.createTempDirectory("chirp_ckpt").toString
-      val outDir = java.nio.file.Files.createTempDirectory("chirp_sink").toString
-      val stream = MemoryStream[Rec]
-      def start() = Pipeline.chirpEnvelopesTws(stream.toDS())
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append).start()
-
-      val q1 = start()
-      try {
-        stream.addData(b1: _*); q1.processAllAvailable()
-      } finally q1.stop()
-      stream.addData(b2: _*) // arrives while down
-      val q2 = start()
-      val actual = try {
-        stream.addData(b3: _*); q2.processAllAvailable()
-        spark.read.parquet(outDir).as[Envelope].collect().toSeq.sortBy(_.toString)
-      } finally q2.stop()
-
-      assert(actual.nonEmpty)
-      assert(actual == expected)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+  test("chirp hosts survive a checkpoint restart unchanged") {
+    val recs = mixedRecs
+    val (b1, rest) = recs.splitAt(30)
+    val (b2, b3) = rest.splitAt(30)
+    chirpHosts.foreach { host =>
+      withClue(host.id) {
+        val (expected, actual) = restart(host, "chirp", b1, b2, b3)
+        assert(actual.nonEmpty)
+        assert(actual == expected)
       }
     }
   }
 
   test("F1/F2 chirp restart: devices map, pairing buffer, crash residue all survive") {
-    implicit val s = spark
+    implicit val s: SparkSession = spark
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def r(seq: Long, route: String, msg: String,
-            devAddr: Option[String] = None, fCount: Option[Long] = None,
-            devEui: Option[String] = None, appName: Option[String] = None,
-            devName: Option[String] = None, lat: Option[Double] = None): Rec =
-        Rec(seq, 1L, route, Some(s"t/$seq"), msg, devAddr, fCount, devEui,
-          appName, devName, lat, lat.map(_ + 1), lat.map(_ + 2), None, None,
-          2000 + seq)
-      // batch 1 leaves EVERY kind of chirp state populated at the
-      // restart boundary: a join-sourced devices_map entry (aa01), a
-      // pending prev_packet (cc03@7), and crash residue in prevMsgs
-      // (up-b survives the perr_app pair-hit that LOSES the bb02 prev)
-      val b1 = Seq(
-        r(1, "join", "join-a", devAddr = Some("aa01"), devEui = Some("joined1")),
-        r(2, "radio", "up-b", devAddr = Some("bb02"), fCount = Some(5L)),
-        r(3, "perr_app", "crash-a", fCount = Some(5L)),
-        r(4, "radio", "up-c", devAddr = Some("cc03"), fCount = Some(7L)))
-      // batch 2 (arrives while the query is DOWN) consumes all three:
-      // the app row pair-hits the recovered prev_packet (and writes the
-      // app-sourced cc03 map entry), the radio row hits the recovered
-      // join-sourced map entry
-      val b2 = Seq(
-        r(5, "app", "app-c", fCount = Some(7L), devEui = Some("eui-app"),
-          appName = Some("appX"), devName = Some("devX"), lat = Some(4.0)),
-        r(6, "radio", "up-a", devAddr = Some("aa01"), fCount = Some(1L)))
-      // batch 3 proves the SECOND incarnation's own write persisted: the
-      // cc03 map entry created by the pair-hit enriches a later uplink
-      val b3 = Seq(
-        r(7, "radio", "up-c2", devAddr = Some("cc03"), fCount = Some(9L)))
-      val all = b1 ++ b2 ++ b3
+    def r(seq: Long, route: String, msg: String,
+          devAddr: Option[String] = None, fCount: Option[Long] = None,
+          devEui: Option[String] = None, appName: Option[String] = None,
+          devName: Option[String] = None, lat: Option[Double] = None): Rec =
+      Rec(seq, 1L, route, Some(s"t/$seq"), msg, devAddr, fCount, devEui,
+        appName, devName, lat, lat.map(_ + 1), lat.map(_ + 2), None, None,
+        2000 + seq)
+    // batch 1 leaves EVERY kind of chirp state populated at the
+    // restart boundary: a join-sourced devices_map entry (aa01), a
+    // pending prev_packet (cc03@7), and crash residue in prevMsgs
+    // (up-b survives the perr_app pair-hit that LOSES the bb02 prev)
+    val b1 = Seq(
+      r(1, "join", "join-a", devAddr = Some("aa01"), devEui = Some("joined1")),
+      r(2, "radio", "up-b", devAddr = Some("bb02"), fCount = Some(5L)),
+      r(3, "perr_app", "crash-a", fCount = Some(5L)),
+      r(4, "radio", "up-c", devAddr = Some("cc03"), fCount = Some(7L)))
+    // batch 2 (arrives while the query is DOWN) consumes all three:
+    // the app row pair-hits the recovered prev_packet (and writes the
+    // app-sourced cc03 map entry), the radio row hits the recovered
+    // join-sourced map entry
+    val b2 = Seq(
+      r(5, "app", "app-c", fCount = Some(7L), devEui = Some("eui-app"),
+        appName = Some("appX"), devName = Some("devX"), lat = Some(4.0)),
+      r(6, "radio", "up-a", devAddr = Some("aa01"), fCount = Some(1L)))
+    // batch 3 proves the SECOND incarnation's own write persisted: the
+    // cc03 map entry created by the pair-hit enriches a later uplink
+    val b3 = Seq(
+      r(7, "radio", "up-c2", devAddr = Some("cc03"), fCount = Some(9L)))
 
-      // pin 1: the batch fold is the semantics oracle
-      val batchExpected = Pipeline.chirpEnvelopes(all.toDS())
-        .collect().toSeq.sortBy(_.toString)
+    // the batch fold is the semantics oracle
+    val batchExpected = Pipeline.chirpEnvelopes((b1 ++ b2 ++ b3).toDS())
+      .collect().toSeq.sortBy(_.toString)
 
-      // pin 2: one uninterrupted streaming incarnation
-      val contStream = MemoryStream[Rec]
-      val contQ = Pipeline.chirpEnvelopesTws(contStream.toDS())
-        .writeStream.format("memory").queryName("chirp_f12_cont")
-        .outputMode(OutputMode.Append).start()
-      val expected = try {
-        contStream.addData(b1: _*); contQ.processAllAvailable()
-        contStream.addData(b2: _*); contQ.processAllAvailable()
-        contStream.addData(b3: _*); contQ.processAllAvailable()
-        spark.table("chirp_f12_cont").as[Envelope].collect().toSeq.sortBy(_.toString)
-      } finally contQ.stop()
-      assert(expected == batchExpected)
+    chirpHosts.foreach { host =>
+      withClue(host.id) {
+        val (expected, actual) = restart(host, "chirp_f12", b1, b2, b3)
+        assert(expected == batchExpected)
+        assert(actual == expected)
 
-      // the restarted run: same checkpoint + file sink, two incarnations
-      val ckpt = java.nio.file.Files.createTempDirectory("chirp_f12_ckpt").toString
-      val outDir = java.nio.file.Files.createTempDirectory("chirp_f12_sink").toString
-      val stream = MemoryStream[Rec]
-      def start() = Pipeline.chirpEnvelopesTws(stream.toDS())
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append).start()
-      val q1 = start()
-      try {
-        stream.addData(b1: _*); q1.processAllAvailable()
-      } finally q1.stop()
-      stream.addData(b2: _*) // arrives while down
-      val q2 = start()
-      val actual = try {
-        stream.addData(b3: _*); q2.processAllAvailable()
-        spark.read.parquet(outDir).as[Envelope].collect().toSeq.sortBy(_.toString)
-      } finally q2.stop()
-      assert(actual == expected)
-
-      // and the recovered semantics are the intended ones, not just
-      // self-consistent:
-      // pair-hit envelope carries the pre-restart crash residue (up-b),
-      // the buffered up-c, and the app message, enriched from the app row
-      val pairEnv = actual.find(_.messages.exists(_.message == "app-c")).get
-      assert(pairEnv.messages.map(_.message) == Seq("up-b", "up-c", "app-c"))
-      assert(pairEnv.packet.get.devEui.contains("eui-app"))
-      assert(pairEnv.packet.get.latitude.contains(4.0))
-      // join-sourced map entry recovered: up-a enriched with joined1
-      val upAEnv = actual.find(_.messages.exists(_.message == "up-a")).get
-      assert(upAEnv.packet.get.devEui.contains("joined1"))
-      // app-sourced map entry written post-restart enriches the b3 uplink
-      val upC2Env = actual.find(_.messages.exists(_.message == "up-c2")).get
-      assert(upC2Env.packet.get.devEui.contains("eui-app"))
-      assert(upC2Env.packet.get.appName.contains("appX"))
-      assert(upC2Env.packet.get.devName.contains("devX"))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        // and the recovered semantics are the intended ones, not just
+        // self-consistent:
+        // pair-hit envelope carries the pre-restart crash residue (up-b),
+        // the buffered up-c, and the app message, enriched from the app row
+        val pairEnv = actual.find(_.messages.exists(_.message == "app-c")).get
+        assert(pairEnv.messages.map(_.message) == Seq("up-b", "up-c", "app-c"))
+        assert(pairEnv.packet.get.devEui.contains("eui-app"))
+        assert(pairEnv.packet.get.latitude.contains(4.0))
+        // join-sourced map entry recovered: up-a enriched with joined1
+        val upAEnv = actual.find(_.messages.exists(_.message == "up-a")).get
+        assert(upAEnv.packet.get.devEui.contains("joined1"))
+        // app-sourced map entry written post-restart enriches the b3 uplink
+        val upC2Env = actual.find(_.messages.exists(_.message == "up-c2")).get
+        assert(upC2Env.packet.get.devEui.contains("eui-app"))
+        assert(upC2Env.packet.get.appName.contains("appX"))
+        assert(upC2Env.packet.get.devName.contains("devX"))
       }
     }
   }
 
   test("F4 location host restart: held location AND pending crash buffer survive") {
-    implicit val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def r(seq: Long, route: String, msg: String, lat: Option[Double] = None): Rec =
-        Rec(seq, 1L, route, None, msg, None, None, None, None, None,
-          lat, lat.map(_ + 1), lat.map(_ + 2), None, None, 1000 + seq)
-      // batch 1 ends with BOTH state kinds pending: a held location and
-      // two buffered crash messages; the restart must recover them so
-      // the first radio row after recovery emits one envelope carrying
-      // [crash1, crash2, up1] enriched with the held location
-      val b1 = Seq(
-        r(1, "radio", "up0"),
-        r(2, "location", "loc1", lat = Some(9.0)),
-        r(3, "perr_buf", "crash1"),
-        r(4, "perr", "bad1"), // inert: must not disturb recovered state
-        r(5, "perr_buf", "crash2"))
-      val b2 = Seq(r(6, "radio", "up1"), r(7, "raw", "other1"))
-      val b3 = Seq(r(8, "perr_buf", "crash3"), r(9, "radio", "up2"))
+    def r(seq: Long, route: String, msg: String, lat: Option[Double] = None): Rec =
+      Rec(seq, 1L, route, None, msg, None, None, None, None, None,
+        lat, lat.map(_ + 1), lat.map(_ + 2), None, None, 1000 + seq)
+    // batch 1 ends with BOTH state kinds pending: a held location and
+    // two buffered crash messages; the restart must recover them so
+    // the first radio row after recovery emits one envelope carrying
+    // [crash1, crash2, up1] enriched with the held location
+    val b1 = Seq(
+      r(1, "radio", "up0"),
+      r(2, "location", "loc1", lat = Some(9.0)),
+      r(3, "perr_buf", "crash1"),
+      r(4, "perr", "bad1"), // inert: must not disturb recovered state
+      r(5, "perr_buf", "crash2"))
+    val b2 = Seq(r(6, "radio", "up1"), r(7, "raw", "other1"))
+    val b3 = Seq(r(8, "perr_buf", "crash3"), r(9, "radio", "up2"))
 
-      val contStream = MemoryStream[Rec]
-      val contQ = Pipeline.ttnEnvelopesTws(contStream.toDS())
-        .writeStream.format("memory").queryName("loc_cont")
-        .outputMode(OutputMode.Append).start()
-      val expected = try {
-        contStream.addData(b1: _*); contQ.processAllAvailable()
-        contStream.addData(b2: _*); contQ.processAllAvailable()
-        contStream.addData(b3: _*); contQ.processAllAvailable()
-        spark.table("loc_cont").as[Envelope].collect().toSeq.sortBy(_.toString)
-      } finally contQ.stop()
-
-      val ckpt = java.nio.file.Files.createTempDirectory("loc_ckpt").toString
-      val outDir = java.nio.file.Files.createTempDirectory("loc_sink").toString
-      val stream = MemoryStream[Rec]
-      def start() = Pipeline.ttnEnvelopesTws(stream.toDS())
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append).start()
-      val q1 = start()
-      try {
-        stream.addData(b1: _*); q1.processAllAvailable()
-      } finally q1.stop()
-      stream.addData(b2: _*) // arrives while down
-      val q2 = start()
-      val actual = try {
-        stream.addData(b3: _*); q2.processAllAvailable()
-        spark.read.parquet(outDir).as[Envelope].collect().toSeq.sortBy(_.toString)
-      } finally q2.stop()
-
-      assert(actual == expected)
-      // and the recovered semantics are the intended ones, not just
-      // self-consistent: the post-restart radio envelope carries the
-      // pre-restart crash buffer and the held location
-      val up1Env = actual.find(_.messages.exists(_.message == "up1")).get
-      assert(up1Env.messages.map(_.message) == Seq("crash1", "crash2", "up1"))
-      assert(up1Env.packet.get.latitude.contains(9.0))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    locationHosts.foreach { host =>
+      withClue(host.id) {
+        val (expected, actual) = restart(host, "loc", b1, b2, b3)
+        assert(actual == expected)
+        // and the recovered semantics are the intended ones, not just
+        // self-consistent: the post-restart radio envelope carries the
+        // pre-restart crash buffer and the held location
+        val up1Env = actual.find(_.messages.exists(_.message == "up1")).get
+        assert(up1Env.messages.map(_.message) == Seq("crash1", "crash2", "up1"))
+        assert(up1Env.packet.get.latitude.contains(9.0))
       }
     }
   }
+}
+
+object PipelineRestartSpec {
+  /** One stateful host; `rocksDb` hosts need the RocksDB state store,
+    * the others run on the session default. */
+  final case class Host(id: String, rocksDb: Boolean,
+      envelopes: (Dataset[Rec], SparkSession) => Dataset[Envelope])
 }

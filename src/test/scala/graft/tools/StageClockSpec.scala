@@ -1,10 +1,6 @@
 package graft.tools
 
-import graft.SparkSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.GraftColumnBridge
-
-import scala.collection.mutable.ArrayBuffer
+import graft.{QueryProfile, Session, SparkSuite}
 
 /** Regression pin for the REPARTITION_BY_NUM contention fix (BASELINE.md
   * round-5 notes): AQE sizes post-shuffle stages by BYTES, so the
@@ -19,36 +15,26 @@ class StageClockSpec extends SparkSuite {
   test("q33 kernel stages hold the pinned width on a warm second run") {
     val sf = "/root/testdata/sf0.001"
     val width = spark.sessionState.conf.numShufflePartitions
-    val stages = ArrayBuffer.empty[(Int, String)] // (numTasks, stage name)
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        stages.synchronized {
-          stages += ((e.stageInfo.numTasks, e.stageInfo.name.take(60)))
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val profile = QueryProfile.attach(spark)
     try {
-      def run(): Long = {
-        // q33 persists its pair list; drop it so the second run re-executes
-        // the whole dedup plan instead of scanning the cache
-        spark.sharedState.cacheManager.clearCache()
-        graft.SparkEntry.queries("q33_ngram_jaccard")(spark, sf).count()
+      // q33 persists its pair list; isolate drops it so the second run
+      // re-executes the whole dedup plan instead of scanning the cache
+      def run() = {
+        Session.isolate(spark)
+        profile.measure(graft.SparkEntry.queries("q33_ngram_jaccard")(spark, sf).count())
       }
-      val n1 = run()
-      GraftColumnBridge.drainListenerBus(spark)
-      stages.synchronized(stages.clear())
-      val n2 = run()
-      GraftColumnBridge.drainListenerBus(spark)
-      assert(n2 == n1, s"second run changed the result: $n1 vs $n2")
-      val widths = stages.synchronized(stages.toList)
+      val n1 = run().value
+      val warm = run()
+      assert(warm.value == n1, s"second run changed the result: $n1 vs ${warm.value}")
+      val widths = warm.stages.map(_.tasks)
       // the shingle-kernel consumer (below the shingled() exchange) and
       // the verify-join stage (below pinned(cands)) must both run at the
       // pinned width; AQE-owned exchanges (distinct, orderBy) may
       // legitimately coalesce smaller
-      val atWidth = widths.count(_._1 == width)
+      val atWidth = widths.count(_ == width)
       assert(atWidth >= 2,
         s"expected >=2 stages at pinned width $width on the warm run, " +
-          s"got stage widths: ${widths.map(_._1).sorted.reverse}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+          s"got stage widths: ${widths.sorted.reverse}")
+    } finally profile.detach()
   }
 }
