@@ -1,20 +1,18 @@
 package graft
 
-/** Benchmark main (driver contract): runs every SparkEntry query on
-  * `$SPARK_GRAFT_SF_DIR`, prints ONE JSON line with total + per-query
-  * seconds.
-  *
-  * A warmup action runs first so JVM/codegen/session start-up is not
-  * billed to the first query; queries run in sorted name order for
-  * stable attribution. Each query is forced by executing its OWN
-  * physical plan (`GraftColumnBridge.forceOwnPlan`, r12) — `count()`
-  * let the optimizer prune terminal projections/sorts and eliminate
-  * unique-keyed outer-join tails, under-measuring exactly the work the
-  * bench claims to time (BASELINE.md r12 ERA BREAK row).
-  */
-/** Attempt-selection policy for Bench's drift retakes — pure, so the
-  * spec pins it without running a suite. */
+import graft.JsonNum.num
+import graft.tools.Measure
+import org.apache.spark.sql.GraftColumnBridge
+
+/** The pure parts of Bench: attempt selection for its drift retakes, the
+  * drift ratio itself and its compact line, so the spec pins them
+  * without running a suite. */
 object BenchPolicy {
+  /** The one file Bench writes (gitignored): every run's full line plus
+    * its per-query `plan_metrics`. A committed record is a reviewed copy
+    * of it (BENCH_rNN.json). */
+  val OutFile = "BENCH_LAST.json"
+
   /** 0-based index of the attempt to publish: lowest DEFINED drift
     * ratio wins (ties → earliest attempt); if no attempt has a defined
     * ratio the first is published. A None verdict (reference absent,
@@ -35,76 +33,34 @@ object BenchPolicy {
   def retakeNeeded(ratios: Seq[Option[Double]], bar: Double): Boolean =
     ratios.flatten.minOption.exists(_ > bar)
 
-  /** Whether a run may overwrite BENCH_SELF.json, the committed quiet
-    * sf0.1 record. Demands a POSITIVE verdict: zero failed queries
-    * (an errors-bearing line omits the failed queries' seconds — a
-    * faster-LOOKING invalid record) AND a measured median ratio inside
-    * [floor, bar] — a wrong-SF run reads ~0.1 (not comparable), a
-    * drifted one reads > bar, and a None ratio carries no verdict.
-    *
-    * MONOTONE (r10 verdict task 2): the record is the repo's best clean
-    * reading, so replacement additionally requires beating — or tying
-    * within `eps` — the record's FLOOR ratio (the minimum ratio it has
-    * ever held, `record_floor_ratio` in the file; r11 review: comparing
-    * against the LAST stored ratio instead would let repeated
-    * within-eps refreshes ratchet the record slower in +eps steps all
-    * the way to the drift bar — against the floor, the bar never rises
-    * above best-ever + eps). The in-band-only gate let the r10 driver's
-    * 88.8 s run (ratio 1.141, load1 rising 5.8→11.4) displace the
-    * committed 67.6 s / 0.912 record: both were "positive" verdicts,
-    * but a 31%-slower one protects nothing. `eps` admits same-speed
-    * refreshes (newer telemetry fields, re-runs on an equally quiet
-    * host).
-    *
-    * Bootstrap exception: with no reference at all AND no measured
-    * record to protect, a fully-green run may seed the record. A
-    * stored measured ratio survives even a reference-file loss — the
-    * record outlives the yardstick that produced it. (A deliberate
-    * BENCH_REF refresh re-seeds BENCH_SELF alongside — per-reference
-    * ratios are incomparable across references; verify skill.) */
-  def selfRecordable(ratio: Option[Double], refMissing: Boolean,
-                     anyFailed: Boolean, bar: Double,
-                     storedRatio: Option[Double] = None,
-                     floor: Double = 0.5,
-                     eps: Double = 0.02): Boolean =
-    !anyFailed && {
-      val inBand = ratio.exists(r => r >= floor && r <= bar)
-      val beatsStored = storedRatio.forall(s => ratio.exists(_ <= s + eps))
-      (inBand && beatsStored) || (refMissing && storedRatio.isEmpty)
+  /** Median per-query ratio of this run's seconds over BENCH_REF.json's,
+    * over the stable queries (reference >= 0.2 s; the sub-200 ms tail is
+    * scheduling noise). None — no verdict, no retake — when the run's SF
+    * is not the reference's (`runSf` against the reference's `sf` field:
+    * an sf0.01 run read 0.83 against the sf0.1 reference, and any larger
+    * SF reads drifted and burns every retake), or when fewer than 8
+    * queries compare (renamed queries, a truncated reference, mass
+    * failures). */
+  def medianRatio(results: Seq[(String, Option[Double])], ref: Map[String, Double],
+                  runSf: String, refSf: Option[String]): Option[Double] =
+    if (!refSf.exists(sameSf(runSf, _))) None
+    else {
+      val rs = (for {
+        (k, vOpt) <- results; v <- vOpt
+        r <- ref.get(k) if r >= 0.2
+      } yield v / r).sorted
+      if (rs.size < 8) None
+      else Some(if (rs.size % 2 == 1) rs(rs.size / 2)
+                else (rs(rs.size / 2 - 1) + rs(rs.size / 2)) / 2)
     }
 
-  /** The floor the NEXT record carries after this run records: the
-    * minimum ever seen, so a within-eps (slower) refresh inherits the
-    * OLD floor and the monotone bar never rises — the anti-ratchet
-    * (spec-pinned). */
-  def nextFloor(chosen: Option[Double], stored: Option[Double]): Option[Double] =
-    (chosen.toSeq ++ stored.toSeq).minOption
-
-  /** Whether a SPARK_GRAFT_BENCH_OUT redirect aimed AT the committed
-    * record may actually land there (r12 ADVICE): admitted when the
-    * write can carry a floor (the run's own gated ratio, or the stored
-    * floor it inherits), or when the run has no measured ratio at all
-    * (drift_median_ratio lands as null — floor-neutral to any future
-    * fallback read). Refused exactly in the remaining shape: NO floor
-    * source AND a measured-but-ungated ratio — a wrong-SF redirect onto
-    * an absent/unreadable record would write drift_median_ratio ≈ 0.1
-    * with no record_floor_ratio, and the NEXT run's legacy fallback
-    * would adopt that 0.1 as the floor, after which the monotone rule
-    * refuses every legitimate ~0.9 run (the exact lock-out the gated
-    * floor exists to prevent, re-entering through the fallback path). */
-  def redirectWritable(gatedRatio: Option[Double], storedFloor: Option[Double],
-                       measuredRatio: Option[Double]): Boolean =
-    nextFloor(gatedRatio, storedFloor).isDefined || measuredRatio.isEmpty
-
-  /** Host-speed verdict from the canary (r15): this run's canary wall
-    * over the committed quiet anchor (BASELINE.md §bench-protocol). On
-    * a clean-telemetry run, a slowdown ≥ ~1.05 says the MACHINE — not
-    * the code — explains an in-band-but-above-floor bench ratio; ≈ 1.0
-    * with a still-above-floor ratio points at the code. Pure so the
-    * spec pins the degenerate inputs (unmeasured/zero anchors carry no
-    * verdict). */
-  def hostSlowdown(canaryS: Double, anchorS: Double): Option[Double] =
-    if (canaryS > 0 && anchorS > 0) Some(canaryS / anchorS) else None
+  /** Two SF directories hold the same scale factor when their last path
+    * element (the SF's name: sf0.01, sf0.1, …) is equal, so a relative
+    * path or a trailing slash still compares. */
+  private def sameSf(a: String, b: String): Boolean = {
+    def name(p: String) = p.split("[/\\\\]").filter(_.nonEmpty).lastOption
+    name(a).isDefined && name(a) == name(b)
+  }
 
   /** JSON array of memo-consumer query names (r15 verdict task 6): the
     * queries whose timed section RECALLED a session memo built by an
@@ -123,24 +79,22 @@ object BenchPolicy {
     * leaving PERF blind for two rounds. This second line carries the
     * suite-level verdict in well under 500 bytes so ANY tail capture
     * parses a valid JSON object; per-query seconds live in the full
-    * line (printed immediately before) and in BENCH_LAST.json /
-    * $SPARK_GRAFT_BENCH_OUT, which `queries_in` points at. Pure so the
-    * spec pins the format without running a suite. */
+    * line (printed immediately before) and in [[OutFile]], which
+    * `queries_in` names. Pure so the spec pins the format without
+    * running a suite. */
   def compactLine(total: String, nQueries: Int, nErrors: Int,
                   ratioJson: String, driftDetected: Boolean,
-                  memoHitsJson: String, queriesIn: String,
-                  sfJson: String): String =
+                  memoHitsJson: String, sfJson: String): String =
     s"""{"metric":"total","value":$total,"unit":"sec","n_queries":$nQueries,""" +
       s""""n_errors":$nErrors,"drift_median_ratio":$ratioJson,""" +
       s""""drift_detected":$driftDetected,"memo_hits":$memoHitsJson,""" +
-      s""""queries_in":"$queriesIn","sf":"$sfJson"}"""
+      s""""queries_in":"$OutFile","sf":"$sfJson"}"""
 }
 
 /** Deterministic host-speed canary (r15 — the record saga's
   * instrumentation gap): a fixed pure-CPU workload timed immediately
-  * before each bench attempt, so every published line — recorded OR
-  * refused — carries machine-speed evidence independent of the engine's
-  * code. Three rounds of clean in-band runs read 3-14% above the
+  * before each bench attempt, so every published line carries
+  * machine-speed evidence independent of the engine's code. Three rounds of clean in-band runs read 3-14% above the
   * committed record while steal/own-share/load1 could not distinguish
   * "host durably slower" from "code slower"; the canary closes that gap:
   * its wall time depends only on the host.
@@ -204,6 +158,19 @@ object HostCanary {
   }
 }
 
+/** Benchmark main (driver contract): runs every SparkEntry query on
+  * `$SPARK_GRAFT_SF_DIR`, prints ONE JSON line with total + per-query
+  * seconds and then a compact suite-level line, and writes the full line
+  * plus each query's plan metrics to [[BenchPolicy.OutFile]].
+  *
+  * A warmup action runs first so JVM/codegen/session start-up is not
+  * billed to the first query; queries run in sorted name order for
+  * stable attribution. Each query is forced by executing its OWN
+  * physical plan (`GraftColumnBridge.forceOwnPlan`, r12) — `count()`
+  * let the optimizer prune terminal projections/sorts and eliminate
+  * unique-keyed outer-join tails, under-measuring exactly the work the
+  * bench claims to time (BASELINE.md r12 ERA BREAK row).
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -218,9 +185,8 @@ object Bench {
     // Warmup failures must not kill the run's evidence: the same fault
     // inside the timed loop is contained as a per-query `errors` entry,
     // so a broken kernel costs its warmup (its JIT bills to whichever
-    // query hits it first) rather than the whole JSON artifact + self-
-    // record — which is exactly what the harvester needs to SEE the
-    // failure.
+    // query hits it first) rather than the whole JSON artifact — which
+    // is exactly what the harvester needs to SEE the failure.
     // NonFatal only: a VM-fatal warmup error (OOM, StackOverflow) means
     // the timed loop would run in a corrupted JVM and publish a
     // plausible-looking-but-invalid artifact — let those kill the run.
@@ -234,8 +200,7 @@ object Bench {
     // (alphabetically first) then paid ~2 s of first-own-plan JIT for
     // the sort/output paths the warmup never touched
     warm(SparkEntry.queries.get("q01_pricing_summary")
-      .foreach(fn => org.apache.spark.sql.GraftColumnBridge
-        .forceOwnPlan(fn(spark, sfDir))))
+      .foreach(fn => GraftColumnBridge.forceOwnPlan(fn(spark, sfDir))))
     // ... and the JIT'd UDF kernels (shingle/minhash/jaccard/prefix,
     // CMAC/codec), uncounted: on a long-lived cluster these are
     // compiled once per executor JVM within the first seconds of real
@@ -268,7 +233,7 @@ object Bench {
         // own-plan forcing here too (r12): count() column-prunes a pure
         // projection down to nothing — the kernel expressions this block
         // exists to JIT would never execute
-        .transform(df => { org.apache.spark.sql.GraftColumnBridge.forceOwnPlan(df); df })
+        .transform(df => { GraftColumnBridge.forceOwnPlan(df); df })
     }
     // ... and the media-codec kernels (BMP/WAV/Y4M wrap+parse, DCT
     // pHash), uncounted for the same per-JVM-compile reason: under the
@@ -289,7 +254,7 @@ object Bench {
           M.y4mDecode(M.y4mFromBytes(col("media")))("nFrames").as("nf"),
           M.wavDecode(M.wavFromBytes(col("media")))("sampleRate").as("sr"),
           M.phash(col("media")).as("ph"))
-        .transform(df => { org.apache.spark.sql.GraftColumnBridge.forceOwnPlan(df); df })
+        .transform(df => { GraftColumnBridge.forceOwnPlan(df); df })
     }
     // ... and the physical-operator paths the vector/text queries lean
     // on (BroadcastNestedLoopJoin, SortAggregate max_by over structs,
@@ -312,7 +277,7 @@ object Bench {
       assigned.withColumn("r", row_number().over(w)).filter(col("r") <= 5)
         .select(col("id"), posexplode(col("w.v")))
         .orderBy(col("id"), col("pos"))
-        .transform(df => { org.apache.spark.sql.GraftColumnBridge.forceOwnPlan(df); df })
+        .transform(df => { GraftColumnBridge.forceOwnPlan(df); df })
     }
 
     // Host-contention telemetry: this box is a VM, and hypervisor CPU
@@ -353,16 +318,16 @@ object Bench {
         .split("\\s+")(0).toDouble
       catch { case _: Throwable => -1.0 }
     }
-    // A query that throws serializes as null in `queries` (so consumers
-    // summing/plotting per-query values never see a corrupted number)
-    // and its name lands in `errors`; sum(non-null queries) == `value`.
-    val withMetrics = sys.env.get("SPARK_GRAFT_METRICS").contains("1")
-
     /** One timed pass over the whole suite, with its own telemetry
       * window — retakes (below) must publish the TELEMETRY of the
       * attempt they publish the timings of, or the contamination
-      * evidence and the reading would describe different runs. */
+      * evidence and the reading would describe different runs. A query
+      * that throws has None seconds (null in `queries`, so consumers
+      * summing/plotting per-query values never see a corrupted number;
+      * its name lands in `errors`; sum(non-null queries) == `value`) and
+      * no entry in `plans`. */
     final case class Attempt(results: Seq[(String, Option[Double])],
+                             plans: Map[String, Measure.PlanMetrics],
                              stealPct: Double, ownSharePct: Double,
                              load1Start: Double, load1End: Double,
                              memoHits: Seq[String])
@@ -372,7 +337,7 @@ object Bench {
       val own0 = ownJiffies()
       val load1Start = load1()
       val memoConsumers = Seq.newBuilder[String]
-      val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val runs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         // isolate queries from each other's heap debt: collect garbage
         // OUTSIDE the timed section (measured: a heavy predecessor
         // otherwise inflates the next query up to 3x run-to-run).
@@ -394,28 +359,26 @@ object Bench {
         // cost-from-cold — record the delta so the line names it.
         val memo0 = graft.queries.TextOps.memoRecalls
         val t0 = System.nanoTime()
-        val ok = try {
+        val forced = try {
           val df = fn(spark, sfDir)
-          if (withMetrics) {
-            // metrics mode executes the query's OWN plan (Measure.run);
-            // timings remain comparable (same plan, rdd-count action)
-            val m = graft.tools.Measure.run(df)
-            System.err.println(s"[metrics] $name shuffleBytes=${m.shuffleBytes} " +
-              s"shuffleRecords=${m.shuffleRecords} exchanges=${m.exchanges} rows=${m.rows}")
-          } else
-            // the query's OWN plan, not df.count() (r12: count() lets
-            // the optimizer prune terminal projections/sorts and even
-            // eliminate q76's whole verify tail — a unique-keyed left
-            // join under a count is removable — so count-forced walls
-            // under-measured exactly the work the bench claims to time;
-            // BENCH_REF was re-seeded with this forcing, see BASELINE)
-            org.apache.spark.sql.GraftColumnBridge.forceOwnPlan(df)
-          true
-        } catch { case _: Throwable => false }
+          // the query's OWN plan, not df.count() (r12: count() lets the
+          // optimizer prune terminal projections/sorts and even eliminate
+          // q76's whole verify tail — a unique-keyed left join under a
+          // count is removable — so count-forced walls under-measured
+          // exactly the work the bench claims to time; BENCH_REF was
+          // re-seeded with this forcing, see BASELINE)
+          val rows = GraftColumnBridge.forceOwnPlan(df)
+          Some((df, rows))
+        } catch { case _: Throwable => None }
         val secs = (System.nanoTime() - t0) / 1e9
         if (graft.queries.TextOps.memoRecalls > memo0) memoConsumers += name
-        (name, if (ok) Some(secs) else None)
+        // read off the executed plan's SQLMetrics after the timer stops,
+        // so the plan walk is never billed to the query
+        val plan = forced.map { case (df, rows) => Measure.of(df).copy(rows = rows) }
+        (name, forced.map(_ => secs), plan)
       }
+      val results = runs.map { case (name, secs, _) => (name, secs) }
+      val plans = runs.collect { case (name, _, Some(p)) => name -> p }.toMap
       val (busy1, idle1, steal1) = cpuJiffies()
       val own1 = ownJiffies()
       val load1End = load1()
@@ -425,7 +388,7 @@ object Bench {
         if (totalJiff > 0) 100.0 * (steal1 - steal0) / totalJiff else 0.0
       val ownSharePct =
         if (busyJiff > 0) 100.0 * (own1 - own0) / busyJiff else 0.0
-      Attempt(results, stealPct, ownSharePct, load1Start, load1End,
+      Attempt(results, plans, stealPct, ownSharePct, load1Start, load1End,
         memoConsumers.result())
     }
 
@@ -433,21 +396,21 @@ object Bench {
     // recorded rule): host interference inflates every wall time with no
     // code change, and neither steal nor own-share reliably catches a
     // co-resident burst that ends before the run does — BENCH_r08 read
-    // ~1.8-2x baseline while the quiet self-record reproduced at 1.1x.
+    // ~1.8-2x baseline while a quiet re-run reproduced at 1.1x.
     // The documented environment signature is UNIFORM inflation on
     // untouched queries vs the committed quiet reading, so Bench now
-    // carries that check itself: median per-query ratio against the
-    // committed BENCH_REF.json over stable queries (ref >= 0.2 s; the
-    // sub-200ms tail is scheduling noise) above 1.15 flags the attempt
-    // as contaminated and triggers ONE automatic retake. The published
-    // line is the better (lower-median) attempt, with `drift_detected`
-    // carrying the verdict on the attempt actually published — a still-
-    // true flag tells the harvester the reading is environment-bound
-    // even after the retake. Median, not mean: a handful of queries
+    // carries that check itself: a median per-query ratio against the
+    // committed BENCH_REF.json (BenchPolicy.medianRatio, same SF only)
+    // above 1.15 flags the attempt as contaminated and triggers up to
+    // three retakes (below). The published line is the best (lowest-
+    // median) attempt, with `drift_detected` carrying the verdict on the
+    // attempt actually published — a still-true flag tells the harvester
+    // the reading is environment-bound even after the retakes. Median,
+    // not mean: a handful of queries
     // legitimately change cost between rounds; 84 of 105 reference
     // entries clear the 0.2 s floor, so the estimator is robust to any
     // plausible number of deliberate changes.
-    val refQueries: Map[String, Double] = try {
+    val (refQueries: Map[String, Double], refSf: Option[String]) = try {
       val p = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "BENCH_REF.json")
       val node = new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(new java.io.File(p))
@@ -457,22 +420,13 @@ object Bench {
         val e = it.next()
         if (e.getValue.isNumber) b += e.getKey -> e.getValue.asDouble()
       }
-      b.result()
+      (b.result(), Option(node.get("sf")).filter(_.isTextual).map(_.asText))
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] no drift reference (${e.getMessage}) — skipping self-validation")
-      Map.empty
+      (Map.empty, None)
     }
-    def medianRatio(a: Attempt): Option[Double] = {
-      val rs = (for {
-        (k, vOpt) <- a.results; v <- vOpt
-        r <- refQueries.get(k) if r >= 0.2
-      } yield v / r).sorted
-      // <8 comparable queries means the reference doesn't describe this
-      // suite (renamed queries, truncated file) — no verdict, no retake.
-      if (rs.size < 8) None
-      else Some(if (rs.size % 2 == 1) rs(rs.size / 2)
-                else (rs(rs.size / 2 - 1) + rs(rs.size / 2)) / 2)
-    }
+    def medianRatio(a: Attempt): Option[Double] =
+      BenchPolicy.medianRatio(a.results, refQueries, sfDir, refSf)
     val driftBar = 1.15
 
     // Quiet-host wait between retakes (r9 verdict: both r9 driver
@@ -575,7 +529,6 @@ object Bench {
     val driftDetected = chosenRatio.exists(_ > driftBar)
     val results = attempt.results
     val failed = results.collect { case (k, None) => "\"" + k + "\"" }
-    import graft.JsonNum.num // Locale.ROOT JSON numerals (shared helper)
     // 4-decimal seconds: full Double.toString tripled the line length
     // and the driver's harvester truncated the r6 record mid-JSON —
     // keep the one-line artifact comfortably under capture limits.
@@ -591,7 +544,7 @@ object Bench {
     val total = rounded.flatMap(_._2).sum
     val errs = failed.mkString("[", ",", "]")
     // sfDir is env-supplied: escape it, or a path carrying a quote or
-    // backslash corrupts the one-line artifact AND the self-record
+    // backslash corrupts the one-line artifact
     val sfJson = sfDir.replace("\\", "\\\\").replace("\"", "\\\"")
     val ratioJson = chosenRatio.fold("null")(num("%.3f", _))
     // Full per-attempt history (r9 verdict task 1): when the host never
@@ -612,165 +565,24 @@ object Bench {
     val memoHits = BenchPolicy.memoHitsJson(attempt.memoHits)
     val line = s"""{"metric":"total","value":${num("%.4f", total)},"unit":"sec","queries":$qs,"errors":$errs,"host_steal_pct":${num("%.1f", attempt.stealPct)},"own_cpu_share_pct":${num("%.1f", attempt.ownSharePct)},"load1_start":${num("%.1f", attempt.load1Start)},"load1_end":${num("%.1f", attempt.load1End)},"canary_single_s":${num("%.3f", recs(pubIdx).canarySingleS)},"canary_mt_s":${num("%.3f", recs(pubIdx).canaryMtS)},"drift_median_ratio":$ratioJson,"drift_detected":$driftDetected,"memo_hits":$memoHits,"caches_released":$cachesReleased,"cache_empty_after_release":$cacheEmptyAfterRelease,"bench_attempts":$attempts,"published_attempt":${pubIdx + 1},"attempt_history":$history,"sf":"$sfJson"}"""
     println(line)
-    // Self-record: the one-line artifact also lands on disk, so a
-    // console harvester that truncates the stdout capture (the r6 bench
-    // record lost q01-q37, and the r7 committed record lost q01-q31 +
-    // the total the same way) can always recover the full JSON.
-    // Paths are cwd-relative: Bench runs from the repo root (sbt
-    // runMain), so the round's end-of-round commit always captures the
-    // untruncated line — and a run from a worktree or another checkout
-    // records into ITS OWN tree instead of clobbering this one's
-    // committed artifact.
-    // Write-then-rename keeps the published file whole under any crash.
-    //
-    // Two files (r9 verdict task 5: the driver's drifted run clobbered
-    // the committed clean self-record): EVERY run lands verbatim in
-    // BENCH_LAST.json; BENCH_SELF.json — the repo's committed quiet
-    // record — is only overwritten on BenchPolicy.selfRecordable's
-    // positive verdict (zero failures + measured in-band ratio, or the
-    // no-reference bootstrap), so a contaminated, wrong-SF, partial or
-    // unmeasurable run can no longer displace it.
-    // SPARK_GRAFT_BENCH_OUT redirects the always-written copy
-    // (explicit operator intent wins).
-    // The record's FLOOR is read BEFORE any write (r11 review: reading
-    // it after the unconditional record() below let
-    // SPARK_GRAFT_BENCH_OUT=BENCH_SELF.json overwrite the record first
-    // and then "compare" the run against itself — the monotone guard
-    // defeated by an env var). record_floor_ratio is the minimum ratio
-    // the record has ever held; legacy records without the field fall
-    // back to their own drift_median_ratio.
-    val (storedFloor: Option[Double], storedCanary: Option[Double]) = try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new java.io.File("BENCH_SELF.json"))
-      val node = Option(root.get("record_floor_ratio"))
-        .filter(_.isNumber).orElse(Option(root.get("drift_median_ratio")))
-      // the record's own canary reading IS the host-speed anchor (r15):
-      // once a canary-stamped record lands, every later refused run can
-      // print a host-vs-record-era speed verdict instead of narrative.
-      // Pre-r15 records carry no canary — the anchor is then BASELINE's
-      // documented quiet value, compared by the operator.
-      (node.filter(_.isNumber).map(_.asDouble()),
-        Option(root.get("canary_single_s")).filter(_.isNumber).map(_.asDouble()))
-    } catch { case scala.util.control.NonFatal(_) => (None, None) }
-    def record(path: String, extraField: String = ""): Unit =
-      try {
-        val out = java.nio.file.Paths.get(path)
-        val tmp = out.resolveSibling(out.getFileName.toString + ".tmp")
-        val full =
-          if (extraField.isEmpty) line
-          else line.stripSuffix("}") + "," + extraField + "}"
-        java.nio.file.Files.write(tmp, (full + "\n").getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp, out,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] self-record write to $path failed: ${e.getMessage}")
+    // The full line also lands on disk, so a console harvester that
+    // truncates the stdout capture (the r6 and r7 bench lines lost their
+    // first 31-37 queries that way) can always recover it — together
+    // with each query's executed-plan metrics (shuffle bytes/records,
+    // exchanges, rows; null for a failed query): the shuffled-bytes
+    // regression alarm, which wall time on a shared host is too noisy
+    // to be. cwd-relative: Bench runs from the repo root (sbt runMain),
+    // and a run from another checkout writes into ITS OWN tree.
+    val planJson = results.map { case (k, _) =>
+      "\"" + k + "\":" + attempt.plans.get(k).fold("null") { m =>
+        s"""{"shuffle_bytes":${m.shuffleBytes},"shuffle_records":${m.shuffleRecords},""" +
+          s""""exchanges":${m.exchanges},"rows":${m.rows}}"""
       }
-    // A redirect aimed AT the committed record is still a record write
-    // (r11 ADVICE low 2: the unconditional copy used to land on
-    // BENCH_SELF.json without record_floor_ratio, so the NEXT run's
-    // storedFloor fell back to the clobbering run's drift_median_ratio
-    // — the env var could erase the floor and raise the monotone bar).
-    // Explicit operator intent still wins — the write happens — but it
-    // carries the min-ever floor forward and says so loudly.
-    val outTarget = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
-    // where the full line actually lands (the refused-redirect branch
-    // falls back to BENCH_LAST.json) — named on the compact line below
-    var landedIn = outTarget
-    val redirectIsRecord =
-      try java.nio.file.Paths.get(outTarget).toAbsolutePath.normalize ==
-        java.nio.file.Paths.get("BENCH_SELF.json").toAbsolutePath.normalize
-      catch { case _: Throwable => outTarget == "BENCH_SELF.json" }
-    if (redirectIsRecord) {
-      // the carried floor only admits THIS run's ratio through the same
-      // positive-verdict gate the normal record path uses (r12 review:
-      // an ungated nextFloor(chosenRatio, …) let a wrong-SF redirect
-      // write record_floor_ratio ≈ 0.1, after which no legitimate
-      // ~0.9-1.0 run could ever replace the record again) — an invalid
-      // ratio contributes nothing and the stored floor carries alone
-      val gatedRatio =
-        if (BenchPolicy.selfRecordable(chosenRatio, refQueries.isEmpty,
-          failed.nonEmpty, driftBar, storedRatio = None)) chosenRatio
-        else None
-      if (BenchPolicy.redirectWritable(gatedRatio, storedFloor, chosenRatio)) {
-        System.err.println("[bench] SPARK_GRAFT_BENCH_OUT targets the committed " +
-          "record BENCH_SELF.json — writing it WITH the carried record floor " +
-          "(the monotone rule survives the redirect)")
-        record(outTarget, BenchPolicy.nextFloor(gatedRatio, storedFloor)
-          .fold("")(f => s""""record_floor_ratio":${num("%.3f", f)}"""))
-        landedIn = outTarget
-      } else {
-        // r12 ADVICE: no stored floor + an ungated measured ratio —
-        // writing would leave drift_median_ratio as the only number a
-        // future storedFloor fallback can read, poisoning the monotone
-        // gate with a non-comparable value. Land in BENCH_LAST.json.
-        System.err.println("[bench] SPARK_GRAFT_BENCH_OUT targets " +
-          "BENCH_SELF.json, but no record floor exists and this run's " +
-          s"ratio (${chosenRatio.fold("n/a")(r => f"$r%.3f")}) failed the " +
-          "record gate — refusing the record write (its drift_median_ratio " +
-          "would become the next run's floor); landing in BENCH_LAST.json")
-        record("BENCH_LAST.json")
-        landedIn = "BENCH_LAST.json"
-      }
-    } else record(outTarget)
-    // BENCH_SELF.json demands a POSITIVE verdict, not merely the absence
-    // of a drift flag: a run at the wrong SF reads median ratios ~0.1
-    // (10× less data than the sf0.1 reference) and a run with no usable
-    // reference reads None — both are "not drifted" but neither is a
-    // comparable quiet sf0.1 record, and both used to clobber the
-    // committed one. The band's floor rejects wrong-SF readings while
-    // admitting any plausible genuine speedup (a uniform 2× improvement
-    // is a refresh-BENCH_REF event per the verify skill — which also
-    // re-seeds BENCH_SELF.json, since ratios against the NEW reference
-    // are incomparable with the stored floor). AND the record is
-    // monotone (r10 verdict task 2): the bar is the record's FLOOR
-    // ratio (min ever recorded), carried in record_floor_ratio, so
-    // repeated within-eps refreshes cannot ratchet the record slower
-    // step by step (r11 review) — the bar never rises above
-    // floor + eps no matter how many refreshes land. Policy + cases in
-    // BenchPolicy/BenchPolicySpec.
-    // the whole chain is skipped after a redirect AT the record: the
-    // redirect branch above already wrote BENCH_SELF.json (with the
-    // gated floor), so both the second write and the "BENCH_SELF.json
-    // untouched" messages below would be wrong about the file's state
-    // (r12 review)
-    if (redirectIsRecord) {}
-    else if (BenchPolicy.selfRecordable(chosenRatio, refQueries.isEmpty,
-        failed.nonEmpty, driftBar, storedFloor)) {
-      val floor = BenchPolicy.nextFloor(chosenRatio, storedFloor)
-      record("BENCH_SELF.json",
-        floor.fold("")(f => s""""record_floor_ratio":${num("%.3f", f)}"""))
-    } else if (BenchPolicy.selfRecordable(chosenRatio, refQueries.isEmpty,
-        failed.nonEmpty, driftBar, storedRatio = None)) {
-      // would have recorded but for the monotone rule — same policy
-      // call minus the floor, so this message can never disagree with
-      // the gate (r11 review: the old hand-rolled condition duplicated
-      // the band check and could desync from it). Two distinct shapes
-      // reach here (r11 ADVICE medium): a measured in-band ratio above
-      // the floor, and the ratio-LESS no-reference bootstrap blocked by
-      // an existing record — chosenRatio is None there, so the message
-      // must not .get it (the old interpolation threw
-      // NoSuchElementException and killed the run before spark.stop()).
-      val floorTxt = storedFloor.fold("n/a")(f => f"$f%.3f")
-      // canary verdict (r15): on a refusal, say what the machine-speed
-      // evidence shows — slowdown vs the record's stored anchor when
-      // one exists, else the raw reading for BASELINE's ledger
-      val canTxt = BenchPolicy.hostSlowdown(
-        recs(pubIdx).canarySingleS, storedCanary.getOrElse(0.0)) match {
-        case Some(s) => f"; canary ${recs(pubIdx).canarySingleS}%.3f s = " +
-          f"$s%.3f x record-era anchor"
-        case None => f"; canary ${recs(pubIdx).canarySingleS}%.3f s single / " +
-          f"${recs(pubIdx).canaryMtS}%.3f s mt (no stored anchor)"
-      }
-      chosenRatio match {
-        case Some(r) => System.err.println(f"[bench] in-band ($r%.3f) but" +
-          s" does not beat the stored record floor ($floorTxt)" +
-          s" — BENCH_SELF.json untouched (monotone rule)$canTxt")
-        case None => System.err.println("[bench] no reference ratio — " +
-          s"bootstrap blocked by the existing record (floor $floorTxt); " +
-          "BENCH_SELF.json untouched (a stored measured record outlives " +
-          "a lost reference; delete BENCH_SELF.json to re-seed deliberately)")
-      }
+    }.mkString("{", ",", "}")
+    try QueryProfile.publishText(BenchPolicy.OutFile,
+      line.stripSuffix("}") + s""","plan_metrics":$planJson}""" + "\n")
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] write to ${BenchPolicy.OutFile} failed: ${e.getMessage}")
     }
     // Trailing COMPACT line, printed LAST on stdout (r15 verdict task
     // 1): the full line above exceeds the driver harvester's ~2000-char
@@ -778,11 +590,10 @@ object Bench {
     // mid-`queries`, parsed null, PERF blind two rounds). This < 500-
     // byte twin repeats the suite-level fields so any tail capture
     // still parses; per-query seconds live in the full line and in the
-    // always-written file `queries_in` names. The full line is NOT
-    // removed — both print, full first.
+    // file `queries_in` names. The full line is NOT removed — both
+    // print, full first.
     println(BenchPolicy.compactLine(num("%.4f", total), results.size,
-      failed.size, ratioJson, driftDetected, memoHits,
-      landedIn.replace("\\", "\\\\").replace("\"", "\\\""), sfJson))
+      failed.size, ratioJson, driftDetected, memoHits, sfJson))
     spark.stop()
   }
 }

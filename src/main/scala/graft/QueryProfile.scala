@@ -105,6 +105,13 @@ object QueryProfile {
       val recs = ts.map(_.recordsRead).sorted
       Spread(sid, ts.size, durs.last, durs(durs.size / 2), recs.last, recs(recs.size / 2))
     }
+    /** Spreads of the stages wide enough for their max-vs-median task
+      * spread to read as skew on a session of `width` task slots: at
+      * least 8 tasks, or `width` when that is smaller — a stage sized to
+      * the session runs `width` tasks, so a fixed 8 would hide every
+      * stage below 8 cores. */
+    def skewSpreads(width: Int): Seq[Spread] =
+      spreads.filter(_.tasks >= math.min(8, width))
   }
 
   def attach(spark: SparkSession): QueryProfile = {
@@ -133,13 +140,17 @@ object QueryProfile {
   }
 
   /** Write `rows` (JSON objects) as a JSON array to `path` by
-    * write-then-rename, so a run killed mid-write never leaves a
-    * truncated artifact; tools republish after every row so a failure
+    * write-then-rename; tools republish after every row so a failure
     * late in a sweep keeps the rows already measured. */
-  def publish(path: String, rows: Iterable[String]): Unit = {
+  def publish(path: String, rows: Iterable[String]): Unit =
+    publishText(path, rows.mkString("[\n", ",\n", "\n]\n"))
+
+  /** Write `text` to `path` by write-then-rename, so a run killed
+    * mid-write never leaves a truncated artifact. */
+  def publishText(path: String, text: String): Unit = {
     val out = Paths.get(path)
     val tmp = out.resolveSibling(out.getFileName.toString + ".tmp")
-    Files.write(tmp, rows.mkString("[\n", ",\n", "\n]\n").getBytes("UTF-8"))
+    Files.write(tmp, text.getBytes("UTF-8"))
     Files.move(tmp, out, StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)
   }

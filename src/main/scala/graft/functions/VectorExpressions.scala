@@ -130,11 +130,17 @@ case class SrpSig(child: Expression)
     copy(child = newChild)
 }
 
-/** Function registration: the engine's custom functions exposed to both
-  * the Column API and SQL (`SELECT graft_dot(a, b) …`). Registered either
-  * through [[GraftExtensions]] (SparkSessionExtensions, for sessions the
-  * engine builds) or lazily via [[GraftFunctions.ensureRegistered]] (for
-  * externally built sessions, e.g. the driver's). */
+/** The engine's custom functions, for the Column API and for SQL
+  * (`SELECT graft_dot(a, b) …`). The Column builders below need no
+  * registration, and every query uses them, so no engine entry point
+  * registers anything. The SQL names exist only on a session that opts
+  * in: [[GraftFunctions.ensureRegistered]] (what the specs call) or
+  * [[GraftExtensions]] on the session builder. What a query needs at
+  * plan time beyond its Columns — the as-of join's planner strategy —
+  * the query registers lazily on whatever session it runs in
+  * ([[graft.plans.AsOfJoin.apply]]). It must not move into
+  * `graft.Session.local`: sessions built elsewhere (perfbench's own
+  * `Main.session`, a driver's) run the same queries. */
 object GraftFunctions {
 
   def dot(a: Column, b: Column): Column =
@@ -279,9 +285,9 @@ object GraftFunctions {
   * shared builder table, so the two registration paths cannot drift).
   * The Scala-UDF surface (phy_decode_b64, graft_shingles,
   * graft_simhash, the media parsers) has no SparkSessionExtensions
-  * hook — sessions configured only via spark.sql.extensions get those
-  * lazily from `ensureRegistered`, which every engine entry point
-  * calls. */
+  * hook — a session configured only via spark.sql.extensions gets
+  * those SQL names by calling `ensureRegistered` itself; no engine
+  * entry point calls it (see [[GraftFunctions]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =
     GraftFunctions.nativeBuilders.foreach { case (name, builder) =>

@@ -8,11 +8,12 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 /** Post-execution SQLMetrics rollup — the "measure, don't guess" hook:
   * run the plan, then read what it actually did (bytes shuffled, rows
   * produced, exchange count) off the executed plan's metrics instead of
-  * estimating from the logical shape. `SPARK_GRAFT_METRICS=1` makes
-  * Bench emit these per query next to the wall time; at cluster scale
-  * the same numbers come from the SQL tab / history server, and a
-  * per-query shuffle-bytes budget is the first regression alarm a perf
-  * CI should raise (wall time is noisy, shuffled bytes are not). */
+  * estimating from the logical shape. Bench writes these per query
+  * (`plan_metrics` in BENCH_LAST.json) next to the wall time; at
+  * cluster scale the same numbers come from the SQL tab / history
+  * server, and a per-query shuffle-bytes budget is the first regression
+  * alarm a perf CI should raise (wall time is noisy, shuffled bytes are
+  * not). */
 object Measure {
 
   final case class PlanMetrics(

@@ -72,6 +72,7 @@ object SkewProbe {
 
     val spark = Session.local(Session.cores)
     val profile = QueryProfile.attach(spark)
+    val width = spark.sparkContext.defaultParallelism
 
     // --- synthesize the hot-key corpus -------------------------------
     // Two document adversaries (SKEW_ADVERSARY):
@@ -315,7 +316,8 @@ object SkewProbe {
           // (collapsed to a driver-local/cached result) still emits its
           // row — with dominant_stage null — instead of aborting the
           // probe and losing every other query's rows (r9 advice).
-          val meaningful = stats.filter(s => s.maxMs >= 200 && s.tasks >= 8)
+          val wide = run.skewSpreads(width)
+          val meaningful = wide.filter(_.maxMs >= 200)
           val worst = if (meaningful.isEmpty) 0.0
             else meaningful.map(s => s.maxMs.toDouble / math.max(s.medMs, 1L)).max
           // r11: at beyond-cap widths the max>=200ms floor alone is not
@@ -329,7 +331,7 @@ object SkewProbe {
           // grinding df²/25) stays visible, while a straggler in an
           // otherwise-idle stage is judged by stages_top3's ABSOLUTE
           // max_ms instead of a ratio over idle neighbors.
-          val loaded = stats.filter(s => s.medMs >= 200 && s.tasks >= 8)
+          val loaded = wide.filter(_.medMs >= 200)
           val worstLoaded = if (loaded.isEmpty) 0.0
             else loaded.map(s => s.maxMs.toDouble / math.max(s.medMs, 1L)).max
           // the rows twin of worst_loaded (r15): max/med shuffle-read

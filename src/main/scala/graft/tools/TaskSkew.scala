@@ -11,7 +11,8 @@ import org.apache.spark.sql.GraftColumnBridge
   * sort, memory pressure — fix the operator)?
   *
   * runMain graft.tools.TaskSkew <sfDir> <query> [reps]
-  * Prints, for every stage with >= 8 tasks and a max task >= 500 ms:
+  * Prints, for every stage with at least 8 tasks (or the session width
+  * when smaller; `QueryProfile.Run.skewSpreads`) and a max task >= 500 ms:
   * task count, p50/p90/max duration, and the top-3 tasks' (duration,
   * shuffle-read records, shuffle-read MB, GC ms) — plus the p50 rows
   * so the rows-vs-cost attribution is one subtraction.
@@ -26,6 +27,7 @@ object TaskSkew {
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = Session.local(Session.cores)
     val profile = QueryProfile.attach(spark)
+    val width = spark.sparkContext.defaultParallelism
 
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name"))
@@ -34,8 +36,9 @@ object TaskSkew {
       val run = profile.measure(GraftColumnBridge.forceOwnPlan(fn(spark, sfDir)))
       println(f"== rep $rep: wall ${run.wallS}%.2f s, rows ${run.value}")
       if (rep == reps) {
-        for ((sid, ts) <- run.tasksByStage.toSeq.sortBy(_._1)
-             if ts.size >= 8 && ts.map(_.durationMs).max >= 500) {
+        val byStage = run.tasksByStage
+        for (s <- run.skewSpreads(width).sortBy(_.stageId) if s.maxMs >= 500) {
+          val (sid, ts) = (s.stageId, byStage(s.stageId))
           val durs = ts.map(_.durationMs).sorted
           val recs = ts.map(_.recordsRead).sorted
           def p(v: Vector[Long], q: Double) = v((v.size * q).toInt.min(v.size - 1))

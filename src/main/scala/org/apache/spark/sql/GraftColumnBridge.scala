@@ -61,8 +61,7 @@ object GraftColumnBridge {
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** Idempotently register an extra planner strategy on the session
-    * (the `experimental.extraStrategies` hook, for sessions not built
-    * through GraftExtensions). */
+    * (the `experimental.extraStrategies` hook). */
   def addStrategy(spark: SparkSession,
                   s: org.apache.spark.sql.execution.SparkStrategy): Unit = {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental

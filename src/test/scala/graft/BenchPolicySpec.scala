@@ -45,87 +45,39 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(!BenchPolicy.retakeNeeded(Seq(Some(1.05)), 1.15))
   }
 
-  test("BENCH_SELF overwrite needs a positive in-band verdict (r10 review)") {
-    val bar = 1.15
-    // clean comparable run: record
-    assert(BenchPolicy.selfRecordable(Some(1.02), refMissing = false, anyFailed = false, bar))
-    // wrong SF: median ratio ~0.1 is 'not drifted' but NOT comparable
-    assert(!BenchPolicy.selfRecordable(Some(0.1), refMissing = false, anyFailed = false, bar))
-    // drifted: never
-    assert(!BenchPolicy.selfRecordable(Some(1.4), refMissing = false, anyFailed = false, bar))
-    // unmeasurable with a reference present: no verdict, no record
-    assert(!BenchPolicy.selfRecordable(None, refMissing = false, anyFailed = false, bar))
-    // bootstrap: no reference exists yet — a fully-green run seeds it
-    assert(BenchPolicy.selfRecordable(None, refMissing = true, anyFailed = false, bar))
-    assert(!BenchPolicy.selfRecordable(None, refMissing = true, anyFailed = true, bar))
-    // a failed query invalidates even an in-band ratio: the line's
-    // total omits the failure's seconds — faster-looking but partial
-    assert(!BenchPolicy.selfRecordable(Some(1.0), refMissing = false, anyFailed = true, bar))
+  // 10 stable reference queries (>= 0.2 s) plus one sub-200 ms one
+  private val ref = (1 to 10).map(i => f"q$i%02d" -> 1.0).toMap + ("q11" -> 0.1)
+  private def timings(secs: Double*): Seq[(String, Option[Double])] = secs.zipWithIndex.map { case (v, i) =>
+    (f"q${i + 1}%02d", Some(v)) }
+
+  test("drift ratio: a run at another SF than the reference's has no verdict") {
+    val r = timings(0.8, 0.8, 0.8, 0.8, 0.8, 0.8, 0.8, 0.8, 0.8, 0.8)
+    // the sf0.01-vs-sf0.1 case that read 0.830 and passed as in-band
+    assert(BenchPolicy.medianRatio(r, ref, "/root/testdata/sf0.01",
+      Some("/root/testdata/sf0.1")).isEmpty)
+    // a reference that does not state its SF cannot be compared either
+    assert(BenchPolicy.medianRatio(r, ref, "/root/testdata/sf0.1", None).isEmpty)
   }
 
-  test("BENCH_SELF record is monotone (r10 verdict task 2)") {
-    val bar = 1.15
-    // the exact r10 driver case: in-band 1.141 vs stored 0.912 — the
-    // 31%-slower run must NOT displace the committed quiet record
-    assert(!BenchPolicy.selfRecordable(Some(1.141), refMissing = false,
-      anyFailed = false, bar, storedRatio = Some(0.912)))
-    // a genuinely faster clean run replaces it
-    assert(BenchPolicy.selfRecordable(Some(0.905), refMissing = false,
-      anyFailed = false, bar, storedRatio = Some(0.912)))
-    // a tie within eps (same-speed refresh on an equally quiet host)
-    // is admitted — re-runs carrying new telemetry fields stay possible
-    assert(BenchPolicy.selfRecordable(Some(0.92), refMissing = false,
-      anyFailed = false, bar, storedRatio = Some(0.912)))
-    // ...but eps does not admit real regressions
-    assert(!BenchPolicy.selfRecordable(Some(0.95), refMissing = false,
-      anyFailed = false, bar, storedRatio = Some(0.912)))
-    // no stored measured ratio (fresh tree, or a legacy record without
-    // the field): the in-band verdict alone suffices
-    assert(BenchPolicy.selfRecordable(Some(1.1), refMissing = false,
-      anyFailed = false, bar, storedRatio = None))
-    // bootstrap seeds ONLY when there is no measured record to protect:
-    // a reference-file loss must not let a ratio-less run clobber one
-    assert(!BenchPolicy.selfRecordable(None, refMissing = true,
-      anyFailed = false, bar, storedRatio = Some(0.912)))
-    assert(BenchPolicy.selfRecordable(None, refMissing = true,
-      anyFailed = false, bar, storedRatio = None))
+  test("drift ratio: the same SF gives the median over stable queries") {
+    // odd count: the middle ratio; the sub-200 ms q11 and a failed
+    // query do not count
+    val odd = timings(0.5, 0.9, 1.0, 1.1, 1.2, 1.3, 1.4, 1.5, 3.0) ++
+      Seq("q10" -> None, "q11" -> Some(9.0))
+    assert(BenchPolicy.medianRatio(odd, ref, "/root/testdata/sf0.1",
+      Some("/root/testdata/sf0.1")).contains(1.2))
+    // even count: the mean of the middle two; a relative path with a
+    // trailing slash names the same SF
+    val even = timings(1.0, 1.0, 1.0, 1.0, 1.2, 1.4, 2.0, 2.0, 2.0, 2.0)
+    assert(BenchPolicy.medianRatio(even, ref, "../testdata/sf0.1/",
+      Some("/root/testdata/sf0.1")).exists(r => math.abs(r - 1.3) < 1e-12))
   }
 
-  test("the monotone bar is the record's FLOOR, so within-eps refreshes cannot ratchet it (r11 review)") {
-    val bar = 1.15
-    // a 0.93 refresh lands in the tie band of floor 0.912 and records...
-    assert(BenchPolicy.selfRecordable(Some(0.93), refMissing = false,
-      anyFailed = false, bar, storedRatio = Some(0.912)))
-    // ...but the floor it WRITES is still 0.912 — not its own 0.93
-    assert(BenchPolicy.nextFloor(Some(0.93), Some(0.912)) == Some(0.912))
-    // so the next step of the would-be ratchet (0.95 vs floor 0.912)
-    // is rejected: the bar never walks upward in +eps steps
-    assert(!BenchPolicy.selfRecordable(Some(0.95), refMissing = false,
-      anyFailed = false, bar, storedRatio = Some(0.912)))
-    // a genuinely faster run lowers the floor
-    assert(BenchPolicy.nextFloor(Some(0.88), Some(0.912)) == Some(0.88))
-    // seeding writes its own ratio as the floor
-    assert(BenchPolicy.nextFloor(Some(1.0), None) == Some(1.0))
-    assert(BenchPolicy.nextFloor(None, None).isEmpty)
-  }
-
-  test("a record-targeted redirect with no floor source refuses rather than poison the fallback (r12 advice)") {
-    // the hole: BENCH_SELF.json absent (storedFloor None), the redirect
-    // run gated out (wrong-SF ratio ~0.1 → gatedRatio None) — a write
-    // would carry drift_median_ratio 0.1 with no record_floor_ratio,
-    // and the NEXT run's legacy fallback would read 0.1 as the floor,
-    // locking out every legitimate ~0.9 run forever
-    assert(!BenchPolicy.redirectWritable(gatedRatio = None,
-      storedFloor = None, measuredRatio = Some(0.1)))
-    // same shape with a drifted ratio: equally refused
-    assert(!BenchPolicy.redirectWritable(None, None, Some(1.4)))
-    // ratio-less run (no reference): drift_median_ratio lands as null —
-    // floor-neutral, nothing for a fallback to misread — admitted
-    assert(BenchPolicy.redirectWritable(None, None, None))
-    // a stored floor carries through regardless of this run's verdict
-    assert(BenchPolicy.redirectWritable(None, Some(0.864), Some(0.1)))
-    // an in-band gated ratio is its own floor source (redirect bootstrap)
-    assert(BenchPolicy.redirectWritable(Some(0.95), None, Some(0.95)))
+  test("drift ratio: fewer than 8 comparable queries give no verdict") {
+    val seven = timings(1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0) ++
+      Seq("q08" -> None, "q09" -> None, "q10" -> None, "q11" -> Some(1.0))
+    assert(BenchPolicy.medianRatio(seven, ref, "/root/testdata/sf0.1",
+      Some("/root/testdata/sf0.1")).isEmpty)
   }
 
   test("host canary: kernel semantics pinned against an independent model (r15)") {
@@ -154,12 +106,6 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(HostCanary.sink != before || HostCanary.sink != 0L)
   }
 
-  test("hostSlowdown carries a verdict only when both readings exist (r15)") {
-    assert(BenchPolicy.hostSlowdown(2.1, 2.0).exists(s => math.abs(s - 1.05) < 1e-12))
-    assert(BenchPolicy.hostSlowdown(0.0, 2.0).isEmpty)
-    assert(BenchPolicy.hostSlowdown(2.0, 0.0).isEmpty)
-  }
-
   test("memo_hits field: sorted, deduped, valid JSON array (r16)") {
     assert(BenchPolicy.memoHitsJson(Nil) == "[]")
     assert(BenchPolicy.memoHitsJson(Seq("q72_canonical_docs")) ==
@@ -177,7 +123,7 @@ class BenchPolicySpec extends AnyFunSuite {
     val line = BenchPolicy.compactLine("123.4567", 106, 2, "1.161", true,
       BenchPolicy.memoHitsJson(Seq("q72_canonical_docs",
         "q105_classifier_learned")),
-      "BENCH_LAST.json", "/root/testdata/sf0.1")
+      "/root/testdata/sf0.1")
     assert(line.length < 500, s"compact line too long: ${line.length}")
     val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
     assert(node.get("metric").asText() == "total")

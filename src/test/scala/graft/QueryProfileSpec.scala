@@ -29,6 +29,18 @@ class QueryProfileSpec extends SparkSuite {
     assert(span.stages.isEmpty && span.union == 0L && span.extent == 0L)
   }
 
+  test("skew spreads follow the session width: a 4-task stage counts at width 4") {
+    def task(stage: Int, ms: Long) = QueryProfile.Task(stage, ms, ms, 0L, ms, 0L, 0L)
+    // stage 1 is full-width at 4 cores with one straggler; stage 2 has 2 tasks
+    val run = QueryProfile.Run((), 1.0, Vector.empty,
+      Vector(task(1, 900), task(1, 100), task(1, 110), task(1, 120),
+        task(2, 50), task(2, 60)))
+    assert(run.skewSpreads(4) ==
+      Seq(QueryProfile.Spread(1, 4, maxMs = 900, medMs = 120, maxRows = 900, medRows = 120)))
+    // the floor of 8 holds from 8 cores up: no stage here qualifies
+    assert(run.skewSpreads(32).isEmpty)
+  }
+
   test("a measured query's stage and task rows are all drained by the time measure returns") {
     val profile = QueryProfile.attach(spark)
     try {
