@@ -110,14 +110,15 @@ object BenchPolicy {
   * canary); results land in a volatile sink so the timed loops cannot
   * be eliminated. */
 object HostCanary {
-  /** Lane counts / workload sizes: targets ~1-2 s per reading on this
-    * box's class so the canary costs a few seconds per attempt —
-    * negligible against a ~2 min suite, and OUTSIDE the attempt's
-    * telemetry window (it must not bill its own CPU burst to the
-    * suite's own-share/steal deltas). */
+  /** Lane counts / workload sizes: targets ~1-2 s per reading so the
+    * canary costs a few seconds per attempt — negligible against a
+    * ~2 min suite, and OUTSIDE the attempt's telemetry window (it must
+    * not bill its own CPU burst to the suite's own-share/steal
+    * deltas). One lane per task slot of the bench session, so a quiet
+    * host reads the same mt time at any core count. */
   private[graft] val SingleIters = 800_000_000L
   private[graft] val LaneIters = 400_000_000L
-  private[graft] val Lanes = 32
+  private[graft] val Lanes = Session.cores
 
   /** xorshift64 chain over `iters` steps: each step depends on the
     * previous one, so the loop measures serial core speed, not SIMD or
@@ -201,7 +202,7 @@ object Bench {
     // the sort/output paths the warmup never touched
     warm(SparkEntry.queries.get("q01_pricing_summary")
       .foreach(fn => GraftColumnBridge.forceOwnPlan(fn(spark, sfDir))))
-    // ... and the JIT'd UDF kernels (shingle/minhash/jaccard/prefix,
+    // ... and the JIT'd UDF kernels (shingle/minhash/jaccard,
     // CMAC/codec), uncounted: on a long-lived cluster these are
     // compiled once per executor JVM within the first seconds of real
     // load, not once per query — billing the HotSpot compile to
@@ -220,8 +221,6 @@ object Bench {
           col("key"),
           graft.functions.GraftFunctions.minhashSig(
             T.shingles(col("text"))).as("sig"),
-          graft.functions.GraftFunctions.prefixHashes(
-            T.shingles(col("text")), lit(0.8)).as("pref"),
           graft.functions.GraftFunctions.jaccardSim(
             T.shingles(col("text")), T.shingles(col("text"))).as("j"),
           graft.functions.GraftFunctions.containmentSim(

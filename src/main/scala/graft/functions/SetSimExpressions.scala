@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -12,10 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * which is `private[sql]`, so the same contract is enforced via
   * `checkInputDataTypes` (the HllDistinct precedent): a bad SQL call
   * like `graft_jaccard(1, 2)` fails with a clear AnalysisException
-  * instead of a codegen-compile failure + interpreted-path CCE. The
-  * one implicit cast a caller reasonably expects — a DECIMAL literal
-  * threshold like `graft_prefix_hashes(a, 0.8)` — is inserted by the
-  * SQL registry builder (GraftFunctions.ensureRegistered). */
+  * instead of a codegen-compile failure + interpreted-path CCE. */
 private[functions] object SetSimTypeChecks {
   def stringArrays(name: String, dts: Seq[DataType]): TypeCheckResult = {
     dts.zipWithIndex.collectFirst {
@@ -147,99 +144,6 @@ object SetSimKernels {
   }
 }
 
-/** AllPairs/PPJoin prefix as a native expression: the k = (n − ⌈t·n⌉ + 1)
-  * smallest xxhash64(shingle) values under the global (hash, shingle)
-  * order — the hash-only form of TextFunctions.prefixShingles (whose
-  * (hash, string) tuples the hash-only index joins no longer need).
-  * Hashes are computed zero-copy over the UTF8String bytes (identical
-  * to xxh64 over getBytes(UTF_8) — UTF8String IS utf-8), ties broken by
-  * UTF8String binary compare (= String order for ASCII shingles; a
-  * differing tie needs an xxh64 collision first, and every candidate is
-  * exact-verified anyway). Set equality with prefixSelect is pinned in
-  * TextFunctionsPropSpec. */
-object PrefixHashKernel {
-  private val SEED = 42L
-
-  private val NoHot = Array.empty[Long]
-
-  /** Hash-only prefix order: exactly [[evalHot]] with an empty hot set
-    * ((false, h, s) degenerates to (h, s)) — ONE heap implementation to
-    * maintain, so a fix to the tie-break or truncation cannot desync
-    * the prefix variants the TextOpsSpec output pins compare. The empty
-    * binarySearch per element is a constant-time miss, and this kernel
-    * runs only on the retired A/B paths (the defaults build their
-    * df-ordered prefixes in SQL). */
-  def eval(arr: ArrayData, t: Double): ArrayData = evalHot(arr, t, NoHot)
-
-  /** Hybrid (is-hot, hash, shingle) variant: identical bounded-heap
-    * select, but any hash present in `hotSorted` (a sorted long[] of
-    * high-df hashes) orders AFTER every non-hot hash — a hot shingle
-    * enters a prefix only when the doc has fewer non-hot shingles than
-    * the prefix width, the same exclusion-by-construction the full
-    * df-order gives, without the per-doc df join + window. Lossless for
-    * the same reason every global order is: prefixes stay prefixes of
-    * ONE total order ((isHot, h, s) is total), and candidates are
-    * exact-verified downstream. */
-  def evalHot(arr: ArrayData, t: Double, hotSorted: Array[Long]): ArrayData = {
-    val n = arr.numElements()
-    if (n == 0) return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Long])
-    val k = n - math.ceil(t * n).toInt + 1
-    if (k <= 0) return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Long])
-    val hh = new Array[Long](k)
-    val hs = new Array[UTF8String](k)
-    val hf = new Array[Boolean](k)
-    var size = 0
-    @inline def gt(f1: Boolean, h1: Long, s1: UTF8String,
-                   f2: Boolean, h2: Long, s2: UTF8String): Boolean =
-      (f1 && !f2) || (f1 == f2 && (h1 > h2 || (h1 == h2 && s1.compareTo(s2) > 0)))
-    var i = 0
-    while (i < n) {
-      val s = arr.getUTF8String(i)
-      // null ELEMENTS are skipped (containsNull=true passes the type
-      // check, and s.getBaseObject would NPE mid-codegen) — mirrored in
-      // the UDF twin so the prefix-set parity pin holds on such input
-      if (s == null) { i += 1 }
-      else {
-        val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-          s.getBaseObject, s.getBaseOffset, s.numBytes, SEED)
-        val f = java.util.Arrays.binarySearch(hotSorted, h) >= 0
-        if (size < k) {
-          var c = size
-          hh(c) = h; hs(c) = s; hf(c) = f; size += 1
-          while (c > 0 && gt(hf(c), hh(c), hs(c), hf((c - 1) / 2), hh((c - 1) / 2), hs((c - 1) / 2))) {
-            val p = (c - 1) / 2
-            val th = hh(c); val ts = hs(c); val tf = hf(c)
-            hh(c) = hh(p); hs(c) = hs(p); hf(c) = hf(p)
-            hh(p) = th; hs(p) = ts; hf(p) = tf
-            c = p
-          }
-        } else if (gt(hf(0), hh(0), hs(0), f, h, s)) {
-          hh(0) = h; hs(0) = s; hf(0) = f
-          var c = 0
-          var done = false
-          while (!done) {
-            val l = 2 * c + 1
-            val r = l + 1
-            var m = c
-            if (l < size && gt(hf(l), hh(l), hs(l), hf(m), hh(m), hs(m))) m = l
-            if (r < size && gt(hf(r), hh(r), hs(r), hf(m), hh(m), hs(m))) m = r
-            if (m == c) done = true
-            else {
-              val th = hh(c); val ts = hs(c); val tf = hf(c)
-              hh(c) = hh(m); hs(c) = hs(m); hf(c) = hf(m)
-              hh(m) = th; hs(m) = ts; hf(m) = tf
-              c = m
-            }
-          }
-        }
-        i += 1
-      }
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      if (size == k) hh else java.util.Arrays.copyOf(hh, size))
-  }
-}
-
 /** 128-permutation MinHash signature as a native expression — the exact
   * arithmetic of TextFunctions.minhashSig (h_i = ((2i+1)·h + i²+7) mod p
   * over h = xxhash64(s) mod p), hashing zero-copy over the UTF8String
@@ -255,7 +159,7 @@ object MinHashKernel {
     var j = 0
     while (j < n) {
       val s = arr.getUTF8String(j)
-      // null elements skipped (same convention as PrefixHashKernel);
+      // null elements skipped (same convention as HashedShinglesKernel);
       // mirrored in the UDF twin so bit-equality holds on such input
       if (s != null) {
         val h = java.lang.Math.floorMod(
@@ -299,8 +203,8 @@ object HashedShinglesKernel {
     * hash-side representation the beyond-cap verify prefilter ships
     * instead of the strings (~2.5× fewer bytes per candidate). Sorted
     * + distinct so `array_intersect` sizes are true set-intersection
-    * cardinalities; null ELEMENTS are skipped as in the prefix
-    * kernels. The image loses only hash-colliding distinctions —
+    * cardinalities; null ELEMENTS are skipped as in MinHashKernel.
+    * The image loses only hash-colliding distinctions —
     * PROBABILISTICALLY lossless for the prefilter: a collision between
     * an intersection element and a non-member raises |∩| or shrinks a
     * set size (measure nondecreasing), but one between two distinct
@@ -569,80 +473,6 @@ case class CharChunks(child: Expression, c: Int, l: Int)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-case class PrefixHashes(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_prefix_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val arrOk = SetSimTypeChecks.stringArrays(prettyName, Seq(left.dataType))
-    if (arrOk != TypeCheckResult.TypeCheckSuccess) arrOk
-    else if (right.dataType != DoubleType) {
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires DOUBLE for its threshold, got ${right.dataType.sql}")
-    } else TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    PrefixHashKernel.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[java.lang.Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.PrefixHashKernel.eval($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[PrefixHashKernel.evalHot]] as an expression: prefix under the
-  * hybrid (is-hot, hash, shingle) order. `hot` must be a FOLDABLE
-  * ARRAY<BIGINT> of high-df hashes (driver-computed, bounded by
-  * tokens/threshold) — it is evaluated once per plan, sorted once, and
-  * shipped to codegen as a reference object, not re-read per row. */
-case class PrefixHashesHot(first: Expression, second: Expression,
-                           third: Expression) extends TernaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_prefix_hashes_hot"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val arrOk = SetSimTypeChecks.stringArrays(prettyName, Seq(first.dataType))
-    if (arrOk != TypeCheckResult.TypeCheckSuccess) arrOk
-    else if (second.dataType != DoubleType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires DOUBLE for its threshold, got ${second.dataType.sql}")
-    else if (!third.dataType.isInstanceOf[ArrayType] ||
-        third.dataType.asInstanceOf[ArrayType].elementType != LongType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires ARRAY<BIGINT> for its hot set, got ${third.dataType.sql}")
-    else if (!third.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a foldable (literal) hot set")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  @transient private lazy val hotSorted: Array[Long] = {
-    val a = third.eval().asInstanceOf[ArrayData].toLongArray()
-    java.util.Arrays.sort(a)
-    a
-  }
-
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    PrefixHashKernel.evalHot(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[java.lang.Double], hotSorted)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val hotRef = ctx.addReferenceObj("hotHashes", hotSorted, "long[]")
-    nullSafeCodeGen(ctx, ev, (a, b, _) =>
-      s"${ev.value} = graft.functions.PrefixHashKernel.evalHot($a, $b, $hotRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 /** Exact Jaccard |a∩b| / |a∪b| between two string-array SETS — native

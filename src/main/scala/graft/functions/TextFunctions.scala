@@ -81,8 +81,6 @@ object TextFunctions {
     XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
   }
 
-  private[functions] def xxh64ForTest(s: String): Long = xxh64(s)
-
   /** Unicode NFC normalization (java.text.Normalizer — the JDK
     * implements the same Unicode standard DuckDB's nfc_normalize does,
     * so composed forms are byte-identical cross-engine). */
@@ -90,75 +88,6 @@ object TextFunctions {
     if (s == null) null
     else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC)
   }
-
-  // (hash, string) order; strings break ties only on xxh64 collisions
-  @inline private def pfxGt(h1: Long, s1: String, h2: Long, s2: String): Boolean =
-    h1 > h2 || (h1 == h2 && s1.compareTo(s2) > 0)
-
-  /** The k = (n − ⌈t·n⌉ + 1) smallest (xxh64, shingle) entries via a
-    * bounded PRIMITIVE max-heap (two parallel arrays, manual sift) —
-    * no tuple boxing, no Ordering dispatch; measured ~2× the
-    * PriorityQueue form. Output order is heap-internal (consumers use
-    * the SET). */
-  private[functions] def prefixSelect(
-      sh: Array[String], t: Double): Seq[(Long, String)] = {
-    val n = sh.length
-    if (n == 0) return Seq.empty
-    val k = n - math.ceil(t * n).toInt + 1
-    if (k <= 0) return Seq.empty
-    val hh = new Array[Long](k)
-    val hs = new Array[String](k)
-    var size = 0
-    var i = 0
-    while (i < n) {
-      val s = sh(i)
-      // null elements skipped (k still counts them — mirrors
-      // PrefixHashKernel exactly so the prefix-set parity pin holds)
-      if (s == null) { i += 1 }
-      else {
-      val h = xxh64(s)
-      if (size < k) {
-        var c = size
-        hh(c) = h; hs(c) = s; size += 1
-        while (c > 0 && pfxGt(hh(c), hs(c), hh((c - 1) / 2), hs((c - 1) / 2))) {
-          val p = (c - 1) / 2
-          val th = hh(c); val ts = hs(c)
-          hh(c) = hh(p); hs(c) = hs(p); hh(p) = th; hs(p) = ts
-          c = p
-        }
-      } else if (pfxGt(hh(0), hs(0), h, s)) {
-        hh(0) = h; hs(0) = s
-        var c = 0
-        var done = false
-        while (!done) {
-          val l = 2 * c + 1
-          val r = l + 1
-          var m = c
-          if (l < size && pfxGt(hh(l), hs(l), hh(m), hs(m))) m = l
-          if (r < size && pfxGt(hh(r), hs(r), hh(m), hs(m))) m = r
-          if (m == c) done = true
-          else {
-            val th = hh(c); val ts = hs(c)
-            hh(c) = hh(m); hs(c) = hs(m); hh(m) = th; hs(m) = ts
-            c = m
-          }
-        }
-      }
-      i += 1
-      }
-    }
-    (0 until size).map(j => (hh(j), hs(j)))
-  }
-
-  /** AllPairs/PPJoin prefix under the global (xxhash64, shingle) order
-    * over a precomputed shingle array (same xxh64 seed as Spark's
-    * `xxhash64`, so the selected set matches the sorted-slice form;
-    * pinned in TextFunctionsPropSpec). */
-  val prefixShingles = udf { (sh: Seq[String], t: Double) =>
-    if (sh == null || sh.isEmpty) Seq.empty[(Long, String)]
-    else prefixSelect(sh.toArray, t)
-  }.asNonNullable()
-
 
   /** 128-permutation MinHash signature over a shingle set:
     * h_i(s) = ((2i+1)·h + i²+7) mod p with h = xxhash64(s) mod p.

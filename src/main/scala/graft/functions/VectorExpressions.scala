@@ -156,19 +156,6 @@ object GraftFunctions {
     GraftColumnBridge.column(
       ContainmentSim(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 
-  /** Hash-only AllPairs prefix (SetSimExpressions.PrefixHashes). */
-  def prefixHashes(sh: Column, t: Column): Column =
-    GraftColumnBridge.column(
-      PrefixHashes(GraftColumnBridge.expression(sh), GraftColumnBridge.expression(t)))
-
-  /** Hybrid (is-hot, hash) AllPairs prefix
-    * (SetSimExpressions.PrefixHashesHot); `hot` must be a literal
-    * ARRAY<BIGINT> of high-df hashes. */
-  def prefixHashesHot(sh: Column, t: Column, hot: Column): Column =
-    GraftColumnBridge.column(
-      PrefixHashesHot(GraftColumnBridge.expression(sh),
-        GraftColumnBridge.expression(t), GraftColumnBridge.expression(hot)))
-
   /** Distinct sorted xxhash64 image of a shingle set
     * (SetSimExpressions.HashedShingles) — the verify prefilter's
     * hash-side representation. */
@@ -252,11 +239,6 @@ object GraftFunctions {
     "graft_hll_distinct" -> (exprs => HllDistinct(exprs.head).toAggregateExpression()),
     "graft_jaccard" -> (exprs => JaccardSim(exprs.head, exprs(1))),
     "graft_containment" -> (exprs => ContainmentSim(exprs.head, exprs(1))),
-    // SQL thresholds arrive as DECIMAL literals (`0.8` has no `d`
-    // suffix) — insert the double cast the implicit-cast tier would
-    // have added; a redundant double→double cast is optimized away.
-    "graft_prefix_hashes" -> (exprs => PrefixHashes(exprs.head,
-      org.apache.spark.sql.catalyst.expressions.Cast(exprs(1), DoubleType))),
     "graft_minhash_sig" -> (exprs => MinHashSig(exprs.head)),
     "graft_srp_sig" -> (exprs => SrpSig(exprs.head)),
     "graft_word_bucket" -> (exprs => WordBucket(exprs.head)),

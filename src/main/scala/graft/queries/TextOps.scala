@@ -456,8 +456,7 @@ object TextOps {
     // uniform corpora: the df pass adds two linear hash-only token-
     // inventory exchanges (groupBy h + join) and a per-doc window —
     // ~+70% on q33 alone (~1-2 s at bench SF), the measured premium for
-    // deleting a quadratic cliff. The hash-ordered form is kept below
-    // for the A/B record (outputs pinned identical in TextOpsSpec).
+    // deleting a quadratic cliff.
     val cands = pairCands(dfOrderedPrefix(docs, 4, 5))
     q33Verify(s, d, docs, cands)
       // the pair list is tiny (near-dups are rare by definition) and has
@@ -466,27 +465,11 @@ object TextOps {
       .transform(graft.CacheRegistry.trackPersist(_))
   }
 
-  /** Dev-only A/B twin of [[q33NgramJaccard]] with the beyond-cap hash
-    * prefilter OFF (r10 verdict task 1: the shuffle-regime prefilter
-    * had scale evidence on uniform corpora only) — SkewProbe runs both
-    * on a hot corpus past the broadcast cap and asserts identical rows;
-    * not part of the driver contract, no persist. Below the cap the
-    * flag is a no-op and both forms plan identically. */
-  private[graft] def q33NgramJaccardNoPrefilter(s: SparkSession, d: String): DataFrame = {
-    val docs = shingled(documents(s, d), verifySide(s, d).width)
-      .select(col("doc_id"), col("sh"), size(col("sh")).as("n"))
-    val cands = pairCands(dfOrderedPrefix(docs, 4, 5))
-    q33Verify(s, d, docs, cands, hashPrefilter = false)
-  }
-
-  /** Shared candidate-verify tail of q34 and the three q33 prefix-order
-    * forms (default df-ordered + the retired hash/hybrid A/B variants):
-    * exact-Jaccard verify of (doc_a, doc_b) candidates at 0.8 over the
-    * full shingle arrays. ONE body, so a verify-join change cannot
-    * silently desync the variants whose outputs the TextOpsSpec and
-    * SkewProbe pins assert identical. The first pin also fixes the
-    * candidate exchange's width: the verify joins inherit their stage
-    * parallelism from it, and the per-pair fold is the dominant CPU. */
+  /** Shared candidate-verify tail of q33 and q34: exact-Jaccard verify
+    * of (doc_a, doc_b) candidates at 0.8 over the full shingle arrays.
+    * The first pin also fixes the candidate exchange's width: the verify
+    * joins inherit their stage parallelism from it, and the per-pair
+    * fold is the dominant CPU. */
   private def q33Verify(s: SparkSession, d: String,
                         docs: DataFrame, cands: DataFrame,
                         hashPrefilter: Boolean = true): DataFrame = {
@@ -532,69 +515,6 @@ object TextOps {
           col("a.n") * 4 <= col("b.n") * 5 && col("b.n") * 4 <= col("a.n") * 5)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-
-  /** The retired hash-ordered prefix form (global order = xxhash64(s)
-    * alone, heap-selected per row by the native PrefixHashes
-    * expression — no df pass, no extra exchanges). Kept for the A/B
-    * record: ~70% cheaper on uniform corpora, but a hot shingle whose
-    * hash falls in the bottom ~20% quantile puts ~df²/25 candidates on
-    * one index key — 24.5 s vs the default's 2.9 s on the synthetic-sf1
-    * hot corpus (SKEW_r09 / BASELINE.md), diverging quadratically in
-    * the hot df. Output pinned identical to the default in
-    * TextOpsSpec. */
-  private[graft] def q33NgramJaccardHashOrdered(s: SparkSession, d: String): DataFrame = {
-    val docs = shingled(documents(s, d), verifySide(s, d).width)
-      .select(col("doc_id"), col("sh"), size(col("sh")).as("n"))
-    val pref = docs.select(col("doc_id"), col("n"),
-        explode(graft.functions.GraftFunctions.prefixHashes(
-          col("sh"), lit(0.8))).as("h"))
-    q33Verify(s, d, docs, pairCands(pref))
-  }
-
-  /** Hybrid (is-hot, hash) prefix-order candidate (SURVEY §7's deferred
-    * r9 trade, adjudicated in round 10 — BASELINE.md): ONE partial-agg
-    * df pass finds the hashes whose df exceeds max(16, N/100), the
-    * bounded hot list broadcasts into the native kernel as a literal,
-    * and the prefix is heap-selected per row under (is-hot, h, s) —
-    * hot shingles order last and fall out of every prefix exactly as in
-    * the full df-order, but WITHOUT the per-doc df join + window
-    * (two exchanges + a sort saved). Lossless for the same reason any
-    * global order is; outputs pinned identical to the df-ordered
-    * default in TextOpsSpec.
-    *
-    * The collect is BOUNDED BY CONSTRUCTION: at most totalTokens /
-    * threshold hashes clear an absolute-df cutoff, and the loud guard
-    * below enforces the broadcast-size contract rather than letting a
-    * pathological corpus grow the plan silently. The residual exposure
-    * vs full df-order: a key with df JUST UNDER the cutoff still costs
-    * ~(0.2·df)²/2 candidates — the threshold turns the df-order's
-    * by-construction immunity into a knob, which is why this stays a
-    * measured A/B variant until the probe says the knob is safe. */
-  private def hybridPrefix(docs: DataFrame, t: Double): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nDocs = docs.count()
-    val thr = math.max(16L, nDocs / 100L)
-    val hot = docs.select(explode(col("sh")).as("s"))
-      .select(xxhash64(col("s")).as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("dfreq"))
-      .filter(col("dfreq") > thr)
-      .select(col("h")).as[Long].collect()
-    require(hot.length <= (1 << 20),
-      s"hybridPrefix: ${hot.length} hot hashes exceed the 1M broadcast " +
-        "contract — raise the df threshold or use the full df-order")
-    docs.select(col("doc_id"), col("n"),
-      explode(graft.functions.GraftFunctions.prefixHashesHot(
-        col("sh"), lit(t), typedLit(hot.sorted.toSeq))).as("h"))
-  }
-
-  /** q33 under [[hybridPrefix]] — the A/B variant for the round-10
-    * adjudication (dev name q33_hybrid in SkewProbe). */
-  private[graft] def q33NgramJaccardHybridOrdered(s: SparkSession, d: String): DataFrame = {
-    val docs = shingled(documents(s, d), verifySide(s, d).width)
-      .select(col("doc_id"), col("sh"), size(col("sh")).as("n"))
-    q33Verify(s, d, docs, pairCands(hybridPrefix(docs, 0.8)))
-  }
 
   /** Shared DuckDB oracle for q33/q34: exact pairwise Jaccard at
     * threshold num/den (prefix-filter candidates + exact verify — same
@@ -980,17 +900,7 @@ object TextOps {
     * length-ratio pruning (the size-mismatched pairs are exactly the
     * point), B-side index bigger by construction. B's entries hash with
     * the native codegen'd xxhash64 (same seed as the kernel's). */
-  def q88ContainmentJoin(s: SparkSession, d: String): DataFrame =
-    q88Containment(s, d, hashPrefilter = true)
-
-  /** Dev-only A/B twin with the beyond-cap hash prefilter OFF (the
-    * q33NgramJaccardNoPrefilter treatment) — SkewProbe's adversarial
-    * prefilter A/B + losslessness check; not in the driver contract. */
-  private[graft] def q88ContainmentJoinNoPrefilter(s: SparkSession, d: String): DataFrame =
-    q88Containment(s, d, hashPrefilter = false)
-
-  private def q88Containment(s: SparkSession, d: String,
-                             hashPrefilter: Boolean): DataFrame = {
+  def q88ContainmentJoin(s: SparkSession, d: String): DataFrame = {
     import graft.functions.GraftFunctions.containmentSim
     val docs = shingled(documents(s, d), verifySide(s, d).width)
       .select(col("doc_id"), col("sh"), size(col("sh")).as("n"))
@@ -1016,7 +926,7 @@ object TextOps {
     v.verify(cands,
         "id_a", docs.select(col("doc_id").as("id_a"), col("sh").as("sha")),
         "id_b", docs.select(col("doc_id").as("id_b"), col("sh").as("shb")),
-        (i, na, _) => i.cast("double") / na, 0.9, hashPrefilter)
+        (i, na, _) => i.cast("double") / na, 0.9)
       .withColumn("containment", containmentSim(col("sha"), col("shb")))
       .filter(col("containment") >= 0.9)
       .select(col("id_a").as("excerpt_id"), col("id_b").as("container_id"),
@@ -2727,13 +2637,12 @@ object TextOps {
   def q106BpeEncode(s: SparkSession, d: String): DataFrame =
     q106BpeEncodeWith(s, d, joinVocab(s, d, _, _))
 
-  /** Dev-only gate A/B twin (r15, the q33_hashorder pattern): q106 with
-    * the tokenize join FORCED to the broadcast regime, so SkewProbe can
-    * pin shuffled == broadcast on a corpus where the gate actually
-    * selects the shuffle — TextOpsSpec's branch equality runs below the
-    * gate (broadcast side trivially right there); this handle makes the
-    * across-the-gate check non-vacuous. Not part of the driver
-    * contract. */
+  /** Dev-only gate A/B twin (r15): q106 with the tokenize join FORCED
+    * to the broadcast regime, so SkewProbe can pin shuffled == broadcast
+    * on a corpus where the gate actually selects the shuffle —
+    * TextOpsSpec's branch equality runs below the gate (broadcast side
+    * trivially right there); this handle makes the across-the-gate
+    * check non-vacuous. Not part of the driver contract. */
   private[graft] def q106BpeEncodeBroadcast(s: SparkSession, d: String): DataFrame =
     q106BpeEncodeWith(s, d, (w, p) => w.join(broadcast(p), Seq("word")))
 

@@ -46,8 +46,7 @@ class VerifProcessor(passes: Rec => Boolean,
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     // the 600 s timeout is a PROCESSING-TIME timer: wiring this
-    // processor with TimeMode.None (the pattern the stateless-timer
-    // processors in Pipeline use) would fail obscurely at the first
+    // processor with TimeMode.None would fail obscurely at the first
     // registerTimer — fail fast with the actual requirement instead
     require(timeMode == org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
       s"VerifProcessor requires TimeMode.ProcessingTime (600 s timeout " +

@@ -449,16 +449,6 @@ object Pipeline {
         StateOps.chirpFlatMap)
   }
 
-  /** The same ChirpStack state machine on Spark 4's transformWithState
-    * (RocksDB-backed; requires the RocksDB state store provider).
-    * Equality with [[chirpEnvelopes]] is pinned by ChirpProcessorSpec. */
-  def chirpEnvelopesTws(recs: Dataset[Rec])(implicit s: SparkSession): Dataset[Envelope] = {
-    import s.implicits._
-    recs.groupByKey(_.collectorId)
-      .transformWithState(new graft.state.ChirpProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-  }
-
   /** Generic-MQTT: normalize → Dataset[Rec] (routes radio|perr_buf). */
   def toGenericRecs(df: DataFrame)(implicit s: SparkSession): Dataset[Rec] = {
     import s.implicits._
@@ -481,14 +471,6 @@ object Pipeline {
     recs.groupByKey(_.collectorId)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         StateOps.locationFlatMap)
-  }
-
-  /** F4 on transformWithState (RocksDB-backed), same kernel. */
-  def ttnEnvelopesTws(recs: Dataset[Rec])(implicit s: SparkSession): Dataset[Envelope] = {
-    import s.implicits._
-    recs.groupByKey(_.collectorId)
-      .transformWithState(new graft.state.LocationProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
   }
 
   /** Batch fast path: ChirpStack raw messages → enveloped frame in ONE

@@ -24,16 +24,17 @@ import scala.collection.mutable
   * idle fraction is 999/1000).
   *
   * The engine's designs are expected to bound this WITHOUT new code:
-  * q33/q88's prefixes keep only each doc's lowest-hash shingles, so a
-  * hot shingle enters at most the prefixes whose docs have few rarer
-  * tokens; the candidate joins are sort-merge under AQE, whose skew
-  * split divides an inflated partition across tasks even for a single
-  * hot key (the other side's partition is replicated per split). This
-  * artifact turns that expectation into a measured number per query —
-  * and if a ratio blows up on the hot corpus but not the control, that
-  * query gets an ops/Skew mitigation with the before number recorded.
+  * q33/q88's prefixes keep only each doc's rarest shingles (global
+  * document-frequency order), so a hot shingle sorts last and falls
+  * out of every prefix; the candidate joins are sort-merge under AQE,
+  * whose skew split divides an inflated partition across tasks even
+  * for a single hot key (the other side's partition is replicated per
+  * split). This artifact turns that expectation into a measured number
+  * per query — and if a ratio blows up on the hot corpus but not the
+  * control, that query gets an ops/Skew mitigation with the before
+  * number recorded.
   *
-  * runMain graft.tools.SkewProbe [outJson]   (default SKEW_r09.json)
+  * runMain graft.tools.SkewProbe [outJson]   (default SKEW_r10.json)
   * env: SKEW_BASE_SF (default /root/testdata/sf0.1),
   *      SKEW_QUERIES (default the dedup-family four).
   */
@@ -43,25 +44,20 @@ object SkewProbe {
     val baseSf = sys.env.getOrElse("SKEW_BASE_SF", "/root/testdata/sf0.1")
     val queries = sys.env.get("SKEW_QUERIES")
       .map(_.split(",").map(_.trim).toSeq)
-      .getOrElse(Seq("q32_dedup_exact", "q33_ngram_jaccard", "q33_hashorder",
+      .getOrElse(Seq("q32_dedup_exact", "q33_ngram_jaccard",
         "q34_minhash_lsh", "q88_containment_join"))
-    // the retired hash-ordered q33 rides along under a dev name (not
-    // part of the driver contract) so the A/B stays reproducible; its
-    // output is asserted equal to the df-ordered default below. The
-    // _nopref twins (r11: beyond-cap prefilter A/B on a hot corpus)
-    // run the same queries with the shuffle-regime hash prefilter OFF.
+    // dev names for the live forms a regime gate chooses between (not
+    // part of the driver contract), so each form can be probed and
+    // A/B'd on the corpus where the gate fires
     val extra: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      Map("q33_hashorder" -> (graft.queries.TextOps.q33NgramJaccardHashOrdered _),
-        "q33_hybrid" -> (graft.queries.TextOps.q33NgramJaccardHybridOrdered _),
-        "q33_nopref" -> (graft.queries.TextOps.q33NgramJaccardNoPrefilter _),
-        "q88_nopref" -> (graft.queries.TextOps.q88ContainmentJoinNoPrefilter _),
+      Map(
         // r12: the hot-gram-safe two-pass q99 (map-combined count +
         // semi join) — the A/B against the count-window default
         "q99_twopass" -> (graft.queries.TextOps.q99SubstringDedupTwoPass _),
         // r13: the count-window form under a dev name — since the r13
         // regime gate, `q99_substring_dedup` on a hot corpus probes the
         // AUTO-selected two-pass, so the window-on-hot A/B needs this
-        // explicit handle (the q33_hashorder pattern)
+        // explicit handle
         "q99_window" -> (graft.queries.TextOps.q99SubstringDedupWindow _),
         // r15: tokenize-join gate twins — broadcast FORCED, so the
         // shuffled-vs-broadcast equality can be pinned on a corpus
@@ -224,42 +220,11 @@ object SkewProbe {
 
     def lookup(q: String) = extra.get(q).orElse(graft.SparkEntry.queries.get(q))
 
-    // losslessness cross-check: both prefix orders must produce the
-    // EXACT q33 rows on both corpora before the timings mean anything
-    // (only when a q33 variant is actually being probed — the check
-    // costs four full q33 runs at the probe decade).
-    // SKEW_CHECK=0 skips it: on a BEYOND-CAP hot corpus the retired
-    // hash-ordered variant is the known quadratic cliff (df ≈ 150k at
-    // sf10 → ~df²/25 candidates per hot key ≈ 10^9 — it would never
-    // finish, and its behavior is already adjudicated at sf0.1/sf1);
-    // the r11 beyond-cap runs use the pref/nopref equality check below
-    // instead, which exercises only the bounded df-ordered plan.
-    val checkQ33 = queries.exists(_.startsWith("q33")) &&
-      !sys.env.get("SKEW_CHECK").contains("0")
-    for ((label, dir) <- Seq("base" -> baseSf, "hotkey" -> skewDir) if checkQ33) {
-      val a = graft.queries.TextOps.q33NgramJaccard(spark, dir)
-        .collect().map(_.toString).sorted.toSeq
-      val b = graft.queries.TextOps.q33NgramJaccardHashOrdered(spark, dir)
-        .collect().map(_.toString).sorted.toSeq
-      require(a == b, s"q33 prefix-order variants diverge on $label")
-      if (queries.contains("q33_hybrid")) {
-        val c = graft.queries.TextOps.q33NgramJaccardHybridOrdered(spark, dir)
-          .collect().map(_.toString).sorted.toSeq
-        require(a == c, s"q33 hybrid prefix order diverges on $label")
-      }
-      println(s"[skewprobe] q33 variants identical on $label (${a.size} pairs)")
-      Session.isolate(spark)
-    }
-
-    // adversarial losslessness (r11): with SKEW_AB=1, every *_nopref
-    // query probed must produce EXACTLY the default (prefilter-on)
-    // rows on the HOT corpus — the probabilistic-losslessness contract
-    // exercised where it matters, beyond the broadcast cap with
-    // df ≈ 0.3·N hot shingles inflating every surviving pair's hash
-    // image. The collect is safe: outputs are tiny pair lists.
+    // adversarial losslessness: with SKEW_AB=1, every dev-named form
+    // probed must produce EXACTLY its twin's rows on the HOT corpus.
+    // The collect is safe: outputs are small.
     if (sys.env.get("SKEW_AB").contains("1")) {
-      val twin = Map("q33_nopref" -> "q33_ngram_jaccard",
-        "q88_nopref" -> "q88_containment_join",
+      val twin = Map(
         // r12/r13: the two q99 FORMS must agree on the hot corpus
         // (TextOpsSpec pins fixtures; this pins the corpus the A/B
         // rows are actually recorded on). Twinned form-vs-form, NOT

@@ -66,12 +66,9 @@ class SetSimExpressionsSpec extends SparkSuite {
       "SELECT graft_jaccard(a, b) j, graft_containment(a, b) c FROM ss WHERE id = 1").collect().head
     assert(out.getDouble(0) == 2.0 / 4.0)
     assert(out.getDouble(1) == 2.0 / 3.0)
-    val sketch = spark.sql(
-      """SELECT size(graft_prefix_hashes(a, 0.8d)) np,
-        |       size(graft_minhash_sig(a)) ns FROM ss WHERE id = 6""".stripMargin)
-      .collect().head
-    assert(sketch.getInt(0) == 200 - 160 + 1)
-    assert(sketch.getInt(1) == 128)
+    val ns = spark.sql("SELECT size(graft_minhash_sig(a)) ns FROM ss WHERE id = 6")
+      .collect().head.getInt(0)
+    assert(ns == 128)
   }
 
   test("native SrpSig matches the reference loop; SQL + analysis gate") {
@@ -112,21 +109,13 @@ class SetSimExpressionsSpec extends SparkSuite {
     assert(e.getMessage.toLowerCase.contains("requires"))
   }
 
-  test("SQL: decimal-literal threshold is cast; bad types fail at analysis") {
+  test("SQL: bad types fail at analysis") {
     GraftFunctions.ensureRegistered(spark)
-    sets.createOrReplaceTempView("ss")
-    // `0.8` without the d suffix is a DECIMAL literal — the registry
-    // builder inserts the double cast, so this must work...
-    val np = spark.sql(
-      "SELECT size(graft_prefix_hashes(a, 0.8)) np FROM ss WHERE id = 6")
-      .collect().head.getInt(0)
-    assert(np == 200 - 160 + 1)
-    // ...and a wrong-typed argument must be an ANALYSIS error (clear
-    // message), not a codegen failure + interpreted-path CCE.
+    // a wrong-typed argument must be an ANALYSIS error (clear message),
+    // not a codegen failure + interpreted-path CCE
     Seq("SELECT graft_jaccard(1, 2)",
         "SELECT graft_containment(array('x'), 'y')",
         "SELECT graft_minhash_sig(7)",
-        "SELECT graft_prefix_hashes(array(1, 2), 0.8)",
         "SELECT graft_dot(array('a'), array('b'))").foreach { q =>
       val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
       assert(e.getMessage.toLowerCase.contains("requires"), s"$q → ${e.getMessage}")
@@ -175,16 +164,15 @@ class SetSimExpressionsSpec extends SparkSuite {
       GraftFunctions.minhashSig(col("withNulls")).as("kn"),
       graft.functions.TextFunctions.minhashSig(col("withNulls")).as("un"),
       GraftFunctions.minhashSig(col("clean")).as("kc"),
-      GraftFunctions.prefixHashes(col("withNulls"), lit(0.999)).as("pn"),
-      GraftFunctions.prefixHashes(col("clean"), lit(0.999)).as("pc"))
+      GraftFunctions.hashedShingles(col("withNulls")).as("hn"),
+      GraftFunctions.hashedShingles(col("clean")).as("hc"))
       .collect().head
     // kernel == UDF on null-carrying input (bit-equality pin extended)
     assert(r.getSeq[Long](0) == r.getSeq[Long](1))
     // nulls contribute nothing to the signature
     assert(r.getSeq[Long](0) == r.getSeq[Long](2))
-    // the prefix SET from null-carrying input is a superset relation:
-    // k counts raw length but only non-null shingles are hashed
-    assert(r.getSeq[Long](4).toSet.subsetOf(r.getSeq[Long](3).toSet))
+    // the verify prefilter's hash image skips them the same way
+    assert(r.getSeq[Long](3) == r.getSeq[Long](4))
   }
 
   test("native CharGrams matches the quadratic SQL twin row-for-row, multibyte included (r13)") {

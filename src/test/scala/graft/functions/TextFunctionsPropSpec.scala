@@ -78,26 +78,4 @@ object TextFunctionsPropSpec extends Properties("TextFunctions") {
         else a.count(b.toSet.contains).toDouble / a.length
       TextFunctions.containmentOf(a.toSeq, b.toSeq) == expect
     }
-
-  property("prefixSelect == sorted-slice reference (set equality)") =
-    forAll(genShingles, Gen.choose(0.1, 0.95)) { (sh, t) =>
-      val got = TextFunctions.prefixSelect(sh, t).toSet
-      val n = sh.length
-      val k = n - math.ceil(t * n).toInt + 1
-      val expect =
-        if (n == 0 || k <= 0) Set.empty[(Long, String)]
-        else sh.map(s => (TextFunctions.xxh64ForTest(s), s))
-          .sortBy(identity).take(k).toSet
-      got == expect
-    }
-
-  property("native PrefixHashKernel == prefixSelect hashes (set equality)") =
-    forAll(genShingles, Gen.choose(0.1, 0.95)) { (sh, t) =>
-      import org.apache.spark.unsafe.types.UTF8String
-      val arr = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        sh.map(s => UTF8String.fromString(s): Any))
-      val got = PrefixHashKernel.eval(arr, t).toLongArray().toSet
-      val expect = TextFunctions.prefixSelect(sh, t).map(_._1).toSet
-      got == expect
-    }
 }

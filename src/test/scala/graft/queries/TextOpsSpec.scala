@@ -17,20 +17,6 @@ class TextOpsSpec extends SparkSuite {
     assert(TextOps.q35Simhash(spark, sf).collect().toSeq == broadcastRows)
   }
 
-  test("q33 hash-ordered prefix variant equals the df-ordered default") {
-    // both are lossless AllPairs prefix filters under different global
-    // orders; the exact verify makes the outputs identical — pinned so
-    // the retired hash-ordered form (the SKEW_r09 A/B record) stays a
-    // faithful baseline for future re-measurement
-    val a = TextOps.q33NgramJaccard(spark, sf).collect().toSeq
-    val b = TextOps.q33NgramJaccardHashOrdered(spark, sf).collect().toSeq
-    assert(a.nonEmpty)
-    assert(b == a)
-    // the round-10 hybrid (is-hot, hash) candidate too — same losslessness
-    val c = TextOps.q33NgramJaccardHybridOrdered(spark, sf).collect().toSeq
-    assert(c == a)
-  }
-
   test("beyond-cap hash-prefilter verify is output-identical to the broadcast regime") {
     // same REAL corpus, n_chars inflated so verifySide's estimate
     // crosses the 64 MB broadcast cap: the shuffle regime (shuffled-hash
@@ -55,13 +41,6 @@ class TextOpsSpec extends SparkSuite {
     val a88 = TextOps.q88ContainmentJoin(spark, sf).collect().toSeq
     val b88 = TextOps.q88ContainmentJoin(spark, dir).collect().toSeq
     assert(a88.nonEmpty && b88 == a88)
-    // the _nopref dev twins (SkewProbe's prefilter A/B) must stay
-    // output-identical in the shuffle regime too — a desync here would
-    // silently invalidate every future A/B row
-    assert(TextOps.q33NgramJaccardNoPrefilter(spark, dir)
-      .collect().toSeq == a33)
-    assert(TextOps.q88ContainmentJoinNoPrefilter(spark, dir)
-      .collect().toSeq == a88)
     // q99's two-pass (map-combined count + semi join) dev variant must
     // match the count-window default in BOTH regimes — it is the
     // recorded hot-gram mitigation (SKEW_r12/BASELINE r12), and a

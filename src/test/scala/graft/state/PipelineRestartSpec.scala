@@ -12,68 +12,50 @@ import org.apache.spark.sql.streaming.OutputMode
   * what an uninterrupted run produces — the device map, pairing buffer,
   * held location and emit decisions all live in the recovered state, so
   * any divergence (a re-emitted envelope, a lost buffered packet, a
-  * forgotten device identity) shows up as a diff. Every case runs on
-  * both hosts: the flatMapGroupsWithState host on the default state
-  * store (what startEnvelopeSink and every other caller runs) and its
-  * transformWithState twin on RocksDB. Complements ChirpProcessorSpec
-  * (host equality) and CheckpointRecoverySpec (dedup op). */
+  * forgotten device identity) shows up as a diff. The hosts are the
+  * flatMapGroupsWithState ones startEnvelopeSink runs, on the session's
+  * state store (StateOpsSpec and VerifProcessorSpec cover RocksDB).
+  * Complements CheckpointRecoverySpec (dedup op). */
 class PipelineRestartSpec extends SparkSuite {
-  import PipelineRestartSpec.Host
-
-  private val chirpHosts = Seq(
-    Host("chirp_fmgws", rocksDb = false, Pipeline.chirpEnvelopes(_)(_)),
-    Host("chirp_tws", rocksDb = true, Pipeline.chirpEnvelopesTws(_)(_)))
-  private val locationHosts = Seq(
-    Host("loc_fmgws", rocksDb = false, Pipeline.ttnEnvelopes(_)(_)),
-    Host("loc_tws", rocksDb = true, Pipeline.ttnEnvelopesTws(_)(_)))
 
   /** Runs `host` over three batches twice — once uninterrupted into a
     * memory sink, once stopped after batch 1 and restarted from the same
     * checkpoint into a parquet sink, with batch 2 arriving while the query
     * is DOWN — and returns (uninterrupted, restarted), each sorted. */
-  private def restart(host: Host, tag: String, b1: Seq[Rec], b2: Seq[Rec],
+  private def restart(host: Dataset[Rec] => Dataset[Envelope], tag: String,
+                      b1: Seq[Rec], b2: Seq[Rec],
                       b3: Seq[Rec]): (Seq[Envelope], Seq[Envelope]) = {
     implicit val s: SparkSession = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    if (host.rocksDb) spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else spark.conf.unset(key)
-    try {
-      val name = s"${tag}_${host.id}_cont"
-      val contStream = MemoryStream[Rec]
-      val contQ = host.envelopes(contStream.toDS(), s)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
-      val expected = try {
-        Seq(b1, b2, b3).foreach { b => contStream.addData(b: _*); contQ.processAllAvailable() }
-        spark.table(name).as[Envelope].collect().toSeq.sortBy(_.toString)
-      } finally contQ.stop()
+    val name = s"${tag}_cont"
+    val contStream = MemoryStream[Rec]
+    val contQ = host(contStream.toDS())
+      .writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Append).start()
+    val expected = try {
+      Seq(b1, b2, b3).foreach { b => contStream.addData(b: _*); contQ.processAllAvailable() }
+      spark.table(name).as[Envelope].collect().toSeq.sortBy(_.toString)
+    } finally contQ.stop()
 
-      val ckpt = java.nio.file.Files.createTempDirectory(s"${tag}_ckpt").toString
-      val outDir = java.nio.file.Files.createTempDirectory(s"${tag}_sink").toString
-      val stream = MemoryStream[Rec]
-      def start() = host.envelopes(stream.toDS(), s)
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append).start()
-      val q1 = start()
-      try {
-        stream.addData(b1: _*); q1.processAllAvailable()
-      } finally q1.stop()
-      stream.addData(b2: _*) // arrives while down
-      val q2 = start()
-      val actual = try {
-        stream.addData(b3: _*); q2.processAllAvailable()
-        spark.read.parquet(outDir).as[Envelope].collect().toSeq.sortBy(_.toString)
-      } finally q2.stop()
-      (expected, actual)
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val ckpt = java.nio.file.Files.createTempDirectory(s"${tag}_ckpt").toString
+    val outDir = java.nio.file.Files.createTempDirectory(s"${tag}_sink").toString
+    val stream = MemoryStream[Rec]
+    def start() = host(stream.toDS())
+      .writeStream.format("parquet")
+      .option("path", outDir).option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Append).start()
+    val q1 = start()
+    try {
+      stream.addData(b1: _*); q1.processAllAvailable()
+    } finally q1.stop()
+    stream.addData(b2: _*) // arrives while down
+    val q2 = start()
+    val actual = try {
+      stream.addData(b3: _*); q2.processAllAvailable()
+      spark.read.parquet(outDir).as[Envelope].collect().toSeq.sortBy(_.toString)
+    } finally q2.stop()
+    (expected, actual)
   }
 
   private def mkUp(daHex: String, fCnt: Int): String = graft.codec.Lorawan.b64encode(
@@ -115,13 +97,10 @@ class PipelineRestartSpec extends SparkSuite {
     val recs = mixedRecs
     val (b1, rest) = recs.splitAt(30)
     val (b2, b3) = rest.splitAt(30)
-    chirpHosts.foreach { host =>
-      withClue(host.id) {
-        val (expected, actual) = restart(host, "chirp", b1, b2, b3)
-        assert(actual.nonEmpty)
-        assert(actual == expected)
-      }
-    }
+    implicit val s: SparkSession = spark
+    val (expected, actual) = restart(Pipeline.chirpEnvelopes(_), "chirp", b1, b2, b3)
+    assert(actual.nonEmpty)
+    assert(actual == expected)
   }
 
   test("F1/F2 chirp restart: devices map, pairing buffer, crash residue all survive") {
@@ -160,30 +139,26 @@ class PipelineRestartSpec extends SparkSuite {
     val batchExpected = Pipeline.chirpEnvelopes((b1 ++ b2 ++ b3).toDS())
       .collect().toSeq.sortBy(_.toString)
 
-    chirpHosts.foreach { host =>
-      withClue(host.id) {
-        val (expected, actual) = restart(host, "chirp_f12", b1, b2, b3)
-        assert(expected == batchExpected)
-        assert(actual == expected)
+    val (expected, actual) = restart(Pipeline.chirpEnvelopes(_), "chirp_f12", b1, b2, b3)
+    assert(expected == batchExpected)
+    assert(actual == expected)
 
-        // and the recovered semantics are the intended ones, not just
-        // self-consistent:
-        // pair-hit envelope carries the pre-restart crash residue (up-b),
-        // the buffered up-c, and the app message, enriched from the app row
-        val pairEnv = actual.find(_.messages.exists(_.message == "app-c")).get
-        assert(pairEnv.messages.map(_.message) == Seq("up-b", "up-c", "app-c"))
-        assert(pairEnv.packet.get.devEui.contains("eui-app"))
-        assert(pairEnv.packet.get.latitude.contains(4.0))
-        // join-sourced map entry recovered: up-a enriched with joined1
-        val upAEnv = actual.find(_.messages.exists(_.message == "up-a")).get
-        assert(upAEnv.packet.get.devEui.contains("joined1"))
-        // app-sourced map entry written post-restart enriches the b3 uplink
-        val upC2Env = actual.find(_.messages.exists(_.message == "up-c2")).get
-        assert(upC2Env.packet.get.devEui.contains("eui-app"))
-        assert(upC2Env.packet.get.appName.contains("appX"))
-        assert(upC2Env.packet.get.devName.contains("devX"))
-      }
-    }
+    // and the recovered semantics are the intended ones, not just
+    // self-consistent:
+    // pair-hit envelope carries the pre-restart crash residue (up-b),
+    // the buffered up-c, and the app message, enriched from the app row
+    val pairEnv = actual.find(_.messages.exists(_.message == "app-c")).get
+    assert(pairEnv.messages.map(_.message) == Seq("up-b", "up-c", "app-c"))
+    assert(pairEnv.packet.get.devEui.contains("eui-app"))
+    assert(pairEnv.packet.get.latitude.contains(4.0))
+    // join-sourced map entry recovered: up-a enriched with joined1
+    val upAEnv = actual.find(_.messages.exists(_.message == "up-a")).get
+    assert(upAEnv.packet.get.devEui.contains("joined1"))
+    // app-sourced map entry written post-restart enriches the b3 uplink
+    val upC2Env = actual.find(_.messages.exists(_.message == "up-c2")).get
+    assert(upC2Env.packet.get.devEui.contains("eui-app"))
+    assert(upC2Env.packet.get.appName.contains("appX"))
+    assert(upC2Env.packet.get.devName.contains("devX"))
   }
 
   test("F4 location host restart: held location AND pending crash buffer survive") {
@@ -203,24 +178,14 @@ class PipelineRestartSpec extends SparkSuite {
     val b2 = Seq(r(6, "radio", "up1"), r(7, "raw", "other1"))
     val b3 = Seq(r(8, "perr_buf", "crash3"), r(9, "radio", "up2"))
 
-    locationHosts.foreach { host =>
-      withClue(host.id) {
-        val (expected, actual) = restart(host, "loc", b1, b2, b3)
-        assert(actual == expected)
-        // and the recovered semantics are the intended ones, not just
-        // self-consistent: the post-restart radio envelope carries the
-        // pre-restart crash buffer and the held location
-        val up1Env = actual.find(_.messages.exists(_.message == "up1")).get
-        assert(up1Env.messages.map(_.message) == Seq("crash1", "crash2", "up1"))
-        assert(up1Env.packet.get.latitude.contains(9.0))
-      }
-    }
+    implicit val s: SparkSession = spark
+    val (expected, actual) = restart(Pipeline.ttnEnvelopes(_), "loc", b1, b2, b3)
+    assert(actual == expected)
+    // and the recovered semantics are the intended ones, not just
+    // self-consistent: the post-restart radio envelope carries the
+    // pre-restart crash buffer and the held location
+    val up1Env = actual.find(_.messages.exists(_.message == "up1")).get
+    assert(up1Env.messages.map(_.message) == Seq("crash1", "crash2", "up1"))
+    assert(up1Env.packet.get.latitude.contains(9.0))
   }
-}
-
-object PipelineRestartSpec {
-  /** One stateful host; `rocksDb` hosts need the RocksDB state store,
-    * the others run on the session default. */
-  final case class Host(id: String, rocksDb: Boolean,
-      envelopes: (Dataset[Rec], SparkSession) => Dataset[Envelope])
 }

@@ -21,6 +21,13 @@ class StateOpsSpec extends SparkSuite {
       Option(lat).map(_.toDouble), Option(lat).map(_.toDouble), Option(lat).map(_.toDouble),
       None, None, 1000 + seq)
 
+  /** A data uplink PHYPayload (b64) for `daHex` at frame counter `fCnt`. */
+  private def mkUp(daHex: String, fCnt: Int): String = graft.codec.Lorawan.b64encode(
+    Array(0x40.toByte) ++ graft.codec.Lorawan.hexToLe(daHex) ++
+      Array(0x80.toByte) ++ Array((fCnt & 0xff).toByte, ((fCnt >> 8) & 0xff).toByte) ++
+      Array(1.toByte) ++ Array(10.toByte, 20.toByte) ++
+      graft.codec.Lorawan.hexToBytes("00000000"))
+
   private def run(recs: Rec*): (ChirpState, Seq[Envelope]) =
     recs.foldLeft((ChirpState.empty, Seq.empty[Envelope])) {
       case ((st, acc), r) =>
@@ -246,12 +253,6 @@ class StateOpsSpec extends SparkSuite {
     import s.implicits._
     import org.apache.spark.sql.functions._
 
-    def mkUp(daHex: String, fCnt: Int): String = graft.codec.Lorawan.b64encode(
-      Array(0x40.toByte) ++ graft.codec.Lorawan.hexToLe(daHex) ++
-        Array(0x80.toByte) ++ Array((fCnt & 0xff).toByte, ((fCnt >> 8) & 0xff).toByte) ++
-        Array(1.toByte) ++ Array(10.toByte, 20.toByte) ++
-        graft.codec.Lorawan.hexToBytes("00000000"))
-
     val das = Seq("017fc1c4", "0a0b0c0d", "11223344", "deadbeef", "00000001", "cafebabe")
     val rnd = new scala.util.Random(42)
     val rows = (1 to 400).map { i =>
@@ -309,12 +310,6 @@ class StateOpsSpec extends SparkSuite {
     implicit val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-
-    def mkUp(daHex: String, fCnt: Int): String = graft.codec.Lorawan.b64encode(
-      Array(0x40.toByte) ++ graft.codec.Lorawan.hexToLe(daHex) ++
-        Array(0x80.toByte) ++ Array((fCnt & 0xff).toByte, ((fCnt >> 8) & 0xff).toByte) ++
-        Array(1.toByte) ++ Array(10.toByte, 20.toByte) ++
-        graft.codec.Lorawan.hexToBytes("00000000"))
     def jsonRadio(pay: String) =
       s"""{"phyPayload":"$pay","rxInfo":{"channel":1,"rfChain":0,"crcStatus":1,"codeRate":"4/5","rssi":-60,"loRaSNR":9.0,"size":17,"timestamp":42,"frequency":868100000,"mac":"aabb","dataRate":{"modulation":"LORA","spreadFactor":7,"bandwidth":125}}}"""
     def protoRadio(pay: String) =
@@ -576,31 +571,87 @@ class StateOpsSpec extends SparkSuite {
   test("ChirpStack pipeline in Structured Streaming equals batch result") {
     implicit val s = spark
     import s.implicits._
-    val df = chirpSeq.toDF("topic", "message", "seq")
-      .withColumn("data_collector_id", org.apache.spark.sql.functions.lit(1L))
-      .withColumn("organization_id", org.apache.spark.sql.functions.lit(2L))
-      .withColumn("arrival_ts",
-        org.apache.spark.sql.functions.to_timestamp(
-          org.apache.spark.sql.functions.lit("2024-06-01 12:00:00")))
-    val batchRecs = Pipeline.toChirpRecs(df).collect().sortBy(_.seq)
-
+    import org.apache.spark.sql.functions._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val stream = MemoryStream[Rec]
-    val q = Pipeline.chirpEnvelopes(stream.toDS())
-      .writeStream.format("memory").queryName("chirp_envs")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // two micro-batches split mid-pairing: state must carry across
-      stream.addData(batchRecs.take(1).toIndexedSeq)
-      q.processAllAvailable()
-      stream.addData(batchRecs.drop(1).toIndexedSeq)
-      q.processAllAvailable()
-      val streamed = spark.table("chirp_envs").as[Envelope].collect().sortBy(_.ts)
-      val batch = Pipeline.chirpEnvelopes(Pipeline.toChirpRecs(df))
-        .collect().sortBy(_.ts)
-      assert(streamed.length == batch.length)
-      assert(streamed.map(_.packet.flatMap(_.devEui)).toSeq ==
-        batch.map(_.packet.flatMap(_.devEui)).toSeq)
-    } finally q.stop()
+
+    /** Streams `recs` through `host` in two micro-batches split at
+      * `split` (state must carry across) and returns the envelopes,
+      * asserting them equal to the batch fold. Whole envelopes sorted by
+      * toString: ts ties between a flush and a self-emit would make a
+      * ts sort ambiguous. */
+    def streamEqualsBatch(name: String, recs: Seq[Rec], split: Int,
+        host: org.apache.spark.sql.Dataset[Rec] => org.apache.spark.sql.Dataset[Envelope])
+        : Seq[Envelope] = withClue(name) {
+      val stream = MemoryStream[Rec]
+      val q = host(stream.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append).start()
+      val streamed = try {
+        stream.addData(recs.take(split): _*); q.processAllAvailable()
+        stream.addData(recs.drop(split): _*); q.processAllAvailable()
+        spark.table(name).as[Envelope].collect().toSeq.sortBy(_.toString)
+      } finally q.stop()
+      val batch = host(recs.toDS()).collect().toSeq.sortBy(_.toString)
+      assert(streamed.nonEmpty)
+      assert(streamed == batch)
+      streamed
+    }
+
+    // the scripted sequence, split mid-pairing
+    val scripted = Pipeline.toChirpRecs(chirpSeq.toDF("topic", "message", "seq")
+        .withColumn("data_collector_id", lit(1L))
+        .withColumn("organization_id", lit(2L))
+        .withColumn("arrival_ts", to_timestamp(lit("2024-06-01 12:00:00"))))
+      .collect().toSeq.sortBy(_.seq)
+    streamEqualsBatch("chirp_scripted", scripted, 1, Pipeline.chirpEnvelopes(_))
+
+    // a random interleaving of every ChirpStack route over two collectors
+    val das = Seq("017fc1c4", "0a0b0c0d", "deadbeef")
+    val rnd = new scala.util.Random(7)
+    val mixedRows = (1 to 120).map { i =>
+      val cid = (i % 2).toLong
+      rnd.nextInt(8) match {
+        case 0 | 1 | 2 | 3 =>
+          ("gateway/gw1/rx",
+            s"""{"phyPayload":"${mkUp(das(rnd.nextInt(das.length)), rnd.nextInt(3))}","rxInfo":{"channel":1,"rfChain":0,"crcStatus":1,"codeRate":"4/5","rssi":-60,"loRaSNR":9.0,"size":17,"timestamp":$i,"frequency":868100000,"mac":"aabb","dataRate":{"modulation":"LORA","spreadFactor":7,"bandwidth":125}}}""",
+            cid, i.toLong)
+        case 4 | 5 =>
+          (s"application/1/device/dev$i/rx",
+            s"""{"devEUI":"eui$i","applicationName":"app$i","deviceName":"dev$i","fCnt":${rnd.nextInt(3)},"rxInfo":[{"name":"gw","location":{"latitude":$i.0,"longitude":2.0,"altitude":3.0}}]}""",
+            cid, i.toLong)
+        case 6 =>
+          (s"application/1/device/j$i/join",
+            s"""{"devAddr":"${das(rnd.nextInt(das.length))}","devEUI":"joined$i"}""",
+            cid, i.toLong)
+        case _ => ("some/other/topic", s"not-json-$i", cid, i.toLong)
+      }
+    }
+    val mixed = Pipeline.toChirpRecs(mixedRows.toDF("topic", "message", "data_collector_id", "seq")
+        .withColumn("organization_id", lit(7L))
+        .withColumn("arrival_ts", timestamp_micros(col("seq") * 1000000L)))
+      .collect().toSeq.sortBy(_.seq)
+    streamEqualsBatch("chirp_mixed", mixed, mixed.length / 2, Pipeline.chirpEnvelopes(_))
+
+    // F4: location/radio/raw rows plus the struct-crash routes (perr
+    // inert, perr_buf buffers into the next envelope) on the TTN host
+    val rndLoc = new scala.util.Random(11)
+    val locRecs: Seq[Rec] = (1 to 80).map { i =>
+      val cid = (i % 2).toLong
+      rndLoc.nextInt(6) match {
+        case 0 => Rec(i, cid, "location", None, s"loc$i", None, None, None,
+          None, None, Some(i * 1.0), Some(2.0), Some(3.0), None, None, 1000 + i)
+        case 1 | 2 => Rec(i, cid, "radio", None, s"up$i", Some("aa"), Some(1L),
+          None, None, None, None, None, None, None, None, 1000 + i)
+        case 3 => Rec(i, cid, "raw", None, s"raw$i", None, None, None,
+          None, None, None, None, None, None, None, 1000 + i)
+        case 4 => Rec(i, cid, "perr_buf", None, s"crash$i", None, None, None,
+          None, None, None, None, None, None, None, 1000 + i)
+        case _ => Rec(i, cid, "perr", None, s"bad$i", None, None, None,
+          None, None, None, None, None, None, None, 1000 + i)
+      }
+    }
+    val locEnvs = streamEqualsBatch("loc_mixed", locRecs, locRecs.length / 2,
+      Pipeline.ttnEnvelopes(_))
+    // take-once actually exercised: some radio envelope carries a location
+    assert(locEnvs.exists(_.packet.exists(_.latitude.isDefined)))
   }
 }
