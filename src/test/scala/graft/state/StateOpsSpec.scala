@@ -568,33 +568,35 @@ class StateOpsSpec extends SparkSuite {
     }
   }
 
+  /** Streams `recs` through `host` in two micro-batches split at
+    * `split` (state must carry across) and returns the envelopes,
+    * asserting them equal to the batch fold. Whole envelopes sorted by
+    * toString: ts ties between a flush and a self-emit would make a
+    * ts sort ambiguous. */
+  private def streamEqualsBatch(name: String, recs: Seq[Rec], split: Int,
+      host: org.apache.spark.sql.Dataset[Rec] => org.apache.spark.sql.Dataset[Envelope])
+      : Seq[Envelope] = {
+    implicit val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val stream = MemoryStream[Rec]
+    val q = host(stream.toDS()).writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Append).start()
+    val streamed = try {
+      stream.addData(recs.take(split): _*); q.processAllAvailable()
+      stream.addData(recs.drop(split): _*); q.processAllAvailable()
+      spark.table(name).as[Envelope].collect().toSeq.sortBy(_.toString)
+    } finally q.stop()
+    val batch = host(recs.toDS()).collect().toSeq.sortBy(_.toString)
+    assert(streamed.nonEmpty)
+    assert(streamed == batch)
+    streamed
+  }
+
   test("ChirpStack pipeline in Structured Streaming equals batch result") {
     implicit val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    /** Streams `recs` through `host` in two micro-batches split at
-      * `split` (state must carry across) and returns the envelopes,
-      * asserting them equal to the batch fold. Whole envelopes sorted by
-      * toString: ts ties between a flush and a self-emit would make a
-      * ts sort ambiguous. */
-    def streamEqualsBatch(name: String, recs: Seq[Rec], split: Int,
-        host: org.apache.spark.sql.Dataset[Rec] => org.apache.spark.sql.Dataset[Envelope])
-        : Seq[Envelope] = withClue(name) {
-      val stream = MemoryStream[Rec]
-      val q = host(stream.toDS()).writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
-      val streamed = try {
-        stream.addData(recs.take(split): _*); q.processAllAvailable()
-        stream.addData(recs.drop(split): _*); q.processAllAvailable()
-        spark.table(name).as[Envelope].collect().toSeq.sortBy(_.toString)
-      } finally q.stop()
-      val batch = host(recs.toDS()).collect().toSeq.sortBy(_.toString)
-      assert(streamed.nonEmpty)
-      assert(streamed == batch)
-      streamed
-    }
 
     // the scripted sequence, split mid-pairing
     val scripted = Pipeline.toChirpRecs(chirpSeq.toDF("topic", "message", "seq")
@@ -603,8 +605,14 @@ class StateOpsSpec extends SparkSuite {
         .withColumn("arrival_ts", to_timestamp(lit("2024-06-01 12:00:00"))))
       .collect().toSeq.sortBy(_.seq)
     streamEqualsBatch("chirp_scripted", scripted, 1, Pipeline.chirpEnvelopes(_))
+  }
 
-    // a random interleaving of every ChirpStack route over two collectors
+  test("random ChirpStack interleaving in streaming equals batch") {
+    implicit val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions._
+
+    // every ChirpStack route over two collectors
     val das = Seq("017fc1c4", "0a0b0c0d", "deadbeef")
     val rnd = new scala.util.Random(7)
     val mixedRows = (1 to 120).map { i =>
@@ -630,9 +638,12 @@ class StateOpsSpec extends SparkSuite {
         .withColumn("arrival_ts", timestamp_micros(col("seq") * 1000000L)))
       .collect().toSeq.sortBy(_.seq)
     streamEqualsBatch("chirp_mixed", mixed, mixed.length / 2, Pipeline.chirpEnvelopes(_))
+  }
 
-    // F4: location/radio/raw rows plus the struct-crash routes (perr
-    // inert, perr_buf buffers into the next envelope) on the TTN host
+  test("F4 location/perr interleaving in streaming equals batch") {
+    implicit val s = spark
+    // location/radio/raw rows plus the struct-crash routes (perr inert,
+    // perr_buf buffers into the next envelope) on the TTN host
     val rndLoc = new scala.util.Random(11)
     val locRecs: Seq[Rec] = (1 to 80).map { i =>
       val cid = (i % 2).toLong
