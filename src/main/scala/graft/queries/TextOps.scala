@@ -1985,10 +1985,10 @@ object TextOps {
     * into r13): the original 2^16 was set against the QUADRATIC-era
     * per-row constant (SKEW_r12's 7.0 s task at df ≈ 150k); the linear
     * kernel removed most of that tax, and the isolated df-sweep
-    * (tools.DfSweep, DFSWEEP_r13.json) measured the post-kernel
-    * marginal at ~0.6-1.0 µs per hot-window row — so the old budget
-    * switched to the two-pass (+52% bytes / ~14% wall on the WHOLE
-    * query) to avoid a ≲ 60 ms straggler term.
+    * (DFSWEEP_r13.json; its tool was last in commit 8eefd21) measured
+    * the post-kernel marginal at ~0.6-1.0 µs per hot-window row — so
+    * the old budget switched to the two-pass (+52% bytes / ~14% wall on
+    * the WHOLE query) to avoid a ≲ 60 ms straggler term.
     *
     * The budget is now DERIVED from the width machinery's own slice
     * target instead of being a free constant: the gram exchange sizes
@@ -2116,11 +2116,12 @@ object TextOps {
     // per-row tax; post-kernel the window-on-hot is near-flat at that
     // df (loaded ≤1.66) and the gate rests on the structural argument
     // above. The budget was re-calibrated against post-kernel
-    // constants same-round (the DfSweep artifact; see the
-    // HotGramTaskRowBudget scaladoc): it now equals the width
-    // machinery's 16 MB slice-row target, so boilerplate-class hot
-    // corpora (df ≈ 150k: a bounded ≤1.7× straggler, 14% faster than
-    // the two-pass) stay on the window form while the unbounded cases
+    // constants same-round (DFSWEEP_r13.json, whose tool was last in
+    // commit 8eefd21; see the HotGramTaskRowBudget scaladoc): it now
+    // equals the width machinery's 16 MB slice-row target, so
+    // boilerplate-class hot corpora (df ≈ 150k: a bounded ≤1.7×
+    // straggler, 14% faster than the two-pass) stay on the window form
+    // while the unbounded cases
     // (crawl df = c·N past 2^19, the rundoc monster) still switch.
     // The gate estimates max-df from a deterministic 1-in-61 doc sample
     // (estMaxGramDf) and switches past HotGramTaskRowBudget; below the

@@ -58,19 +58,20 @@ object Events {
     * fields: envelope ts is epoch seconds and the join/raw routes
     * produce packet-less envelopes, so two distinct packet-less
     * envelopes from one collector in the same second would otherwise
-    * collide — and the upsert's anti-join would silently drop the
-    * second, losing an envelope a replay can never restore.
+    * collide — and the JDBC sink's `ON CONFLICT (idem_key) DO NOTHING`
+    * ([[WireClients.startJdbcSink]]) would silently drop the second,
+    * losing an envelope a replay can never restore.
     *
     * KEY VERSION BOUNDARY (v2): including `messages` changed every
     * key value relative to the pre-r7 definition (v1: collector|ts|
-    * mic|data only). A sink directory written under v1 will never
-    * match replayed rows keyed under v2, so a replay spanning the
-    * upgrade RE-INSERTS duplicates of pre-upgrade envelopes instead
-    * of deduplicating them. Operators upgrading an existing sink must
-    * either rebuild it from the source log (one replay into an empty
-    * directory) or re-key it in place (recompute `_idem_key` over the
-    * stored envelopes with this definition) BEFORE replaying old
-    * segments. New/empty sinks are unaffected. */
+    * mic|data only). A table keyed under v1 will never match replayed
+    * rows keyed under v2, so a replay spanning the upgrade RE-INSERTS
+    * duplicates of pre-upgrade envelopes instead of deduplicating them.
+    * Operators upgrading an existing table must either rebuild it from
+    * the source log (one replay into an empty table) or re-key it in
+    * place (recompute `idem_key` over the stored envelopes with this
+    * definition) BEFORE replaying old segments. New/empty tables are
+    * unaffected. */
   def idempotencyKey: Column =
     sha2(concat_ws("|",
       col("data_collector_id"), col("ts"),

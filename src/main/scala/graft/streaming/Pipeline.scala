@@ -18,9 +18,10 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
   * }}}
   *
   * The same transforms run in batch (tests, replay) and streaming
-  * (readStream → foreachBatch). Scale: normalization + codec are
-  * data-parallel map work before the single state shuffle; only the
-  * order-dependent pairing serializes per collector — exactly the
+  * (readStream → the parquet file sink of [[startEnvelopeSink]]).
+  * Scale: normalization + codec are data-parallel map work before the
+  * single state shuffle; only the order-dependent pairing serializes
+  * per collector — exactly the
   * reference's per-collector thread, but collectors run in parallel and
   * state is checkpointable (vs the reference's crash-lossy heap dicts,
   * BASELINE.md "state durability: none").
@@ -519,99 +520,26 @@ object Pipeline {
         m("dataCollectorId").as("data_collector_id"))).as("messages"))
   }
 
-  /** K1/K4 streaming sink: foreachBatch append to a parquet envelope log,
-    * partitioned by collector (the dev stand-in for the RabbitMQ durable
-    * queue; at-least-once via checkpoint + replayable source — the
-    * idempotent consumer key is [[Events.idempotencyKey]] (v2: collector,
-    * ts, mic, data, messages — see its KEY VERSION BOUNDARY note),
-    * SURVEY §2.2 K1). */
+  /** K1/K4 streaming sink: Spark's parquet file sink, partitioned by
+    * collector (the dev stand-in for the RabbitMQ durable queue).
+    *
+    * Exactly-once across restarts: the sink records each committed
+    * batch's files in `outDir/_spark_metadata`, and a batch the engine
+    * re-runs after a crash (written, but not yet in the checkpoint's
+    * commit log) is skipped because the log already holds it. Readers
+    * must read the sink ROOT (`spark.read.parquet(outDir)`), which
+    * follows that log; a partition subdirectory or a glob bypasses it
+    * and can see the files of an uncommitted or aborted batch. A wire
+    * sink without such a log dedups at the consumer with
+    * [[Events.idempotencyKey]] ([[WireClients.startJdbcSink]]). */
   def startEnvelopeSink(envs: DataFrame, outDir: String, checkpoint: String,
                         trigger: Trigger = Trigger.ProcessingTime("1 second")) =
     envs.writeStream
+      .format("parquet")
+      .partitionBy("data_collector_id")
+      .option("path", outDir)
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append")
-          .partitionBy("data_collector_id")
-          .parquet(outDir)
-      }
-      .start()
-
-  /** Q6 upsert shape (DataCollector.py:57-60 save/commit implies
-    * insert-or-ignore on replay): one micro-batch MERGEd into the
-    * envelope table by [[Events.idempotencyKey]] — in-batch dedup, then
-    * anti-join against the keys already on disk, then append. Replaying
-    * a batch (at-least-once source) writes zero new rows, which is the
-    * effective-exactly-once the reference's silent-drop publisher never
-    * had. Scale note: the anti-join scans only the sink's key column
-    * (column-pruned parquet scan, partition-pruned by the lakehouse
-    * layout); on a MERGE-capable table format this is
-    * `WHEN NOT MATCHED THEN INSERT` against a key-bucketed index. */
-  def upsertEnvelopeBatch(batch: DataFrame, outDir: String): Unit = {
-    val spark = batch.sparkSession
-    val keyed = batch.withColumn("idem_key", Events.idempotencyKey)
-      .dropDuplicates("idem_key")
-      // the anti-join and the pruning filter both reuse the batch
-      .persist()
-    try {
-      // resolve through Hadoop's FileSystem so the dedup branch engages
-      // on any supported filesystem (HDFS/S3/local), not just local disk.
-      // "Exists" must mean HAS A DATA FILE, not "directory present": an
-      // empty first batch writes only _SUCCESS, and a later read of that
-      // file-less directory throws "unable to infer schema" — the query
-      // would then die on every checkpoint replay of the same batch.
-      // The recursive listing stops at the FIRST data file, so on an
-      // established sink it touches one listing page, not the table.
-      val sinkPath = new org.apache.hadoop.fs.Path(outDir)
-      val fs = sinkPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val sinkHasData = fs.exists(sinkPath) && {
-        val it = fs.listFiles(sinkPath, true)
-        var found = false
-        while (!found && it.hasNext) {
-          val n = it.next().getPath.getName
-          found = !n.startsWith("_") && !n.startsWith(".")
-        }
-        found
-      }
-      val fresh =
-        if (sinkHasData) {
-          val sink = spark.read.parquet(outDir)
-          // a sink written by the plain append sink (startEnvelopeSink)
-          // carries no idem_key — reading it with an assumed schema
-          // would anti-join against NULLs and silently re-insert every
-          // replayed row. Fail labeled instead: mixed-mode sinks must be
-          // rebuilt/re-keyed first (see Events.idempotencyKey's
-          // key-version note).
-          require(sink.columns.contains("idem_key"),
-            s"envelope sink at $outDir has no idem_key column — it was " +
-              "written by the plain append sink; rebuild/re-key it before " +
-              "pointing the upsert sink at it")
-          // prune the sink scan to the partitions this batch touches —
-          // a batch from K collectors reads K partitions' key columns,
-          // not the whole table (partition pruning on the sink layout)
-          val cids = keyed.select(col("data_collector_id")).distinct()
-            .collect().map(_.getLong(0))
-          keyed.join(
-            sink.filter(col("data_collector_id").isin(cids.toIndexedSeq: _*))
-              .select(col("idem_key")),
-            Seq("idem_key"), "left_anti")
-        } else keyed
-      fresh.write.mode("append")
-        .partitionBy("data_collector_id")
-        .parquet(outDir)
-    } finally keyed.unpersist()
-  }
-
-  /** K1 streaming sink with the Q6 dedup-on-write applied per batch. */
-  def startUpsertEnvelopeSink(envs: DataFrame, outDir: String, checkpoint: String,
-                              trigger: Trigger = Trigger.ProcessingTime("1 second")) =
-    envs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertEnvelopeBatch(batch, outDir)
-      }
       .start()
 }

@@ -100,7 +100,7 @@ object WireClients {
       col("messages")))
 
   /** K1 wire sink: the [[Pipeline.startEnvelopeSink]] frame with the
-    * AMQP writer in place of the parquet stand-in. */
+    * AMQP writer in place of the parquet file sink. */
   def startAmqpSink(envs: DataFrame, connector: AmqpConnector,
                     queueName: String, routingKey: String, checkpoint: String,
                     trigger: Trigger = Trigger.ProcessingTime("1 second"))
@@ -128,9 +128,9 @@ object WireClients {
 
   /** The idempotent envelope insert (Service.py:5-47's save, hardened
     * for replay): the K1 key is the conflict target, so re-executing a
-    * replayed micro-batch affects zero rows — the same contract
-    * [[Pipeline.upsertEnvelopeBatch]] implements for the parquet
-    * stand-in, expressed as standard SQL. A production deployment maps
+    * replayed micro-batch affects zero rows — the contract the parquet
+    * file sink gets from its `_spark_metadata` log, here expressed as
+    * standard SQL for a store without one. A production deployment maps
     * `packet`'s fields onto the reference's packet columns
     * (Models.Packet); the key/conflict mechanics are identical. */
   def insertSql(table: String): String =

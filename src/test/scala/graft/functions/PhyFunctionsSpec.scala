@@ -22,7 +22,7 @@ class PhyFunctionsSpec extends SparkSuite {
     assert(new String(out, "UTF-8") == "hello lorawan!")
   }
 
-  test("envelope sink writes partitioned parquet via foreachBatch (K1)") {
+  test("envelope file sink writes partitioned parquet (K1)") {
     implicit val s = spark
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[graft.state.StateOps.Rec]
@@ -35,6 +35,10 @@ class PhyFunctionsSpec extends SparkSuite {
       stream.addData(graft.state.StateOps.Rec(1, 5L, "raw", Some("t"), "m",
         None, None, None, None, None, None, None, None, None, None, 1234L))
       q.processAllAvailable()
+      assert(java.nio.file.Files.isDirectory(
+        java.nio.file.Paths.get(out, "_spark_metadata")))
+      assert(java.nio.file.Files.isDirectory(
+        java.nio.file.Paths.get(out, "data_collector_id=5")))
       val rows = spark.read.parquet(out)
       assert(rows.count() == 1)
       // partition column type is re-inferred on read (int) — compare by value

@@ -64,13 +64,12 @@ class PipelineRestartSpec extends SparkSuite {
       Array(1.toByte) ++ Array(10.toByte, 20.toByte) ++
       graft.codec.Lorawan.hexToBytes("00000000"))
 
-  private def mixedRecs: Seq[Rec] = {
-    implicit val s = spark
-    import org.apache.spark.sql.functions._
-    import s.implicits._
+  /** 90 seeded ChirpStack messages (topic, message, collector, seq):
+    * gateway uplinks, application rx, joins and unroutable lines. */
+  private def mixedRows: Seq[(String, String, Long, Long)] = {
     val das = Seq("017fc1c4", "0a0b0c0d")
     val rnd = new scala.util.Random(23)
-    val rows = (1 to 90).map { i =>
+    (1 to 90).map { i =>
       rnd.nextInt(7) match {
         case 0 | 1 | 2 =>
           ("gateway/gw1/rx",
@@ -87,7 +86,13 @@ class PipelineRestartSpec extends SparkSuite {
         case _ => ("some/other/topic", s"not-json-$i", 0L, i.toLong)
       }
     }
-    val df = rows.toDF("topic", "message", "data_collector_id", "seq")
+  }
+
+  private def mixedRecs: Seq[Rec] = {
+    implicit val s = spark
+    import org.apache.spark.sql.functions._
+    import s.implicits._
+    val df = mixedRows.toDF("topic", "message", "data_collector_id", "seq")
       .withColumn("organization_id", lit(7L))
       .withColumn("arrival_ts", timestamp_micros(col("seq") * 1000000L))
     Pipeline.toChirpRecs(df).collect().toSeq.sortBy(_.seq)
@@ -187,5 +192,74 @@ class PipelineRestartSpec extends SparkSuite {
     val up1Env = actual.find(_.messages.exists(_.message == "up1")).get
     assert(up1Env.messages.map(_.message) == Seq("crash1", "crash2", "up1"))
     assert(up1Env.packet.get.latitude.contains(9.0))
+  }
+
+  test("envelope sink: a re-run uncommitted batch is written once") {
+    // the production assembly over a message log: a crash after the
+    // sink wrote batch n but before the checkpoint committed it makes
+    // the engine re-run batch n on restart
+    implicit val s: SparkSession = spark
+    import java.nio.file.{Files, StandardCopyOption}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("envsink_replay")
+    val log = Files.createDirectories(root.resolve("log"))
+    val staging = Files.createDirectories(root.resolve("staging"))
+    val sink = root.resolve("sink").toString
+    val commits = root.resolve("checkpoint").resolve("commits")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    // three segments, the collector alternating by seq
+    val segments = mixedRows.grouped(30).toIndexedSeq.map(_.map {
+      case (topic, message, _, seq) =>
+        val o = mapper.createObjectNode()
+        o.put("topic", topic); o.put("message", message)
+        o.put("data_collector_id", seq % 2); o.put("organization_id", 7L)
+        o.put("seq", seq); o.put("arrival_ts", seq * 1000000L)
+        mapper.writeValueAsString(o)
+    }.mkString("\n"))
+    // the writer contract: write outside the log, then move in atomically
+    def publish(i: Int): Unit = {
+      val seg = Files.write(staging.resolve(f"seg-$i%04d.jsonl"),
+        segments(i).getBytes("UTF-8"))
+      Files.move(seg, log.resolve(seg.getFileName), StandardCopyOption.ATOMIC_MOVE)
+    }
+    def start() = {
+      val raw = spark.readStream.format("graft.sources.MessageLogSource")
+        .load(log.toString)
+      Pipeline.startEnvelopeSink(
+        Pipeline.envelopeFrame(Pipeline.chirpEnvelopes(Pipeline.toChirpRecs(raw))),
+        sink, root.resolve("checkpoint").toString,
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    }
+
+    val q1 = start()
+    try {
+      publish(0); q1.processAllAvailable()
+      publish(1); q1.processAllAvailable()
+    } finally q1.stop()
+    val committed = commits.toFile.list().filter(_.forall(_.isDigit))
+    assert(committed.length == 2, committed.mkString(","))
+    val last = committed.maxBy(_.toLong)
+    Files.delete(commits.resolve(last))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+
+    val q2 = start()
+    try {
+      q2.processAllAvailable() // re-runs the uncommitted batch
+      publish(2); q2.processAllAvailable()
+    } finally q2.stop()
+
+    // multiset of row hashes; the sink's partition column reads back as int
+    def rowHashes(df: DataFrame): Seq[Long] = df
+      .select(xxhash64(col("ts"), col("data_collector_id").cast("long"),
+        col("packet"), col("messages")))
+      .collect().map(_.getLong(0)).toSeq.sorted
+    val batch = rowHashes(Pipeline.chirpEnvelopeFrameBatch(
+      spark.read.format("graft.sources.MessageLogSource").load(log.toString)))
+    val written = rowHashes(spark.read.parquet(sink))
+    assert(batch.nonEmpty)
+    assert(written == batch,
+      s"sink ${written.size} rows vs batch ${batch.size}: " +
+        s"${written.diff(batch).size} extra, ${batch.diff(written).size} missing")
   }
 }

@@ -64,8 +64,8 @@ class WireClientsSpec extends SparkSuite {
 
   private implicit def s: org.apache.spark.sql.SparkSession = spark
 
-  /** Real envelope frames (the UpsertSinkSpec fixture) staged as a
-    * parquet stream source, so the sinks run as genuine streaming
+  /** Real envelope frames (gateway uplinks over two collectors) staged
+    * as a parquet stream source, so the sinks run as genuine streaming
     * queries with checkpoints. */
   private def envelopeSource(n: Int): (DataFrame, DataFrame) = {
     def up(fCnt: Int): String = graft.codec.Lorawan.b64encode(
@@ -163,5 +163,53 @@ class WireClientsSpec extends SparkSuite {
       .collect().map(_.getString(0)).toSet
     import scala.jdk.CollectionConverters._
     assert(FakeWire.dbRows.keySet().asScala.toSet == expectedKeys)
+  }
+
+  test("distinct packet-less envelopes in the same second both survive") {
+    // join/raw routes emit packet=null envelopes; ts is epoch SECONDS,
+    // so two different such envelopes from one collector in one second
+    // are distinguished ONLY by their message payloads — the key must
+    // cover them or the conflict clause silently drops the second
+    FakeWire.reset()
+    def jr(devNonce: Int): String = {
+      val body = Array(0x00.toByte) ++
+        graft.codec.Lorawan.hexToLe("70b3d57ed0000000") ++
+        graft.codec.Lorawan.hexToLe("0004a30b001fbc00") ++
+        Array((devNonce & 0xff).toByte, ((devNonce >> 8) & 0xff).toByte) ++
+        graft.codec.Lorawan.hexToBytes("00000000")
+      graft.codec.Lorawan.b64encode(body)
+    }
+    // devAddr must be present: a join without the KEY crashes the
+    // reference at devices_map[msg['devAddr']] (KeyError → perr, no
+    // envelope at all)
+    val raw = Seq(
+      ("application/1/device/aa/join",
+        s"""{"devAddr":"01020304","phyPayload":"${jr(1)}","devEUI":"0004a30b001fbc00"}""",
+        7L, 1L),
+      ("application/1/device/aa/join",
+        s"""{"devAddr":"01020304","phyPayload":"${jr(2)}","devEUI":"0004a30b001fbc00"}""",
+        7L, 2L))
+      .toDF("topic", "message", "data_collector_id", "seq")
+      .withColumn("organization_id", lit(1L))
+      // same arrival second for both
+      .withColumn("arrival_ts", timestamp_micros(lit(5L) * 1000000L))
+    val batch = Pipeline.chirpEnvelopeFrameBatch(raw)
+    val nEnv = batch.count()
+    // the scenario is only exercised if packet-less envelopes exist
+    val nulls = batch.filter(col("packet").isNull).count()
+    assert(nulls >= 2, s"expected >=2 packet-less envelopes, got $nulls")
+    assert(batch.select(Events.idempotencyKey).distinct().count() == nEnv,
+      "envelopes share an idempotency key")
+
+    val dir = java.nio.file.Files.createTempDirectory("wire_nulls").toString
+    batch.write.mode("overwrite").parquet(dir)
+    val ckpt = java.nio.file.Files.createTempDirectory("jdbc_nulls").toString
+    val q = WireClients.startJdbcSink(spark.readStream.schema(batch.schema).parquet(dir),
+      new FakeWire.Db, table = "packets", checkpoint = ckpt,
+      trigger = Trigger.AvailableNow())
+    assert(q.awaitTermination(120000))
+    assert(FakeWire.dbRows.size() == nEnv,
+      s"envelopes lost in the insert (batch $nEnv, table ${FakeWire.dbRows.size()})")
+    assert(FakeWire.dbSuppressed.get() == 0)
   }
 }
