@@ -136,11 +136,6 @@ object PacketSchema {
         StructField("longitude", DoubleType),
         StructField("altitude", DoubleType))))))))))
 
-  /** 2e. ChirpStack join JSON (LoraServerIOCollector.py:287-289). */
-  val chirpstackJoin: StructType = StructType(Seq(
-    StructField("devAddr", StringType),
-    StructField("devEUI", StringType)))
-
   /** 2f. TTN v2 payload JSON, after the fixed-offset frame strip
     * (TTNCollector.py:176-262). */
   val ttnV2: StructType = StructType(Seq(

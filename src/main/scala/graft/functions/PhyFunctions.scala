@@ -117,7 +117,8 @@ object PhyFunctions {
         fPort, Option(frm))), None))
   }
 
-  /** C8/C9: compute a valid MIC / validate a candidate key. Key as
+  /** C8: compute a valid MIC (C9's candidate-key check is
+    * [[micMatchEvents]] below). Key as
     * big-endian hex (the reference's AES128Key text form).
     *
     * Malformed key hex (null / odd length / non-hex) yields SQL NULL
@@ -129,11 +130,6 @@ object PhyFunctions {
   val signPacketUdf = udf { (bytes: Array[Byte], keyHex: String) =>
     if (!Lorawan.isHex(keyHex)) null
     else LorawanCrypto.signPacket(bytes, Lorawan.hexToBytes(keyHex))
-  }
-  val micValid = udf { (bytes: Array[Byte], keyHex: String) =>
-    if (!Lorawan.isHex(keyHex)) null.asInstanceOf[java.lang.Boolean]
-    else java.lang.Boolean.valueOf(
-      LorawanCrypto.validateJoinRequestMic(Lorawan.hexToBytes(keyHex), bytes))
   }
 
   /** C9 candidate-major MIC check: one candidate key against EVERY signed

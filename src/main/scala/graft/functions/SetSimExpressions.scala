@@ -300,21 +300,57 @@ private[functions] object CodepointIndex {
   }
 }
 
-object CharGramsKernel {
-  /** Shared empty result — also what NULL text maps to, matching the
-    * SQL twin exactly (its CASE guard evaluates the ELSE array() on a
-    * null condition; plain null-propagation would instead return NULL
-    * and silently diverge on any non-explode consumer — r13 review). */
-  private val EmptyResult =
+/** The one shared empty array: what the [[EmptyOnNullInput]] kernels
+  * return for NULL input and for inputs that yield nothing. */
+object EmptyArray {
+  private val Empty =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
-  def empty(): ArrayData = EmptyResult
+  def get(): ArrayData = Empty
+}
 
+/** A unary array kernel whose NULL input yields the EMPTY array, not
+  * NULL, so the expression is non-nullable ([[CharGrams]],
+  * [[CharChunks]], [[WordNgrams]], [[WordBigrams]]). That matches the
+  * SQL twins exactly — their CASE guard evaluates the ELSE array() on a
+  * null condition — where plain null-propagation would return NULL and
+  * silently diverge on any non-explode consumer (r13 review). Each
+  * expression names its kernel once for the interpreted path
+  * ([[kernel]]) and once for codegen ([[kernelCode]]). */
+private[functions] trait EmptyOnNullInput
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  /** The kernel on a non-null child value. */
+  protected def kernel(v: Any): ArrayData
+  /** The same kernel call as Java source, over the child's value `v`. */
+  protected def kernelCode(v: String): String
+
+  override def nullable: Boolean = false
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val v = child.eval(input)
+    if (v == null) EmptyArray.get() else kernel(v)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val childGen = child.genCode(ctx)
+    val javaType = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+      .javaType(dataType)
+    ev.copy(
+      code = code"""
+        ${childGen.code}
+        $javaType ${ev.value} = ${childGen.isNull}
+          ? graft.functions.EmptyArray.get()
+          : ${kernelCode(childGen.value.toString)};""",
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+}
+
+object CharGramsKernel {
   def eval(s: UTF8String, l: Int): ArrayData = {
     val bytes = s.getBytes // one copy of the doc; all grams slice it
     val (starts, nChars) = CodepointIndex.starts(bytes)
     val n = nChars - l + 1
-    if (n <= 0)
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+    if (n <= 0) EmptyArray.get()
     else {
       val out = new Array[Any](n)
       var i = 0
@@ -332,8 +368,7 @@ object CharGramsKernel {
 /** [[CharGramsKernel.eval]] as a codegen'd unary expression; the gram
   * width is a construction-time constant (every caller passes
   * TextOps.SubstrL). */
-case class CharGrams(child: Expression, l: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+case class CharGrams(child: Expression, l: Int) extends EmptyOnNullInput {
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("pos", LongType, nullable = false),
     StructField("gram", StringType, nullable = false))), containsNull = false)
@@ -347,33 +382,10 @@ case class CharGrams(child: Expression, l: Int)
       TypeCheckResult.TypeCheckFailure(s"$prettyName requires width >= 1, got $l")
     else TypeCheckResult.TypeCheckSuccess
 
-  // NULL text yields the EMPTY gram array, not NULL — the SQL twin's
-  // CASE guard evaluates its ELSE array() on a null condition, and the
-  // pinned contract is row-for-row identity with that twin (r13
-  // review: plain null-propagation was benign under explode() but
-  // would diverge on any future non-explode consumer)
-  override def nullable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) CharGramsKernel.empty()
-    else CharGramsKernel.eval(v.asInstanceOf[UTF8String], l)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    val javaType = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-      .javaType(dataType)
-    val width = l.toString // the interpolator takes strings, not ints
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        $javaType ${ev.value} = ${childGen.isNull}
-          ? graft.functions.CharGramsKernel.empty()
-          : graft.functions.CharGramsKernel.eval(${childGen.value}, $width);""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
+  override protected def kernel(v: Any): ArrayData =
+    CharGramsKernel.eval(v.asInstanceOf[UTF8String], l)
+  override protected def kernelCode(v: String): String =
+    s"graft.functions.CharGramsKernel.eval($v, $l)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -393,10 +405,6 @@ case class CharGrams(child: Expression, l: Int)
   * walk — a substring() chunker would pay O(chunks·n) per document
   * (the same byte-0-scan class the CharGrams kernel exists to avoid). */
 object CharChunksKernel {
-  private val Empty =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
-  def empty(): ArrayData = Empty
-
   def eval(s: UTF8String, c: Int, l: Int): ArrayData = {
     // fast path for the overwhelmingly common single-chunk case:
     // nChars <= nBytes, so nBytes <= c guarantees one chunk that IS
@@ -431,8 +439,7 @@ object CharChunksKernel {
   * stride and gram width are construction-time constants. NULL text →
   * empty array (no chunks → no grams), consistent with [[CharGrams]]'
   * pinned NULL contract. */
-case class CharChunks(child: Expression, c: Int, l: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+case class CharChunks(child: Expression, c: Int, l: Int) extends EmptyOnNullInput {
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("start", LongType, nullable = false),
     StructField("chunk", StringType, nullable = false))), containsNull = false)
@@ -447,29 +454,10 @@ case class CharChunks(child: Expression, c: Int, l: Int)
         s"$prettyName requires positive chunk stride and gram width, got ($c, $l)")
     else TypeCheckResult.TypeCheckSuccess
 
-  override def nullable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) CharChunksKernel.empty()
-    else CharChunksKernel.eval(v.asInstanceOf[UTF8String], c, l)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    val javaType = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-      .javaType(dataType)
-    val stride = c.toString
-    val width = l.toString
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        $javaType ${ev.value} = ${childGen.isNull}
-          ? graft.functions.CharChunksKernel.empty()
-          : graft.functions.CharChunksKernel.eval(${childGen.value}, $stride, $width);""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
+  override protected def kernel(v: Any): ArrayData =
+    CharChunksKernel.eval(v.asInstanceOf[UTF8String], c, l)
+  override protected def kernelCode(v: String): String =
+    s"graft.functions.CharChunksKernel.eval($v, $c, $l)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -539,8 +527,11 @@ case class ContainmentSim(left: Expression, right: Expression)
   * SetSimSpec. NULL propagates like the builtin (UnaryExpression
   * null-safe default). */
 object LiteralSplitKernel {
-  def eval(s: UTF8String, sep: Array[Byte]): ArrayData = {
-    val bytes = s.getBytes // one copy; every token slices it
+  /** The byte scan: end offset of each `split(bytes, sep, -1)` token,
+    * left to right. Token k spans [ends(k-1) + sep.length, ends(k)),
+    * token 0 starts at 0, and the last token ends at bytes.length, so
+    * the array is never empty (`"" → [0]`). */
+  def tokenEnds(bytes: Array[Byte], sep: Array[Byte]): Array[Int] = {
     val n = bytes.length
     val m = sep.length
     @inline def matchAt(i: Int): Boolean = {
@@ -551,19 +542,27 @@ object LiteralSplitKernel {
     var count = 1
     var i = 0
     while (i + m <= n) { if (matchAt(i)) { count += 1; i += m } else i += 1 }
-    val out = new Array[Any](count)
-    var start = 0
+    val ends = new Array[Int](count)
     var k = 0
     i = 0
     while (i + m <= n) {
-      if (matchAt(i)) {
-        out(k) = UTF8String.fromBytes(bytes, start, i - start)
-        k += 1
-        i += m
-        start = i
-      } else i += 1
+      if (matchAt(i)) { ends(k) = i; k += 1; i += m } else i += 1
     }
-    out(k) = UTF8String.fromBytes(bytes, start, n - start)
+    ends(k) = n
+    ends
+  }
+
+  def eval(s: UTF8String, sep: Array[Byte]): ArrayData = {
+    val bytes = s.getBytes // one copy; every token slices it
+    val ends = tokenEnds(bytes, sep)
+    val out = new Array[Any](ends.length)
+    var start = 0
+    var k = 0
+    while (k < ends.length) {
+      out(k) = UTF8String.fromBytes(bytes, start, ends(k) - start)
+      start = ends(k) + sep.length
+      k += 1
+    }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 }
@@ -615,6 +614,73 @@ case class LiteralSplit(child: Expression, sep: String)
     copy(child = newChild)
 }
 
+/** Word n-grams of a text over `split(text, ' ', -1)` tokens (empty
+  * tokens kept, `"" → [""]`): the shingle sets behind every
+  * set-similarity join (q33/q76/q88/q96, CorpusStream.nearDupLsh) and
+  * the n-gram scans of q51/q52/q60/q83. One [[LiteralSplitKernel]]
+  * byte scan, then each gram is a zero-copy slice from the start of
+  * token i to the end of token i+n−1 — adjacent tokens are exactly
+  * one space apart, so the slice IS the `" "`-joined tokens and no
+  * gram is ever built by concatenation. With `distinct`, repeats are
+  * dropped and first occurrences keep their order (UTF8String
+  * equality is byte equality). Fewer than n tokens, or n ≤ 0, → [].
+  * Property-pinned against `split(" ", -1).sliding(n)` in
+  * TextFunctionsPropSpec and against a split/slice/array_join SQL
+  * twin in SetSimExpressionsSpec. */
+object WordNgramsKernel {
+  private val Space = Array[Byte](' ')
+
+  def eval(s: UTF8String, n: Int, distinct: Boolean): ArrayData = {
+    if (n <= 0) return EmptyArray.get()
+    val bytes = s.getBytes // one copy; every gram slices it
+    val ends = LiteralSplitKernel.tokenEnds(bytes, Space)
+    val count = ends.length - n + 1
+    if (count <= 0) return EmptyArray.get()
+    val out = new Array[Any](count)
+    val seen = if (distinct) new java.util.HashSet[UTF8String]() else null
+    var k = 0
+    var i = 0
+    while (i < count) {
+      val start = if (i == 0) 0 else ends(i - 1) + 1
+      val g = UTF8String.fromBytes(bytes, start, ends(i + n - 1) - start)
+      if (!distinct || seen.add(g)) { out(k) = g; k += 1 }
+      i += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      if (k == count) out else out.take(k))
+  }
+}
+
+/** [[WordNgramsKernel.eval]] as a codegen'd unary expression; n and
+  * `distinct` are construction-time constants. NULL text → EMPTY
+  * array ([[EmptyOnNullInput]]). */
+case class WordNgrams(child: Expression, n: Int, distinct: Boolean)
+    extends EmptyOnNullInput {
+  /** containsNull = false, the [[LiteralSplit]] contract: grams are
+    * byte slices, never null, and saying so folds every consumer's
+    * `isnotnull(gram)` pushdown away. With nullable elements q96's
+    * g→df join pushes isnotnull(gram) into its copy of the gram→df
+    * aggregation but the mean-df scalar's copy gets none, the two
+    * exchanges no longer canonicalize equal, and the corpus pays the
+    * explode+aggregate pass twice (PlanSpec pins the ReusedExchange). */
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "graft_word_ngrams"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType != StringType)
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires STRING, got ${child.dataType.sql}")
+    else TypeCheckResult.TypeCheckSuccess
+
+  override protected def kernel(v: Any): ArrayData =
+    WordNgramsKernel.eval(v.asInstanceOf[UTF8String], n, distinct)
+  override protected def kernelCode(v: String): String =
+    s"graft.functions.WordNgramsKernel.eval($v, $n, $distinct)"
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 /** Adjacent-word bigrams of a split-words array, with positions — the
   * LM family's extraction (q93/q103 scoring + the streaming trainer)
   * as ONE tight loop instead of the interpreted
@@ -628,13 +694,9 @@ case class LiteralSplit(child: Expression, sep: String)
   * NULL-array → EMPTY (not NULL) contract the twin's CASE guard
   * produces under ANSI size(NULL) = NULL semantics. */
 object WordBigramsKernel {
-  private val Empty =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
-  def empty(): ArrayData = Empty
-
   def eval(a: ArrayData): ArrayData = {
     val n = a.numElements()
-    if (n < 2) return Empty
+    if (n < 2) return EmptyArray.get()
     val out = new Array[Any](n - 1)
     var i = 0
     while (i < n - 1) {
@@ -650,9 +712,8 @@ object WordBigramsKernel {
 
 /** [[WordBigramsKernel.eval]] as a codegen'd unary expression. NULL
   * words-array → EMPTY bigram array (the SQL twin's CASE-guard
-  * behavior), so `nullable = false` like [[CharGrams]]. */
-case class WordBigrams(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  * behavior). */
+case class WordBigrams(child: Expression) extends EmptyOnNullInput {
   /** w1/w2 nullability DERIVES from the input's element nullability
     * (r16): the kernel copies input elements verbatim, so over a
     * containsNull=false array (litSplit's output — the only query
@@ -681,27 +742,10 @@ case class WordBigrams(child: Expression)
         s"$prettyName requires ARRAY<STRING>, got ${dt.sql}")
     }
 
-  override def nullable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) WordBigramsKernel.empty()
-    else WordBigramsKernel.eval(v.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    val javaType = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-      .javaType(dataType)
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        $javaType ${ev.value} = ${childGen.isNull}
-          ? graft.functions.WordBigramsKernel.empty()
-          : graft.functions.WordBigramsKernel.eval(${childGen.value});""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
+  override protected def kernel(v: Any): ArrayData =
+    WordBigramsKernel.eval(v.asInstanceOf[ArrayData])
+  override protected def kernelCode(v: String): String =
+    s"graft.functions.WordBigramsKernel.eval($v)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -12,69 +12,16 @@ import org.apache.spark.sql.catalyst.expressions.XXH64
   * lambda per element — so per-row kernels with tight loops are 10-50×
   * faster (measured: MinHash signatures 13.5 s → ~1 s at sf0.1). Each UDF
   * reproduces its declarative twin bit-for-bit:
-  *   - [[shingles]]: word 3-grams over `split(text, ' ')` semantics
-  *     (split keeps empty tokens, like Spark's regex split);
   *   - [[minhashSig]]: h_i = (2i+1)·(xxhash64(s) mod p) + i²+7, the exact
   *     arithmetic of the former column program (same XXH64 seed 42);
   *   - [[simhash]]: md5-low-60-bit token hashes, ±1 bit votes — mirrored
   *     by the DuckDB oracle in TextOps.
+  * The word n-gram (shingle) kernel is native, not a UDF:
+  * [[GraftFunctions.wordNgrams]] (SetSimExpressions.WordNgrams).
   */
 object TextFunctions {
 
   private val P = 1000000007L
-
-  def shingleSet(text: String): Array[String] = {
-    val w = text.split(" ", -1)
-    if (w.length < 3) Array.empty
-    else {
-      val seen = new java.util.LinkedHashSet[String]()
-      var i = 0
-      while (i + 2 < w.length) {
-        seen.add(w(i) + " " + w(i + 1) + " " + w(i + 2))
-        i += 1
-      }
-      seen.toArray(new Array[String](seen.size))
-    }
-  }
-
-  // asNonNullable: the kernels below never return null, and saying so
-  // matters — a nullable UDF in a join key grows a pushed-down
-  // `isnotnull(size(UDF(text)))` filter that re-runs the whole kernel a
-  // second time per row in the scan stage (seen in the q33 plan).
-  val shingles = udf { (text: String) =>
-    if (text == null) Array.empty[String] else shingleSet(text)
-  }.asNonNullable()
-
-  private[functions] def ngramArr(text: String, n: Int, distinct: Boolean): Array[String] = {
-    val w = text.split(" ", -1)
-    if (n <= 0 || w.length < n) Array.empty[String]
-    else {
-      val out = new java.util.LinkedHashSet[String]()
-      val all = if (distinct) null else new Array[String](w.length - n + 1)
-      var i = 0
-      while (i + n - 1 < w.length) {
-        val sb = new java.lang.StringBuilder(w(i))
-        var j = 1
-        while (j < n) { sb.append(' ').append(w(i + j)); j += 1 }
-        if (distinct) out.add(sb.toString) else all(i) = sb.toString
-        i += 1
-      }
-      if (distinct) out.toArray(new Array[String](out.size)) else all
-    }
-  }
-
-  /** Word n-grams over `split(text, ' ')` semantics, distinct,
-    * first-occurrence order — generalizes [[shingleSet]] (n = 3) to the
-    * decontamination n (q51). */
-  val ngramsDistinct = udf { (text: String, n: Int) =>
-    if (text == null) Array.empty[String] else ngramArr(text, n, distinct = true)
-  }
-
-  /** All word n-grams WITH multiplicity — repetition counting (q52)
-    * needs the duplicates the distinct form drops. */
-  val ngramsAll = udf { (text: String, n: Int) =>
-    if (text == null) Array.empty[String] else ngramArr(text, n, distinct = false)
-  }
 
   private def xxh64(s: String): Long = {
     val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -123,8 +70,8 @@ object TextFunctions {
     * (low 15 hex chars) — mirrored exactly by the DuckDB oracle. */
   val simhash = udf { (text: String) =>
     // null text -> null signature (SQL semantics, the sibling guard at
-    // shingles/nfc): a regenerated corpus with one NULL row must not
-    // NPE the whole q35 plan
+    // nfc): a regenerated corpus with one NULL row must not NPE the
+    // whole q35 plan
     if (text == null) null.asInstanceOf[java.lang.Long]
     else {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -163,7 +110,7 @@ object TextFunctions {
   /** Exact Jaccard between two string sets (verification kernel).
     * Null input → null (SQL semantics — Seq parameters are NOT
     * auto-null-checked by Spark for reference types, and the sibling
-    * guard on shingles/nfc/simhash exists for the same reason). */
+    * guard on nfc/simhash exists for the same reason). */
   val jaccard = udf { (a: Seq[String], b: Seq[String]) =>
     if (a == null || b == null) null.asInstanceOf[java.lang.Double]
     else if (a.isEmpty && b.isEmpty) java.lang.Double.valueOf(0.0)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -134,8 +134,8 @@ case class SrpSig(child: Expression)
   * (`SELECT graft_dot(a, b) …`). The Column builders below need no
   * registration, and every query uses them, so no engine entry point
   * registers anything. The SQL names exist only on a session that opts
-  * in: [[GraftFunctions.ensureRegistered]] (what the specs call) or
-  * [[GraftExtensions]] on the session builder. What a query needs at
+  * in, and [[GraftFunctions.ensureRegistered]] is the one way to do it
+  * (what the specs call). What a query needs at
   * plan time beyond its Columns — the as-of join's planner strategy —
   * the query registers lazily on whatever session it runs in
   * ([[graft.plans.AsOfJoin.apply]]). It must not move into
@@ -231,11 +231,20 @@ object GraftFunctions {
     GraftColumnBridge.column(
       HllDistinct(GraftColumnBridge.expression(c)).toAggregateExpression())
 
-  /** ONE builder table for the native expressions, shared by
-    * [[ensureRegistered]] and [[GraftExtensions]] so the two
-    * registration paths expose the same SQL surface. */
+  /** Word n-grams over `split(c, ' ', -1)` tokens ([[WordNgrams]]);
+    * `distinct` keeps only each gram's first occurrence. */
+  def wordNgrams(c: Column, n: Int, distinct: Boolean): Column =
+    GraftColumnBridge.column(WordNgrams(GraftColumnBridge.expression(c), n, distinct))
+
+  /** The shingle set of every set-similarity join: distinct word
+    * 3-grams in first-occurrence order. */
+  def shingles(c: Column): Column = wordNgrams(c, 3, distinct = true)
+
+  /** The SQL names of the native expressions, registered by
+    * [[ensureRegistered]] as built-in functions. */
   private[functions] val nativeBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_dot" -> (exprs => DotProductF(exprs.head, exprs(1))),
+    "graft_shingles" -> (exprs => WordNgrams(exprs.head, 3, distinct = true)),
     "graft_hll_distinct" -> (exprs => HllDistinct(exprs.head).toAggregateExpression()),
     "graft_jaccard" -> (exprs => JaccardSim(exprs.head, exprs(1))),
     "graft_containment" -> (exprs => ContainmentSim(exprs.head, exprs(1))),
@@ -251,32 +260,10 @@ object GraftFunctions {
     }
     // codec surface in SQL
     spark.udf.register("phy_decode_b64", PhyFunctions.phyDecodeB64)
-    spark.udf.register("graft_shingles", TextFunctions.shingles)
     spark.udf.register("graft_simhash", TextFunctions.simhash)
     // media container parsers (binary → struct with row-level error)
     spark.udf.register("graft_wav_decode", graft.multimodal.Multimodal.wavDecode)
     spark.udf.register("graft_bmp_decode", graft.multimodal.Multimodal.bmpDecode)
     spark.udf.register("graft_y4m_decode", graft.multimodal.Multimodal.y4mDecode)
   }
-}
-
-/** `withExtensions(new GraftExtensions)` on a session builder — or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
-  *
-  * Injects every NATIVE expression `ensureRegistered` exposes (one
-  * shared builder table, so the two registration paths cannot drift).
-  * The Scala-UDF surface (phy_decode_b64, graft_shingles,
-  * graft_simhash, the media parsers) has no SparkSessionExtensions
-  * hook — a session configured only via spark.sql.extensions gets
-  * those SQL names by calling `ensureRegistered` itself; no engine
-  * entry point calls it (see [[GraftFunctions]]). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
-    GraftFunctions.nativeBuilders.foreach { case (name, builder) =>
-      e.injectFunction(
-        (org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-          new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-            getClass.getName, name),
-          builder))
-    }
 }

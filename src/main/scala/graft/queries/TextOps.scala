@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.functions.GraftFunctions.litSplit
+import graft.functions.GraftFunctions.{litSplit, shingles, wordNgrams}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** documents → (doc_id, sh) via the JIT'd shingle kernel
-    * (TextFunctions.scala — bit-identical to the declarative form).
+  /** documents → (doc_id, sh) via the native shingle kernel
+    * (GraftFunctions.shingles: SetSimExpressions.WordNgrams at n = 3,
+    * distinct).
     *
     * The pinned-width repartition sits BELOW the kernel: documents is a
     * single parquet file (one row group → a 1-task scan), so a kernel
@@ -40,8 +41,7 @@ object TextOps {
       .repartition(width.getOrElse(
         docs.sparkSession.sessionState.conf.numShufflePartitions),
         col("doc_id"))
-      .select(col("doc_id"),
-        graft.functions.TextFunctions.shingles(col("text")).as("sh"))
+      .select(col("doc_id"), shingles(col("text")).as("sh"))
 
   /** Hash-repartition with the partition COUNT pinned (REPARTITION_BY_NUM).
     * AQE's partition coalescing sizes stages by shuffle BYTES; the dedup
@@ -1089,7 +1089,7 @@ object TextOps {
   def q83DiversityAudit(s: SparkSession, d: String): DataFrame = {
     val grams = documents(s, d)
       .select(col("source"),
-        explode(graft.functions.TextFunctions.shingles(col("text"))).as("g"))
+        explode(shingles(col("text"))).as("g"))
     grams.groupBy(col("source"))
       .agg(count(lit(1)).as("n_grams_total"),
         countDistinct(col("g")).as("n_grams_distinct"))
@@ -1393,9 +1393,8 @@ object TextOps {
     * count — no corpus shuffle at all until the per-doc count, which is
     * map-side combinable. */
   def q51Decontaminate(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.TextFunctions.ngramsDistinct
     val g = documents(s, d).select(col("doc_id"),
-      explode(ngramsDistinct(col("text"), lit(4))).as("gram"))
+      explode(wordNgrams(col("text"), 4, distinct = true)).as("gram"))
     val bench = g.filter(col("doc_id") % 41 === 0).select(col("gram")).distinct()
     g.filter(col("doc_id") % 41 =!= 0)
       .join(broadcast(bench), Seq("gram"))
@@ -1425,9 +1424,8 @@ object TextOps {
     * (the reference's point-lookup gate, DataCollector.py:57-60 analog,
     * done set-at-a-time). */
   def q60DecontaminateBloom(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.TextFunctions.ngramsDistinct
     val g = documents(s, d).select(col("doc_id"),
-      explode(ngramsDistinct(col("text"), lit(4))).as("gram"))
+      explode(wordNgrams(col("text"), 4, distinct = true)).as("gram"))
     // persist the bench gram set (the q51 pattern; bounded by eval-suite
     // size): it is read THREE times — the count that sizes the bloom,
     // the bloomFilter aggregation, and the verify join — and unpersisted
@@ -1459,13 +1457,12 @@ object TextOps {
     * bigrams all live in one row to begin with, so AQE coalesces the
     * tiny groups; no cross-document data movement. */
   def q52RepetitionFilter(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.TextFunctions.ngramsAll
     val docs = documents(s, d)
     val base = docs.select(col("doc_id"),
       size(litSplit(col("text"), " ")).cast("long").as("n_tokens"),
       size(array_distinct(litSplit(col("text"), " "))).cast("long").as("n_distinct"))
     val top = docs
-      .select(col("doc_id"), explode(ngramsAll(col("text"), lit(2))).as("bg"))
+      .select(col("doc_id"), explode(wordNgrams(col("text"), 2, distinct = false)).as("bg"))
       .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id")).agg(max(col("c")).as("top_bg"), sum(col("c")).as("n_bg"))
     base.join(top, Seq("doc_id"), "left")
@@ -1863,20 +1860,8 @@ object TextOps {
     * the df table (gram-vocabulary-sized input, one row out) that
     * broadcasts; per-doc reassembly is one hash-agg keyed doc_id. */
   def q96BoilerplateGrams(s: SparkSession, d: String): DataFrame = {
-    // explicit isNotNull on the exploded gram (r16): a NO-OP — the
-    // shingles UDF never emits null elements, but its Array[String]
-    // encoder cannot say so (containsNull stays true, and unlike
-    // litSplit there is no element-level asNonNullable). Without it
-    // the g→df join pushed isnotnull(gram) into ITS copy of the
-    // gram→df aggregation subtree while the mean-df scalar's copy had
-    // none, the canonicalized exchanges stopped matching, and the
-    // corpus paid the full explode+aggregate pass TWICE (found by the
-    // `PlanDump canon` all-query sweep). With the filter stated once here,
-    // both consumers inherit the same constraint, the subtrees
-    // canonicalize equal, and the second pass becomes a ReusedExchange.
     val g = shingled(documents(s, d))
       .select(col("doc_id"), explode(col("sh")).as("gram"))
-      .filter(col("gram").isNotNull)
     val df = g.groupBy(col("gram"))
       .agg(count_distinct(col("doc_id")).as("gram_df"))
     val m = df.agg(

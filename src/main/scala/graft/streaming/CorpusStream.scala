@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.litSplit
+import graft.functions.GraftFunctions.{litSplit, minhashSig, shingles, wordNgrams}
 
 /** Streaming twins of the training-corpus batch operators — documents
   * arriving as a stream (crawl output, ingestion queue) instead of a
@@ -77,8 +77,6 @@ object CorpusStream {
     * per-batch, and trailing no-data batches fold to an empty
     * LocalRelation). */
   private[streaming] def lshBandRows(docs: DataFrame): DataFrame = {
-    import graft.functions.GraftFunctions.minhashSig
-    import graft.functions.TextFunctions.shingles
     docs
       .withColumn("sig", minhashSig(shingles(col("text"))))
       // `sig` is referenced from inside the 33-element transform lambda
@@ -216,19 +214,17 @@ object CorpusStream {
     * compute this once and pass it to the Set overload, so each call
     * doesn't re-derive (and re-broadcast) the grams. */
   def benchGramSet(bench: DataFrame, n: Int = 4): Set[String] = {
-    import graft.functions.TextFunctions.ngramsDistinct
-    bench.select(explode(ngramsDistinct(col("text"), lit(n))).as("gram"))
+    bench.select(explode(wordNgrams(col("text"), n, distinct = true)).as("gram"))
       .distinct().collect().map(_.getString(0)).toSet
   }
 
   def decontaminate(docs: DataFrame, benchGrams: Set[String], n: Int): DataFrame = {
-    import graft.functions.TextFunctions.ngramsDistinct
     val gramsB = docs.sparkSession.sparkContext.broadcast(benchGrams)
     val hitCount = udf { (docGrams: Seq[String]) =>
       if (docGrams == null) 0L else docGrams.count(gramsB.value.contains).toLong
     }
     docs
-      .withColumn("n_hit_grams", hitCount(ngramsDistinct(col("text"), lit(n))))
+      .withColumn("n_hit_grams", hitCount(wordNgrams(col("text"), n, distinct = true)))
       .withColumn("contaminated", col("n_hit_grams") > 0)
   }
 

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** The native JaccardSim/ContainmentSim expressions: bit-identical to
   * the UDF twins they replaced in the dedup verify joins (q33/q34/q76/
@@ -69,6 +70,14 @@ class SetSimExpressionsSpec extends SparkSuite {
     val ns = spark.sql("SELECT size(graft_minhash_sig(a)) ns FROM ss WHERE id = 6")
       .collect().head.getInt(0)
     assert(ns == 128)
+    // graft_shingles is the native WordNgrams kernel, not a UDF
+    val sh = spark.sql("SELECT graft_shingles(t) sh FROM VALUES ('a b c d a b c') AS v(t)")
+    val analyzed = sh.queryExecution.analyzed
+    assert(analyzed.expressions.exists(_.exists {
+      case WordNgrams(_, 3, true) => true
+      case _ => false
+    }), analyzed.treeString)
+    assert(sh.head().getSeq[String](0) == Seq("a b c", "b c d", "c d a", "d a b"))
   }
 
   test("native SrpSig matches the reference loop; SQL + analysis gate") {
@@ -149,7 +158,7 @@ class SetSimExpressionsSpec extends SparkSuite {
       assert(r.getDouble(0) == r.getDouble(1), s"jaccard ${r.toString}")
       assert(r.getDouble(2) == r.getDouble(3), s"containment ${r.toString}")
     }
-    // the documented contract is SHINGLE SETS (TextFunctions.shingles
+    // the documented contract is SHINGLE SETS (GraftFunctions.shingles
     // emits distinct arrays); duplicate-carrying input is out-of-set
     // bag semantics where the measure may exceed 1 — what this pin
     // guarantees is that both implementations say the SAME thing there
@@ -326,6 +335,35 @@ class SetSimExpressionsSpec extends SparkSuite {
         GraftFunctions.litSplitWords(col("t"), " ").as("n"))
       .head()
     assert(nr.isNullAt(0) && nr.isNullAt(1))
+  }
+
+  test("WordNgrams matches a split/slice/array_join SQL twin; non-null elements, null text → []") {
+    val texts = Seq(null, "", " ", "a", "a b", "a b c", "a  b c ", "  a b  ",
+      " x x x x x x", "the cat the cat the cat",
+      "héllo wörld 日本語 😀 héllo wörld 日本語 😀", "a😀b ß€  テスト a😀b ß€")
+    // the repartition keeps ConvertToLocalRelation from folding the
+    // projection into an interpreted eval: this case runs the codegen path
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+      .repartition(2)
+    for (n <- Seq(1, 2, 3, 4); distinct <- Seq(true, false)) {
+      val w = "split(text, ' ', -1)"
+      val all =
+        s"""CASE WHEN size($w) >= $n
+           |     THEN transform(sequence(1, size($w) - $n + 1),
+           |                    i -> array_join(slice($w, i, $n), ' '))
+           |     ELSE array() END""".stripMargin
+      val twin = expr(if (distinct) s"array_distinct($all)" else all)
+      val out = df.select(col("id"), col("text"),
+        GraftFunctions.wordNgrams(col("text"), n, distinct).as("k"), twin.as("s"))
+      assert(out.schema("k").dataType == ArrayType(StringType, containsNull = false))
+      assert(!out.schema("k").nullable)
+      out.collect().foreach { r =>
+        val k = r.getSeq[String](2)
+        if (r.isNullAt(1)) assert(k.isEmpty, s"n=$n distinct=$distinct null text: $k")
+        else assert(k == r.getSeq[String](3),
+          s"n=$n distinct=$distinct t='${r.getString(1)}': kernel $k vs sql ${r.getSeq[String](3)}")
+      }
+    }
   }
 
   test("PosOrderedSum matches aggregate(array_sort(pp), ...) bitwise (r15)") {

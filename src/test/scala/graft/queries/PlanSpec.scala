@@ -464,6 +464,34 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("partial"), p)
   }
 
+  test("q93, q96 and q103 reuse their corpus exchange") {
+    // Each query reads one corpus-derived subtree twice (q93/q103: the
+    // litSplit bigram counts behind c2 and c1; q96: the gram→df
+    // aggregation behind the join and the mean-df scalar). The copies
+    // canonicalize equal only while the split and shingle kernels
+    // declare non-null elements, so a nullable element type shows up
+    // here as a second full corpus pass instead of a ReusedExchange.
+    // Planned with AQE off, as `PlanDump canon` plans, so the reuse is
+    // visible in the static executed plan.
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      Seq(("q93", TextOps.q93LmScore _, "hashpartitioning(w1"),
+          ("q96", TextOps.q96BoilerplateGrams _, "hashpartitioning(gram"),
+          ("q103", TextOps.q103LmScorePruned _, "hashpartitioning(w1")
+      ).foreach { case (name, q, key) =>
+        val p = q(spark, sf).queryExecution.executedPlan.toString
+        // the reused exchange must be the corpus-derived one: q96 also
+        // reuses its doc_id text repartition, with or without the fix
+        assert(p.linesIterator.exists(l => l.contains("ReusedExchange") && l.contains(key)),
+          s"$name does not reuse its $key exchange:\n$p")
+        if (name == "q96")
+          assert(!p.linesIterator.exists(l =>
+            l.contains("Filter") && l.contains("isnotnull(gram")), p)
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
   test("q97 budget scan is one window exchange, no join") {
     val p = plan(TextOps.q97TokenBudget(spark, sf))
     assert(!p.contains("Join"), p)
