@@ -9,9 +9,8 @@ import scala.collection.mutable.ArrayBuffer
 
 /** The program's one stage profiler: a SparkListener that records one
   * row per completed stage and one per successful task, and scopes them
-  * to a measured body ([[measure]]). Every dev tool that attributes a
-  * query's wall time (StageClock, TaskSkew, SkewProbe, ScaleSweep)
-  * reads its numbers from here.
+  * to a measured body ([[measure]]). The profiling main
+  * (`tools.Profile`) reads its per-stage and per-task numbers from here.
   *
   * Listener callbacks arrive on Spark's async listener-bus thread, so
   * [[measure]] drains the bus BEFORE clearing (rows from earlier work

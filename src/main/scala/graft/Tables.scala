@@ -209,8 +209,7 @@ object Tables {
   private def fail(msg: String): Nothing =
     throw new IllegalStateException(s"testdata schema changed: $msg")
 
-  private val rowGroupMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Boolean]
+  private val rowGroupMemo = new SessionMemo[String, Boolean]()
 
   /** Whether the scan feeding `df` parallelizes to `width` NON-EMPTY
     * tasks on its own. TWO granularities must both suffice, and the
@@ -240,15 +239,13 @@ object Tables {
     * error lands on the err-toward-pinning side. */
   private def scanSelfParallel(df: DataFrame, width: Int): Boolean = {
     val s = df.sparkSession
-    rowGroupMemo.keySet.removeIf(_._1.sparkContext.isStopped)
     val files = df.inputFiles
     if (files.isEmpty) return false
     // maxPartitionBytes is part of the decision, so it keys the memo —
     // a session that retunes it (tests; an operator mid-session) must
     // not read a verdict computed under the old packing
     val maxPartBytes = s.sessionState.conf.filesMaxPartitionBytes
-    val key = (s, files.sorted.mkString(" ") + s"#$width#$maxPartBytes")
-    rowGroupMemo.computeIfAbsent(key, _ => {
+    rowGroupMemo(s, files.sorted.mkString(" ") + s"#$width#$maxPartBytes") {
       val conf = s.sessionState.newHadoopConf()
       val bytesNeeded = width.toLong * maxPartBytes
       // file sizes: one listStatus per parent dir (Spark's own listing
@@ -285,7 +282,7 @@ object Tables {
         }
         rg >= width
       }
-    })
+    }
   }
 
   /** Width pin for CPU-dense map pipelines, GATED on scan parallelism

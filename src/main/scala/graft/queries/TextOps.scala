@@ -24,9 +24,8 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** documents → (doc_id, sh) via the native shingle kernel
-    * (GraftFunctions.shingles: SetSimExpressions.WordNgrams at n = 3,
-    * distinct).
+  /** documents hash-partitioned on doc_id at a pinned width: the input
+    * of every shingle consumer ([[shingled]], [[shingleRows]]).
     *
     * The pinned-width repartition sits BELOW the kernel: documents is a
     * single parquet file (one row group → a 1-task scan), so a kernel
@@ -35,13 +34,22 @@ object TextOps {
     * exchange (cheaper than the shingle arrays it replaces) lets the
     * kernel run at full width in each consumer stage; the exchange
     * itself is reused across all consumer subtrees. */
-  private def shingled(docs: org.apache.spark.sql.DataFrame,
-                       width: Option[Int] = None) =
-    docs
-      .repartition(width.getOrElse(
-        docs.sparkSession.sessionState.conf.numShufflePartitions),
-        col("doc_id"))
-      .select(col("doc_id"), shingles(col("text")).as("sh"))
+  private def pinnedText(docs: DataFrame, width: Option[Int] = None): DataFrame =
+    docs.repartition(width.getOrElse(
+      docs.sparkSession.sessionState.conf.numShufflePartitions), col("doc_id"))
+
+  /** (doc_id, sh) via the native shingle kernel (GraftFunctions.shingles:
+    * SetSimExpressions.WordNgrams at n = 3, distinct). */
+  private def shingled(text: DataFrame): DataFrame =
+    text.select(col("doc_id"), shingles(col("text")).as("sh"))
+
+  /** (doc_id, s): one row per shingle. The explode takes the kernel
+    * call itself, never an `sh` column: over an attribute the optimizer
+    * infers `size(sh) > 0`, pushes it through the projection and the
+    * doc_id exchange, and so runs the kernel a second time in the
+    * one-task scan stage (PlanSpec pins the kernel above the exchange). */
+  private def shingleRows(text: DataFrame): DataFrame =
+    text.select(col("doc_id"), explode(shingles(col("text"))).as("s"))
 
   /** Hash-repartition with the partition COUNT pinned (REPARTITION_BY_NUM).
     * AQE's partition coalescing sizes stages by shuffle BYTES; the dedup
@@ -79,8 +87,7 @@ object TextOps {
     * no sort at all. Candidate order is irrelevant downstream (the
     * verify filter is per-row; q33 re-sorts only its tiny output), so
     * the sort was pure waste. */
-  private val verifySideMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]
+  private val verifySideMemo = new graft.SessionMemo[String, Long]()
 
   /** Memoized corpus-size estimate (one count+sum over documents per
     * (session, sfDir)): ~3 bytes of shingle per text byte + 48 B/row of
@@ -89,18 +96,15 @@ object TextOps {
     * from (q99's gram exchange: est/3 ≈ total chars). One memoized scan
     * feeds them all — q33 alone is rebuilt ~9× per session and q99 must
     * not re-pay a corpus aggregate per construction. */
-  private def docsEstBytes(s: SparkSession, d: String): Long = {
-    verifySideMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    verifySideMemo.computeIfAbsent((s, d), _ => {
+  private def docsEstBytes(s: SparkSession, d: String): Long =
+    verifySideMemo(s, d) {
       val stats = documents(s, d)
         .agg(count(lit(1)).as("n"), coalesce(sum(col("n_chars")), lit(0L)).as("b"))
         .head()
       stats.getLong(0) * 48L + stats.getLong(1) * 3L
-    })
-  }
+    }
 
-  private val custStatsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]
+  private val custStatsMemo = new graft.SessionMemo[String, Long]()
 
   /** Memoized q84 variant-inventory estimate (one count+sum(length)
     * over the customer dim per (session, sfDir), the docsEstBytes
@@ -108,9 +112,8 @@ object TextOps {
     * unmemoized it would bill a driver round-trip to every bench
     * construction): each side explodes len+1 deletion variants of
     * ~len chars + ~24 B of ids per name. */
-  private def custVariantEstBytes(s: SparkSession, d: String): Long = {
-    custStatsMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    custStatsMemo.computeIfAbsent((s, d), _ => {
+  private def custVariantEstBytes(s: SparkSession, d: String): Long =
+    custStatsMemo(s, d) {
       val st = customer(s, d)
         .agg(count(lit(1)).as("n"),
           coalesce(sum(length(col("c_name")).cast("long")), lit(0L)).as("l"))
@@ -118,8 +121,7 @@ object TextOps {
       val nCust = st.getLong(0); val sumLen = st.getLong(1)
       val avgLen = if (nCust > 0) sumLen / nCust else 0L
       (sumLen + nCust) * (avgLen + 24L)
-    })
-  }
+    }
 
   /** The two plan knobs of a dedup verify join, derived together from
     * the estimated build-side bytes. `attach` wraps the doc-array side:
@@ -441,8 +443,8 @@ object TextOps {
     // in-session, only the tiny pair-list output below is cached.
     // the verify width rides this pin into both verify-join build sides
     // through the doc_id aliases (see VerifyJoin)
-    val docs = shingled(documents(s, d), verifySide(s, d).width)
-      .select(col("doc_id"), col("sh"), size(col("sh")).as("n"))
+    val text = pinnedText(documents(s, d), verifySide(s, d).width)
+    val docs = shingled(text)
     // Global prefix order = (document frequency asc, hash) — AllPairs'
     // canonical rarest-first order, made the DEFAULT in round 9 on the
     // SkewProbe A/B at the synthetic-sf1 decade (BASELINE.md): a
@@ -457,7 +459,7 @@ object TextOps {
     // inventory exchanges (groupBy h + join) and a per-doc window —
     // ~+70% on q33 alone (~1-2 s at bench SF), the measured premium for
     // deleting a quadratic cliff.
-    val cands = pairCands(dfOrderedPrefix(docs, 4, 5))
+    val cands = pairCands(dfOrderedPrefix(text, 4, 5))
     q33Verify(s, d, docs, cands)
       // the pair list is tiny (near-dups are rare by definition) and has
       // two downstream consumers (q42 survivors, q58 release) —
@@ -486,21 +488,25 @@ object TextOps {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** df-ordered prefix index rows (doc_id, n, h) at threshold num/den:
-    * each doc keeps its n - ceil(num·n/den) + 1 rarest shingles under
-    * the global (document frequency asc, hash) order. The index carries
-    * ONLY the 64-bit hash: every candidate is exact-verified downstream,
-    * so a hash collision can only add a candidate the verify rejects —
-    * recall untouched (hash-equal ⊇ string-equal), exchange rows 8-byte
-    * longs. ceil in exact integers ((num·n + den-1) div den). */
-  private def dfOrderedPrefix(docs: DataFrame, num: Int, den: Int): DataFrame = {
-    val tok = docs.select(col("doc_id"), col("n"), explode(col("sh")).as("s"))
-      .select(col("doc_id"), col("n"), xxhash64(col("s")).as("h"))
+  /** df-ordered prefix index rows (doc_id, n, h) at threshold num/den
+    * over [[pinnedText]]: each doc keeps its n - ceil(num·n/den) + 1
+    * rarest shingles under the global (document frequency asc, hash)
+    * order, n being its distinct-shingle count (the window's whole-
+    * partition frame, computed in the same Window operator as the
+    * rank). The index carries ONLY the 64-bit hash: every candidate is
+    * exact-verified downstream, so a hash collision can only add a
+    * candidate the verify rejects — recall untouched (hash-equal ⊇
+    * string-equal), exchange rows 8-byte longs. ceil in exact integers
+    * ((num·n + den-1) div den). */
+  private def dfOrderedPrefix(text: DataFrame, num: Int, den: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val tok = shingleRows(text).select(col("doc_id"), xxhash64(col("s")).as("h"))
     val dfreq = tok.groupBy(col("h")).agg(count(lit(1)).as("dfreq"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("dfreq"), col("h"))
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("dfreq"), col("h"))
     tok.join(dfreq, "h")
-      .withColumn("r", row_number().over(w))
+      .select(col("doc_id"), col("h"), row_number().over(w).as("r"),
+        count(lit(1)).over(w.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing)).as("n"))
       .filter(col("r") <= col("n") - expr(s"($num * n + ${den - 1}) div $den") + 1)
       .select(col("doc_id"), col("n"), col("h"))
   }
@@ -545,7 +551,7 @@ object TextOps {
     // 128-perm kernel 32× per row. With shingled's exchange below and
     // this one above, both kernels run once per row at full width.
     val v = verifySide(s, d)
-    val docs = v.pinFirst(shingled(documents(s, d), v.width)
+    val docs = v.pinFirst(shingled(pinnedText(documents(s, d), v.width))
       .withColumn("sig", minhashSig(col("sh"))), "doc_id")
       // four consumers (both band sides + both verify sides); as in q33,
       // re-running the scan + kernels beats caching the wide arrays cold
@@ -669,6 +675,27 @@ object TextOps {
       .orderBy(col("doc_id"))
   }
 
+  /** Memo RECALLS (a call served by an entry an earlier call built) —
+    * Bench reads the delta around each timed query to disclose
+    * memo-consumer queries on the published line (`memo_hits`, r15
+    * verdict: q72's per-query second is amortization, not cost-from-
+    * cold, and the artifact should say so itself). Builds don't count. */
+  private val memoRecallCount = new java.util.concurrent.atomic.AtomicLong
+  private[graft] def memoRecalls: Long = memoRecallCount.get
+
+  /** The CC label table is memoized per (session, sfDir) — the q104
+    * trainMemo treatment (r15): [[ccLabelsStar]] is a DRIVER-side loop
+    * (per round: two counts + an except-isEmpty + localCheckpoints), so
+    * the CacheManager's plan-matched reuse cannot skip it — q72 (and
+    * any family composition) re-drove the whole loop per call even with
+    * every frame cached. The memoized frame roots at the loop's final
+    * localCheckpointed RDD (data, not plans — the trainSteps contract);
+    * [[clearTrainMemo]] clears it at every isolation point (Verify
+    * per-query, Bench retakes, Profile reps), so no
+    * measurement ever reads invisibly-warm labels. */
+  private val ccLabelsMemo = new graft.SessionMemo[String, DataFrame](
+    unpersistCheckpointed, Some(memoRecallCount))
+
   /** q62: near-dup cluster assignment — connected components over the
     * q33 pair graph with min-label canonicalization: every document gets
     * the smallest doc_id transitively reachable through ≥0.8-Jaccard
@@ -693,51 +720,15 @@ object TextOps {
     * rounds at toy scale and wins everywhere else, and one code path
     * beats two guarded ones. The min-label propagator below is kept as
     * an independent implementation, spec-pinned label-identical. */
-  /** The CC label table is memoized per (session, sfDir) — the q104
-    * trainMemo treatment (r15): [[ccLabelsStar]] is a DRIVER-side loop
-    * (per round: two counts + an except-isEmpty + localCheckpoints), so
-    * the CacheManager's plan-matched reuse cannot skip it — q72 (and
-    * any family composition) re-drove the whole loop per call even with
-    * every frame cached. The memoized frame roots at the loop's final
-    * localCheckpointed RDD (data, not plans — the trainSteps contract);
-    * [[clearTrainMemo]] clears it at every isolation point (Verify
-    * per-query, Bench retakes, ScaleSweep/StageClock reps), so no
-    * measurement ever reads invisibly-warm labels. */
-  private val ccLabelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  /** Memo RECALLS (a call served by an entry an earlier call built) —
-    * Bench reads the delta around each timed query to disclose
-    * memo-consumer queries on the published line (`memo_hits`, r15
-    * verdict: q72's per-query second is amortization, not cost-from-
-    * cold, and the artifact should say so itself). Builds don't count. */
-  private val memoRecallCount = new java.util.concurrent.atomic.AtomicLong
-  private[graft] def memoRecalls: Long = memoRecallCount.get
-
   def q62DupClusters(s: SparkSession, d: String): DataFrame = {
-    ccLabelsMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    val key = (s, d)
-    // get-then-putIfAbsent, NOT computeIfAbsent (r15 ADVICE): the CC
-    // loop is a multi-round driver-side Spark job and must not run
-    // while holding the CHM bin lock — a concurrent caller on a
-    // same-bin key would block for the loop's whole duration and a
-    // reentrant call would deadlock/throw. A lost race costs one
-    // duplicate build (the loser's blocks are released), never
-    // wrongness.
-    var labels = ccLabelsMemo.get(key)
-    if (labels != null) memoRecallCount.incrementAndGet()
-    else {
-      // checkpoint the LABEL frame itself, not just the loop's edge
-      // set (r15 ADVICE): ccLabelsStar returns the union+distinct
-      // projection PLAN over the checkpointed edges, so a memo of that
-      // plan re-executed two distinct shuffles on every warm recall —
-      // materialized labels make recalls pure data reads.
-      val built = ccLabelsStar(
-        q33NgramJaccard(s, d).select(col("doc_a"), col("doc_b")))
+    // checkpoint the LABEL frame itself, not just the loop's edge set
+    // (r15 ADVICE): ccLabelsStar returns the union+distinct projection
+    // PLAN over the checkpointed edges, so a memo of that plan
+    // re-executed two distinct shuffles on every warm recall —
+    // materialized labels make recalls pure data reads.
+    val labels = ccLabelsMemo(s, d) {
+      ccLabelsStar(q33NgramJaccard(s, d).select(col("doc_a"), col("doc_b")))
         .localCheckpoint(true)
-      val prev = ccLabelsMemo.putIfAbsent(key, built)
-      if (prev != null) { unpersistCheckpointed(built); labels = prev }
-      else labels = built
     }
     documents(s, d).select(col("doc_id"))
       .join(labels.withColumnRenamed("u", "doc_id"), Seq("doc_id"), "left")
@@ -902,8 +893,8 @@ object TextOps {
     * the native codegen'd xxhash64 (same seed as the kernel's). */
   def q88ContainmentJoin(s: SparkSession, d: String): DataFrame = {
     import graft.functions.GraftFunctions.containmentSim
-    val docs = shingled(documents(s, d), verifySide(s, d).width)
-      .select(col("doc_id"), col("sh"), size(col("sh")).as("n"))
+    val text = pinnedText(documents(s, d), verifySide(s, d).width)
+    val docs = shingled(text)
     // index rows carry only the 64-bit hash (as in q33): the exact
     // containment verify below rejects any hash-collision candidate,
     // so recall is untouched and the big B-side index exchange ships
@@ -914,11 +905,10 @@ object TextOps {
     // the full hot posting list (~0.1·df × df candidates: 14.2 s vs
     // this form's flat reading on the synthetic-sf1 hot corpus); under
     // rarest-first ordering high-df shingles never enter A-prefixes.
-    val prefA = dfOrderedPrefix(docs, 9, 10)
+    val prefA = dfOrderedPrefix(text, 9, 10)
       .select(col("doc_id").as("id_a"), col("h"))
-    val fullB = docs.select(col("doc_id").as("id_b"),
-        explode(col("sh")).as("s"))
-      .select(col("id_b"), xxhash64(col("s")).as("h"))
+    val fullB = shingleRows(text)
+      .select(col("doc_id").as("id_b"), xxhash64(col("s")).as("h"))
     val cands = prefA.join(fullB, Seq("h"))
       .filter(col("id_a") =!= col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
@@ -1077,7 +1067,7 @@ object TextOps {
     * the 64 MB cap would need gigabytes of exploded variants). */
   private[graft] def claimCustEstBytes(s: SparkSession, d: String,
                                        bytes: Long): Unit =
-    custStatsMemo.put((s, d), bytes)
+    custStatsMemo.put(s, d, bytes)
 
   /** q83: corpus diversity audit — per-source distinct-vs-total 3-gram
     * counts and type-token ratio: the "is this source repetitive
@@ -1210,8 +1200,8 @@ object TextOps {
     * nulls — the keep/drop verdict list. */
   def q76IncrementalDedup(s: SparkSession, d: String): DataFrame = {
     import graft.functions.GraftFunctions.jaccardSim
-    val all = shingled(documents(s, d), verifySide(s, d).width)
-      .select(col("doc_id"), col("sh"), size(col("sh")).as("n"))
+    val text = pinnedText(documents(s, d), verifySide(s, d).width)
+    val all = shingled(text)
     val inc = all.filter(col("doc_id") % 10 === 7)
     val corpus = all.filter(col("doc_id") % 10 =!= 7)
     // hash-only index rows, as in q33: the exact Jaccard verify rejects
@@ -1222,7 +1212,7 @@ object TextOps {
     // computed over the WHOLE corpus (inc + existing) so both sides
     // share one global order, the prefix theorem's requirement; the
     // oracle's dfq does the same.
-    val prefAll = dfOrderedPrefix(all, 4, 5)
+    val prefAll = dfOrderedPrefix(text, 4, 5)
     val cands = prefAll.filter(col("doc_id") % 10 === 7).as("a")
       .join(prefAll.filter(col("doc_id") % 10 =!= 7).as("b"),
         col("a.h") === col("b.h") &&
@@ -1652,8 +1642,7 @@ object TextOps {
     val bg = lmBigrams(w)
     val c2 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
     val c1 = c2.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
-    val v = w.select(explode(col("w")).as("t"))
-      .agg(count_distinct(col("t")).as("v"))
+    val v = lmVocab(documents(s, d))
     val p = bg
       .join(c2, Seq("w1", "w2"))
       .join(c1, Seq("w1"))
@@ -1685,6 +1674,14 @@ object TextOps {
       |  CASE WHEN size(w) >= 2 THEN sequence(0, size(w) - 2)
       |       ELSE array() END,
       |  i -> struct(i AS pos, w[i] AS w1, w[i+1] AS w2))""".stripMargin
+
+  /** The one-row vocabulary size V of q93/q103's add-one smoothing.
+    * The explode takes the split call itself, not the `w` column: over
+    * an attribute the optimizer infers `size(w) > 0` and pushes it below
+    * the projection, so the split would run twice per row. */
+  private def lmVocab(docs: DataFrame): DataFrame =
+    docs.select(explode(litSplit(col("text"), " ")).as("t"))
+      .agg(count_distinct(col("t")).as("v"))
 
   /** The (pos, w1, w2) bigram explode shared by q93/q103 — one edit
     * point so the two queries (and their mirrored oracles) can never
@@ -1761,8 +1758,8 @@ object TextOps {
     // this query's plan pin encodes still holds verbatim AT SCALE —
     // the narrow raw-text exchange exists only in the small-corpus
     // regime where it is the difference between 1 and 32 cores.
-    val w = cpuWidthPin(documents(s, d))
-      .select(col("doc_id"), litSplit(col("text"), " ").as("w"))
+    val docs = cpuWidthPin(documents(s, d))
+    val w = docs.select(col("doc_id"), litSplit(col("text"), " ").as("w"))
     val bg = lmBigrams(w)
     val cnt = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
     val kept = cnt
@@ -1780,8 +1777,7 @@ object TextOps {
     // bigram pass feeds kept, c1 and the probe join via ReusedExchange.
     val c1 = cnt.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
       .join(kept.select(col("w1")).distinct(), Seq("w1"))
-    val v = w.select(explode(col("w")).as("t"))
-      .agg(count_distinct(col("t")).as("v"))
+    val v = lmVocab(docs)
     val p = bg
       .join(kept, Seq("w1", "w2"), "left")
       .join(c1, Seq("w1"), "left")
@@ -1860,8 +1856,8 @@ object TextOps {
     * the df table (gram-vocabulary-sized input, one row out) that
     * broadcasts; per-doc reassembly is one hash-agg keyed doc_id. */
   def q96BoilerplateGrams(s: SparkSession, d: String): DataFrame = {
-    val g = shingled(documents(s, d))
-      .select(col("doc_id"), explode(col("sh")).as("gram"))
+    val g = shingleRows(pinnedText(documents(s, d)))
+      .select(col("doc_id"), col("s").as("gram"))
     val df = g.groupBy(col("gram"))
       .agg(count_distinct(col("doc_id")).as("gram_df"))
     val m = df.agg(
@@ -1999,8 +1995,7 @@ object TextOps {
     * width formula itself). */
   private[graft] val HotGramTaskRowBudget = GramSliceBytes / WiredGramRowBytes // = 2^19 rows, the 16 MB gram-slice target
 
-  private val hotDfMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]
+  private val hotDfMemo = new graft.SessionMemo[String, Long]()
 
   /** Estimate of the corpus's maximum gram document frequency
     * (POSITION count, intra-doc repeats included — the unit the window
@@ -2026,9 +2021,8 @@ object TextOps {
     * per (session, sfDir), computed only in the byte-width regime (the
     * gate short-circuits below it), so bench-SF plan construction pays
     * nothing. */
-  private def estMaxGramDf(s: SparkSession, d: String): Long = {
-    hotDfMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    hotDfMemo.computeIfAbsent((s, d), _ => {
+  private def estMaxGramDf(s: SparkSession, d: String): Long =
+    hotDfMemo(s, d) {
       val sampled = pmod(xxhash64(col("doc_id")), lit(HotGramSampleMod)) === 0
       val big = col("n_chars") > HotGramTaskRowBudget / 4
       // chunked generation here too (r14 review): the big-doc census
@@ -2053,8 +2047,7 @@ object TextOps {
           coalesce(max(col("cb")), lit(0L)).as("mb"))
         .head()
       math.max(r.getLong(0) * HotGramSampleMod, r.getLong(1))
-    })
-  }
+    }
 
   /** q99: exact duplicated-substring spans — the Lee et al.
     * "Deduplicating Training Data Makes Language Models Better"
@@ -2326,23 +2319,14 @@ object TextOps {
     * after round 0, the standard scalable BPE formulation. The corpus
     * is touched once more at the end: a map-only tokenize via the
     * broadcast final vocabulary. */
-  def q100BpeMerges(s: SparkSession, d: String): DataFrame =
-    q100BpeMergesWith(s, d, joinVocab(s, d, _, _))
-
-  /** Dev-only gate A/B twin (r15): q100 with its tokenize join forced
-    * to broadcast — the [[q106BpeEncodeBroadcast]] rationale. */
-  private[graft] def q100BpeMergesBroadcast(s: SparkSession, d: String): DataFrame =
-    q100BpeMergesWith(s, d, (w, p) => w.join(broadcast(p), Seq("word")))
-
-  private def q100BpeMergesWith(s: SparkSession, d: String,
-      tokJoin: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+  def q100BpeMerges(s: SparkSession, d: String): DataFrame = {
     val ind = bpeInduction(s, d)
     val vt = ind.v3.select(col("word"),
       length(col("word")).cast("long").as("n_base"),
       size(litSplit(trim(col("seq")), "  ")).cast("long").as("n_toks"))
     def mcol(m: DataFrame, name: String): DataFrame =
       m.select(concat(col("s1"), col("s2")).as(name))
-    tokJoin(ind.dw, vt)
+    joinVocab(s, d, ind.dw, vt)
       .crossJoin(broadcast(mcol(ind.m1, "m1")))
       .crossJoin(broadcast(mcol(ind.m2, "m2")))
       .crossJoin(broadcast(mcol(ind.m3, "m3")))
@@ -2370,8 +2354,7 @@ object TextOps {
     .select(col("doc_id"), explode(litSplit(col("text"), " ")).as("word"))
     .filter(col("word") =!= "")
 
-  private val vocabStatsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]
+  private val vocabStatsMemo = new graft.SessionMemo[String, Long]()
 
   /** Memoized VOCABULARY byte estimate (distinct words × per-row
     * payload bytes): the word→tokens build side of the q100/q106
@@ -2390,17 +2373,15 @@ object TextOps {
     * the gate serves (r14 review). Payload ≈ avgLen × 4 (the encoded
     * token string runs up to ~2× the word plus separators) + 48 B of
     * counts/row overhead. */
-  private def vocabEstBytes(s: SparkSession, d: String): Long = {
-    vocabStatsMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    vocabStatsMemo.computeIfAbsent((s, d), _ => {
+  private def vocabEstBytes(s: SparkSession, d: String): Long =
+    vocabStatsMemo(s, d) {
       val st = docWords(documents(s, d))
         .select(col("word")).distinct()
         .agg(count(lit(1)).as("n"),
           coalesce(avg(length(col("word"))), lit(0.0)).as("l"))
         .head()
       (st.getLong(0) * (st.getDouble(1) * 4.0 + 48.0)).toLong
-    })
-  }
+    }
 
   /** Base salt fan-out of the shuffled tokenize join's build side: a
     * Zipf corpus concentrates a hot word ('the' ≈ 3-5% of all
@@ -2426,8 +2407,7 @@ object TextOps {
     * doc's size, the accepted islands class. */
   private[graft] val VocabSaltFactor = 16
 
-  private val hotVocabMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Seq[String]]
+  private val hotVocabMemo = new graft.SessionMemo[String, Seq[String]]()
 
   /** The certified-hot vocabulary of (session, sfDir): words whose df
     * reaches [[VocabSaltFactor]] × (total occurrences / width) — the
@@ -2436,9 +2416,8 @@ object TextOps {
     * the q60-bloom adjudicated shape); memoized like the other
     * plan-construction stats; computed only in the beyond-cap regime
     * ([[joinVocabShuffled]] is its only caller). */
-  private def hotVocabWords(s: SparkSession, d: String, w: Int): Seq[String] = {
-    hotVocabMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    hotVocabMemo.computeIfAbsent((s, d), _ => {
+  private def hotVocabWords(s: SparkSession, d: String, w: Int): Seq[String] =
+    hotVocabMemo(s, d) {
       val cnts = docWords(documents(s, d))
         .groupBy(col("word")).agg(count(lit(1)).as("c"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2448,8 +2427,7 @@ object TextOps {
         cnts.filter(col("c") >= thr).select(col("word"))
           .collect().map(_.getString(0)).toSeq
       } finally { cnts.unpersist(); () }
-    })
-  }
+    }
 
   /** Exchange width of [[joinVocabShuffled]], pure in its byte inputs
     * so the salt-replication term is unit-testable (plan-shape tests
@@ -2620,17 +2598,25 @@ object TextOps {
     * the output granularity: the encoded document IS one row, so no
     * smaller assembly unit exists without changing the result schema.
     * Bounded by the largest single document, not the corpus. */
-  def q106BpeEncode(s: SparkSession, d: String): DataFrame =
-    q106BpeEncodeWith(s, d, joinVocab(s, d, _, _))
-
-  /** Dev-only gate A/B twin (r15): q106 with the tokenize join FORCED
-    * to the broadcast regime, so SkewProbe can pin shuffled == broadcast
-    * on a corpus where the gate actually selects the shuffle —
-    * TextOpsSpec's branch equality runs below the gate (broadcast side
-    * trivially right there); this handle makes the across-the-gate
-    * check non-vacuous. Not part of the driver contract. */
-  private[graft] def q106BpeEncodeBroadcast(s: SparkSession, d: String): DataFrame =
-    q106BpeEncodeWith(s, d, (w, p) => w.join(broadcast(p), Seq("word")))
+  def q106BpeEncode(s: SparkSession, d: String): DataFrame = {
+    val ind = bpeInduction(s, d)
+    // word → (its encoded token string, token count): the learned
+    // table applied once per DISTINCT word, then broadcast
+    val enc = ind.v3.select(col("word"),
+      array_join(litSplit(trim(col("seq")), "  "), " ").as("toks"),
+      size(litSplit(trim(col("seq")), "  ")).cast("long").as("n_toks"))
+    val wp = cpuWidthPin(documents(s, d))
+      .select(col("doc_id"),
+        posexplode(litSplit(col("text"), " ")).as(Seq("pos", "word")))
+      .filter(col("word") =!= "")
+    joinVocab(s, d, wp, enc)
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_words"),
+        sum(col("n_toks")).as("n_tokens"),
+        array_join(sort_array(collect_list(struct(col("pos"), col("toks"))))
+          .getField("toks"), " ").as("tokens"))
+      .orderBy(col("doc_id"))
+  }
 
   /** The learned merge table as plain pairs — the broadcast payload of
     * the STREAMING encode twin ([[graft.streaming.CorpusStream.encode]],
@@ -2643,27 +2629,6 @@ object TextOps {
       val r = m.select(col("s1"), col("s2")).head()
       (r.getString(0), r.getString(1))
     }
-  }
-
-  private def q106BpeEncodeWith(s: SparkSession, d: String,
-      tokJoin: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val ind = bpeInduction(s, d)
-    // word → (its encoded token string, token count): the learned
-    // table applied once per DISTINCT word, then broadcast
-    val enc = ind.v3.select(col("word"),
-      array_join(litSplit(trim(col("seq")), "  "), " ").as("toks"),
-      size(litSplit(trim(col("seq")), "  ")).cast("long").as("n_toks"))
-    val wp = cpuWidthPin(documents(s, d))
-      .select(col("doc_id"),
-        posexplode(litSplit(col("text"), " ")).as(Seq("pos", "word")))
-      .filter(col("word") =!= "")
-    tokJoin(wp, enc)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_words"),
-        sum(col("n_toks")).as("n_tokens"),
-        array_join(sort_array(collect_list(struct(col("pos"), col("toks"))))
-          .getField("toks"), " ").as("tokens"))
-      .orderBy(col("doc_id"))
   }
 
   /** q101: hashed-feature linear quality classifier — the
@@ -2841,34 +2806,17 @@ object TextOps {
   private final case class TrainArtifacts(steps: DataFrame, feats: DataFrame,
                                           labels: DataFrame)
   private val trainConfLock = new Object
-  private val trainStepsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), TrainArtifacts]
+  private val trainStepsMemo = new graft.SessionMemo[String, TrainArtifacts](
+    a => { unpersistCheckpointed(a.feats); unpersistCheckpointed(a.labels) },
+    Some(memoRecallCount))
 
-  private def trainArtifacts(s: SparkSession, d: String): TrainArtifacts = {
-    // evict entries whose session has stopped: they pin checkpointed
-    // RDDs of dead sessions forever, and a reuse would surface as an
-    // opaque "SparkContext has been shut down" instead of a retrain
-    trainStepsMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    val key = (s, d)
-    // get-then-putIfAbsent (r15 ADVICE, the ccLabelsMemo treatment):
-    // the 12-epoch training loop must not run under the CHM bin lock.
-    var a = trainStepsMemo.get(key)
-    if (a != null) memoRecallCount.incrementAndGet()
-    else {
-      val built = trainStepsUncached(s, d)
-      val prev = trainStepsMemo.putIfAbsent(key, built)
-      if (prev != null) {
-        unpersistCheckpointed(built.feats); unpersistCheckpointed(built.labels)
-        a = prev
-      } else a = built
-    }
-    a
-  }
+  private def trainArtifacts(s: SparkSession, d: String): TrainArtifacts =
+    trainStepsMemo(s, d)(trainStepsUncached(s, d))
 
   /** Release the localCheckpointed blocks rooting a memoized frame —
     * the CacheManager cannot see them (they are RDD persists, not
     * relation caches), so without this every isolation-point clear
-    * (Verify per-query, Bench retakes, ScaleSweep reps) left orphaned
+    * (Verify per-query, Bench retakes, Profile reps) left orphaned
     * blocks in the BlockManager until GC + ContextCleaner got around
     * to them (r15 ADVICE). Unpersisting a localCheckpointed RDD makes
     * it unrecomputable, which is exactly the contract here: the memo
@@ -2883,21 +2831,17 @@ object TextOps {
     trainArtifacts(s, d).steps
 
   /** For measurement tools only: drops the memoized trajectories so a
-    * cold-cache sweep re-pays training (ScaleSweep clears this beside
+    * cold-cache sweep re-pays training (`Session.isolate` clears this beside
     * the CacheManager — localCheckpointed RDDs are not CacheManager
     * entries, so clearCache() alone would leave training invisibly
     * warm and the q104 scaling row would lie). */
   private[graft] def clearTrainMemo(): Unit = {
-    // unpersist the checkpointed blocks BEFORE dropping the entries
-    // (r15 ADVICE): clear() alone orphaned them in the BlockManager
-    trainStepsMemo.values.forEach { a =>
-      unpersistCheckpointed(a.feats); unpersistCheckpointed(a.labels)
-    }
+    // each clear unpersists the checkpointed blocks BEFORE dropping the
+    // entries (r15 ADVICE): dropping alone orphaned them in the
+    // BlockManager. The q62 CC-label memo rides the same isolation
+    // points (r15): its frame roots at localCheckpointed RDDs the
+    // CacheManager cannot see, exactly like the training trajectory
     trainStepsMemo.clear()
-    // the q62 CC-label memo rides the same isolation points (r15): its
-    // frame roots at localCheckpointed RDDs the CacheManager cannot
-    // see, exactly like the training trajectory above
-    ccLabelsMemo.values.forEach(unpersistCheckpointed(_))
     ccLabelsMemo.clear()
   }
 

@@ -492,6 +492,49 @@ class PlanSpec extends SparkSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  test("each doc's text kernel runs once: none below the doc_id exchange, no split-size filter") {
+    // An explode over a kernel's output COLUMN makes the optimizer infer
+    // `size(col) > 0` and push it through the projection and the doc_id
+    // exchange: the kernel then also runs in the one-task scan stage.
+    // Planned with AQE off, as `PlanDump canon` plans.
+    // q33's pair list is cached: its plan sits behind the cache scan
+    import org.apache.spark.sql.execution.{SparkPlan, FilterExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    def calls(p: SparkPlan, kernel: String): Boolean =
+      nodes(p).exists(_.expressions.exists(_.toString.contains(kernel)))
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      Seq(("q33", TextOps.q33NgramJaccard _), ("q88", TextOps.q88ContainmentJoin _),
+          ("q96", TextOps.q96BoilerplateGrams _)).foreach { case (name, q) =>
+        val p = q(spark, sf).queryExecution.executedPlan
+        val byDocId = nodes(p).collect {
+          case e: ShuffleExchangeExec if e.outputPartitioning.toString.startsWith("hashpartitioning(doc_id") => e
+        }
+        assert(byDocId.nonEmpty, s"$name has no doc_id exchange:\n$p")
+        byDocId.foreach(e => assert(!calls(e.child, "graft_word_ngrams"),
+          s"$name runs the shingle kernel below its doc_id exchange:\n$p"))
+      }
+      Seq(("q93", TextOps.q93LmScore _), ("q103", TextOps.q103LmScorePruned _)).foreach {
+        case (name, q) =>
+          val p = q(spark, sf).queryExecution.executedPlan
+          assert(!nodes(p).exists {
+            case f: FilterExec =>
+              f.condition.toString.contains("graft_literal_split")
+            case _ => false
+          }, s"$name evaluates the split inside a filter:\n$p")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
   test("q97 budget scan is one window exchange, no join") {
     val p = plan(TextOps.q97TokenBudget(spark, sf))
     assert(!p.contains("Join"), p)

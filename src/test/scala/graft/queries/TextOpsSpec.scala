@@ -671,19 +671,38 @@ class TextOpsSpec extends SparkSuite {
     // join it must equal (the pinned-across-the-gate discipline every
     // regime gate in this file carries)
     import org.apache.spark.sql.functions._
-    val wp = graft.Tables.documents(spark, sf)
-      .select(col("doc_id"),
-        posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
-      .filter(col("word") =!= "")
-    val payload = wp.groupBy(col("word"))
-      .agg(count(lit(1)).as("c"), max(length(col("word"))).as("len"))
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("word"), col("doc_id"), col("pos"), col("c"), col("len"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2),
-        r.getLong(3), r.getInt(4))).sorted.toSeq
-    val shuffled = rows(TextOps.joinVocabShuffled(spark, sf, wp, payload))
-    val bcast = rows(wp.join(broadcast(payload), Seq("word")))
-    assert(shuffled.nonEmpty && shuffled == bcast)
+    def check(dir: String): org.apache.spark.sql.DataFrame = {
+      val wp = graft.Tables.documents(spark, dir)
+        .select(col("doc_id"),
+          posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
+        .filter(col("word") =!= "")
+      val payload = wp.groupBy(col("word"))
+        .agg(count(lit(1)).as("c"), max(length(col("word"))).as("len"))
+      def rows(df: org.apache.spark.sql.DataFrame) = df
+        .select(col("word"), col("doc_id"), col("pos"), col("c"), col("len"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2),
+          r.getLong(3), r.getInt(4))).sorted.toSeq
+      val joined = TextOps.joinVocabShuffled(spark, dir, wp, payload)
+      val shuffled = rows(joined)
+      val bcast = rows(wp.join(broadcast(payload), Seq("word")))
+      assert(shuffled.nonEmpty && shuffled == bcast, dir)
+      joined
+    }
+    check(sf)
+    // the uniqvocab adversary: doc-unique words grow the vocabulary and
+    // three copies of "the" per doc make one word hot. n_chars is
+    // inflated so the byte-derived width (~400) certifies "the" hot
+    // (df >= 16 x occurrences / width): the word salts across the full
+    // width, the branch the real word stream never reaches
+    val adv = java.nio.file.Files.createTempDirectory("graft_uniqvocab").toString
+    graft.tools.SynthCorpus.build(spark, sf, adv, 1, Set("documents"),
+      Some(graft.tools.SynthCorpus.adversary("uniqvocab:2")))
+    val wide = java.nio.file.Files.createTempDirectory("graft_uniqvocab_wide").toString
+    spark.read.parquet(s"$adv/documents.parquet")
+      .withColumn("n_chars", col("n_chars") * lit(120000L))
+      .write.mode("overwrite").parquet(s"$wide/documents.parquet")
+    val hotPlan = check(wide).queryExecution.executedPlan.toString
+    assert(hotPlan.contains("CASE WHEN"), hotPlan)
   }
 
   test("joinVocabWidth sizes the build from the salt-REPLICATED bytes (r15)") {
