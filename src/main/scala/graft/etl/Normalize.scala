@@ -3,6 +3,7 @@ package graft.etl
 import graft.functions.PhyFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Per-source normalization pipelines (SURVEY §2.3 P1-P18, §2.4 F0) —
   * declarative column programs; all JSON decoding via `from_json`, all PHY
@@ -31,29 +32,35 @@ object Normalize {
 
   import PacketSchema._
 
-  /** Null literal typed from the packet schema — shared with the fused
-    * normalize path (Pipeline.toChirpRecs) so the null typing cannot
-    * drift between the two forms. */
-  private[graft] def nullCol(name: String): Column = {
+  /** Null literal typed from the packet schema. */
+  private def nullCol(name: String): Column = {
     val f = packet.fields(packet.fieldIndex(name))
     lit(null).cast(f.dataType).as(name)
   }
 
+  /** The packet fields every dialect copies from the flat phy_decode
+    * struct (dev_eui aside: its source varies by dialect). */
+  private val phyFields = Seq("m_type", "major", "mic", "join_eui",
+    "dev_nonce", "dev_addr", "adr", "ack", "adr_ack_req", "f_pending",
+    "class_b", "f_count", "f_opts", "f_port", "error")
+
   /** Splice the flat phy_decode struct into packet columns. `mType`
     * overrides the first column (the P7 generic-MQTT JoinAccept topic
     * rule) so dialects never re-inline this list. */
-  private def phyCols(phy: Column, mType: Option[Column] = None): Seq[Column] = Seq(
-    mType.getOrElse(phy("m_type")).as("m_type"),
-    phy("major").as("major"), phy("mic").as("mic"),
-    phy("join_eui").as("join_eui"),
-    phy("dev_nonce").as("dev_nonce"),
-    phy("dev_addr").as("dev_addr"), phy("adr").as("adr"), phy("ack").as("ack"),
-    phy("adr_ack_req").as("adr_ack_req"), phy("f_pending").as("f_pending"),
-    phy("class_b").as("class_b"), phy("f_count").as("f_count"),
-    phy("f_opts").as("f_opts"), phy("f_port").as("f_port"),
-    phy("error").as("error"))
+  private def phyCols(phy: Column, mType: Option[Column] = None): Seq[Column] =
+    phyFields.map {
+      case "m_type" => mType.getOrElse(phy("m_type")).as("m_type")
+      case f => phy(f).as(f)
+    }
 
   // ------------------------------------------------------------ ChirpStack
+  //
+  // Each ChirpStack rule is defined once here and read by both the fused
+  // normalizer (Pipeline.toChirpRecs) and its branch-per-route oracle
+  // (Pipeline.toChirpRecsUnion). A rule takes the probe values it needs
+  // (the devAddr, location and key probes) as arguments, so the fused
+  // form passes its gated named columns where the oracle passes the probe
+  // expressions themselves.
 
   /** F0e topic router (LoraServerIOCollector.py:287,307-309,403-409,450). */
   def chirpstackRoute(topic: Column): Column =
@@ -68,12 +75,78 @@ object Normalize {
     when(c === "CRC_OK", 1).when(c === "BAD_CRC", -1).when(c === "NO_CRC", 0)
       .otherwise(lit(null).cast("int"))
 
+  /** F0h raw-protobuf leg (LoraServerIOCollector.py:254-261): a message
+    * that is not JSON text on a gateway/.../up topic is tried as a base64
+    * gw.UplinkFrame; success yields its MessageToJson text, fed to the
+    * SAME proto-dialect normalization (null otherwise). MessageToJson
+    * output always starts with '{', base64 never does — a cheap exact
+    * discriminator. */
+  def chirpstackProtoJson(topic: Column, msg: Column): Column =
+    when(topic.rlike("^gateway/.*up$") && !ltrim(msg).startsWith("{"),
+      PhyFunctions.proto_uplink_json(msg))
+
+  /** F0h dialect sniff (LoraServerIOCollector.py:238-280): JSON text is
+    * protobuf-dialect iff one of the two proto-only nested paths exists
+    * — streaming path probes, no full parse. */
+  def chirpstackProtoShape(msg: Column): Column =
+    get_json_object(msg, "$.rxInfo.gatewayID").isNotNull ||
+      get_json_object(msg, "$.txInfo.loRaModulationInfo").isNotNull
+
+  /** json.loads failure on a parsed route (radio after the F0h proto
+    * retry, app, join) lands in the FIRST except (:243-280): flush +
+    * message-only envelope → route raw. `get_json_object(_, '$')` is null
+    * iff the text is not JSON — the columnar json.loads test (from_json
+    * CANNOT express it: PERMISSIVE mode renders malformed input as a
+    * struct of nulls, indistinguishable from a valid metadata-only
+    * message). The JSON literal `null` is NOT a failure: json.loads
+    * accepts it and the assembly block then crashes on None (every crash
+    * rule below fires for it), though the probe returns SQL NULL for it.
+    * (On /up topics the reference additionally swallows the message after
+    * the failed protobuf retry — this side still persists it as the
+    * raw-log row: strictly more information, same flush semantics.) */
+  def chirpstackNotJson(msg: Column): Column =
+    get_json_object(msg, "$").isNull && trim(msg) =!= "null"
+
+  /** F0c size guard (:311-315): only an OVERSIZED payload drops. The :314
+    * length check returns before the x_info blocks run, so it wins over
+    * every crash rule; a payload-less message can still yield a packet. */
+  def chirpstackOversized(pay: Column): Column = pay.isNotNull && length(pay) > 300
+
+  /** The key probe: `json_object_keys` models Python `'k' in dict` exactly
+    * (a JSON-null value still lists its key); null for a non-object root.
+    * The rules read it only on their [[KeyedCrash.probeGate]] rows. */
+  def chirpstackKeys(msg: Column): Column = json_object_keys(msg)
+
+  /** The F3 join message's devAddr probe (:287-290). */
+  def chirpstackJoinDevAddr(msg: Column): Column = get_json_object(msg, "$.devAddr")
+
+  /** The app message's first-rxInfo location probe, read by
+    * [[chirpstackAppCrash]] on the [[chirpstackLocGate]] rows only. */
+  def chirpstackLocText(msg: Column): Column =
+    get_json_object(msg, "$.rxInfo[0].location")
+
+  /** A crash rule whose verdict may need [[chirpstackKeys]]: `plain` is
+    * decided without it, and `keyed(keys)` is read only where `needsKeys`
+    * holds — so the probe is needed exactly on the [[probeGate]] rows. */
+  private[graft] final case class KeyedCrash(plain: Column, needsKeys: Column,
+                                             keyed: Column => Column) {
+    def probeGate: Column = !plain && needsKeys
+    def apply(keys: Column): Column = plain || (needsKeys && keyed(keys))
+  }
+
+  /** A PRESENT rxInfo/txInfo key whose parsed slot is null (the value is
+    * not an object, or JSON null). */
+  private def nullSlotKeyed(m: Column)(keys: Column): Column =
+    (m("rxInfo").isNull && array_contains(keys, "rxInfo")) ||
+      (m("txInfo").isNull && array_contains(keys, "txInfo"))
+
   /** The reference's second-try crash surface on a radio topic, JSON
     * dialect: a message that json.loads fine but whose STRUCTURE makes the
     * packet-assembly block raise into the outer `except`
     * (LoraServerIOCollector.py:496-500) — the reference then records ONLY
     * a parsing error: no packet, no message persisted, and no prev_packet
-    * flush (the raise lands before :370-376). Crash classes probed:
+    * flush (the raise lands before :370-376). That is route "perr", inert
+    * in chirpStep, unlike "raw" ([[chirpstackNotJson]]). Crash classes:
     *  - root not a JSON object → TypeError at `'phyPayload' in` (:311)
     *    or NameError/AttributeError at `x_info` (:341,353);
     *  - neither rxInfo nor txInfo key → NameError `x_info` (:353);
@@ -82,156 +155,207 @@ object Normalize {
     *  - the winning x_info (txInfo if present else rxInfo, :350-351)
     *    without an object-valued dataRate → AttributeError
     *    `data_rate.get('modulation')` (:357-358).
-    * Implementation is probe-cheap: every class is decided from the
-    * ALREADY-PARSED `from_json` struct `m` (a crashing shape parses its
-    * rxInfo/txInfo/dataRate slot to null), so a well-formed message pays
-    * ZERO extra JSON parses. The only re-parse — `json_object_keys(msg)`,
-    * which models Python `'k' in dict` exactly (a JSON-null value still
-    * lists its key) — sits behind a struct-null guard and therefore runs
-    * only for rows whose rxInfo/txInfo slot failed, to split key-absent
-    * (no crash by itself) from key-present-with-bad-value (crash).
+    * Every class is decided from the parsed struct `m` (a crashing shape
+    * parses its slot to null; a non-null tx slot ⇔ txInfo present and
+    * object-valued, so struct coalesce == the reference's assignment
+    * order, and both slots null already leave no dataRate); the key
+    * probe only splits key-absent (no crash by itself) from
+    * key-present-with-bad-value (crash) for ONE null slot.
     * Accepted residuals (documented, not probed — Catalyst's PERMISSIVE
     * coercion erases value typing): a string-typed `frequency` (TypeError
     * at :354) and mistyped scalar leaves inside an otherwise-object
     * x_info, which Python would copy through uncrashed but PERMISSIVE
     * partial-result parsing may null out. */
-  private[graft] def chirpstackJsonStructCrash(msg: Column, m: Column): Column = {
+  private[graft] def chirpstackJsonCrash(m: Column): KeyedCrash = {
     val rx = m("rxInfo"); val tx = m("txInfo")
-    def keyPresent(k: String) = array_contains(json_object_keys(msg), k)
-    // both slots null → crash whatever the keys say: absent keys are the
-    // NameError (:353), present-with-bad-value the AttributeError (:341)
-    (rx.isNull && tx.isNull) ||
-      (rx.isNull && keyPresent("rxInfo")) ||
-      (tx.isNull && keyPresent("txInfo")) ||
-      // winning x_info (txInfo if present else rxInfo, :350-351): a
-      // non-null tx slot ⇔ txInfo key present and object-valued here,
-      // so struct coalesce == the reference's assignment order
-      coalesce(tx, rx)("dataRate").isNull
+    KeyedCrash(coalesce(tx, rx)("dataRate").isNull, rx.isNull || tx.isNull,
+      nullSlotKeyed(m))
   }
 
   /** Same crash surface, protobuf dialect (the `is_protobuf_message`
     * branch, LoraServerIOCollector.py:321-338):
     *  - rxInfo present without gatewayID → TypeError at
     *    `base64.b64decode(None)` (:324); a non-object rxInfo also lands
-    *    here (the path probe extracts nothing);
+    *    here;
     *  - txInfo present without an object loRaModulationInfo (e.g. an FSK
     *    uplink frame) → AttributeError at `lora_modulation_info.get`
     *    (:335-338).
     * The root is always an object on this path (MessageToJson output, or
-    * text that already passed the nested proto-shape discriminator); a
-    * message with NEITHER side present does not crash — the proto branch
-    * never touches `x_info` outside the two `in` guards. Same probe-cheap
-    * structure as the JSON dialect: struct slots decide, key presence is
-    * consulted only when a slot is null.
+    * text that already passed the nested proto-shape sniff); a message
+    * with NEITHER side present does not crash — the proto branch never
+    * touches `x_info` outside the two `in` guards.
     *
     * Residual (documented): a PRESENT gatewayID whose text is not valid
     * base64 raises binascii.Error inside `base64.b64decode` (:324) in the
     * reference — parsing error, no packet — while this side's lenient
     * unbase64 keeps the packet with a mangled gateway id. Unreachable for
-    * real input: this branch only ever sees MessageToJson output (F0h
-    * sniff), and protobuf-JSON serializes `bytes` fields as valid base64
-    * by construction; probing would re-scan the raw text per row for a
-    * shape that cannot occur. */
-  private[graft] def chirpstackProtoStructCrash(msg: Column, m: Column): Column = {
+    * real input: this branch only ever sees MessageToJson output, and
+    * protobuf-JSON serializes `bytes` fields as valid base64 by
+    * construction. */
+  private[graft] def chirpstackProtoCrash(m: Column): KeyedCrash = {
     val rx = m("rxInfo"); val tx = m("txInfo")
-    def keyPresent(k: String) = array_contains(json_object_keys(msg), k)
-    (rx.isNull && keyPresent("rxInfo")) ||
+    KeyedCrash(
       (rx.isNotNull && rx("gatewayID").isNull) ||
-      (tx.isNull && keyPresent("txInfo")) ||
-      (tx.isNotNull && tx("loRaModulationInfo").isNull)
+        (tx.isNotNull && tx("loRaModulationInfo").isNull),
+      rx.isNull || tx.isNull, nullSlotKeyed(m))
   }
 
-  /** ChirpStack gateway radio path, JSON dialect (P8 + P3 + P15;
-    * LoraServerIOCollector.py:339-366). F0h encoding sniff: rows whose
-    * message fails JSON decode fall through with null parsed fields — feed
-    * them to [[chirpstackProtoRadio]] or the raw route.
-    *
-    * Reference quirk preserved: tmst/freq/gateway/modu/datr come from
-    * txInfo when present, else rxInfo (the `x_info` variable is simply the
-    * last one assigned, :354-360); chan/rfch/stat/codr/rssi/lsnr/size come
-    * only from rxInfo. */
-  def chirpstackJsonRadio(df: DataFrame): DataFrame = {
-    val m = from_json(col("message"), chirpstackGateway)
-    val phy = PhyFunctions.phy_decode_b64(m("phyPayload"))
-    val x = coalesce(m("txInfo"), m("rxInfo")) // tmst/freq/gateway source
-    // F0c size guard: only OVERSIZED payloads drop; a payload-less message
-    // can still yield a radio packet (LoraServerIOCollector.py:311-315
-    // guards inside `if 'phyPayload' in mqtt_messsage`) — but only when
-    // the x_info/dataRate structure survives the reference's assembly
-    // block; a struct-crash row (chirpstackJsonStructCrash) produces a
-    // parsing error and NO packet (:496-500), so it drops here too.
-    df.filter((m("phyPayload").isNull || length(m("phyPayload")) <= 300) &&
-        !chirpstackJsonStructCrash(col("message"), m))
-      .select(Seq(
-        col("arrival_ts").as("date"),
-        col("topic"),
-        col("data_collector_id"), col("organization_id"),
-        x("mac").as("gateway"),
-        x("timestamp").as("tmst"),
-        m("rxInfo")("channel").as("chan"),
-        m("rxInfo")("rfChain").as("rfch"),
-        (x("frequency") / 1e6).as("freq"),
-        m("rxInfo")("crcStatus").as("stat"),
-        x("dataRate")("modulation").as("modu"),
-        to_json(struct(
-          x("dataRate")("spreadFactor").as("spread_factor"),
-          x("dataRate")("bandwidth").as("bandwidth"))).as("datr"),
-        m("rxInfo")("codeRate").as("codr"),
-        m("rxInfo")("loRaSNR").as("lsnr"),
-        m("rxInfo")("rssi").as("rssi"),
-        m("rxInfo")("size").as("size"),
-        m("phyPayload").as("data")) ++
-        phyCols(phy) ++ Seq(
-        // JoinRequests carry the PHY-parsed dev_eui (PhyParser.py:24 —
-        // the only m_type that sets it): they have no dev_addr, so the
-        // F1 map path (:380-387) is skipped and the reference saves the
-        // packet as-is (:478-491) with that dev_eui intact. Data frames
-        // parse dev_eui null here and stateful F1 fills it.
-        phy("dev_eui").as("dev_eui"),
-        nullCol("latitude"), nullCol("longitude"), nullCol("altitude"),
-        nullCol("app_name"), nullCol("dev_name"),
-        lit("radio").as("route"),
-        col("seq"), col("message").as("raw_message")): _*)
+  /** Join crash surface (:287-290): a valid-JSON join whose root is not an
+    * object (`.get('devEUI')` AttributeError) or lacks the devAddr KEY
+    * (`mqtt_messsage['devAddr']` KeyError) raises into the outer except
+    * (:496-500) BEFORE the message append — parsing error only, nothing
+    * persisted, prev untouched → perr. A JSON-null devAddr is NOT a crash
+    * (None is a hashable dict key; a non-scalar devAddr would be, but is
+    * an accepted residual). `devAddr` is the [[chirpstackJoinDevAddr]]
+    * probe; the key probe runs only where it came back null. */
+  private[graft] def chirpstackJoinCrash(devAddr: Column): KeyedCrash =
+    KeyedCrash(lit(false), devAddr.isNull,
+      keys => keys.isNull || !array_contains(keys, "devAddr"))
+
+  /** App crash surface (:412-427), first half. The raise is
+    * STATE-dependent (only a pair-hit reaches the crashing line), so rows
+    * are only TAGGED and chirpStep decides. perr_app_eat: valid JSON whose
+    * root is not an object — `.get('fCnt')` raises before the f_count
+    * compare (:416), after prev was consumed (:412-413). PERMISSIVE
+    * from_json gives a NON-null all-null-fields struct for a scalar/array
+    * root, so struct nullness alone cannot spot a non-object: the key
+    * probe, read only when every field is null, is the exact test. */
+  private[graft] def chirpstackAppEat(ma: Column): KeyedCrash =
+    KeyedCrash(lit(false),
+      ma.isNull || (ma("fCnt").isNull && ma("devEUI").isNull &&
+        ma("applicationName").isNull && ma("deviceName").isNull &&
+        ma("rxInfo").isNull),
+      _.isNull)
+
+  /** The app message's first rxInfo element. get(…, 0), not (0): ANSI
+    * throws on [0] of an EMPTY array, killing the whole query on one
+    * malformed message — and exactly the perr_app rows carry one. */
+  private def rxInfo0(ma: Column): Column = get(ma("rxInfo"), lit(0))
+
+  /** The rows on which [[chirpstackAppCrash]] reads the location probe:
+    * a first rxInfo element whose location slot parsed null. */
+  def chirpstackLocGate(ma: Column): Column =
+    rxInfo0(ma).isNotNull && rxInfo0(ma)("location").isNull
+
+  /** App crash surface, second half — perr_app: 'rxInfo' key present but
+    * null / not an array / empty / with a non-struct first element
+    * (`rxInfo[0].get` raises on the pair-hit path only, :419-427), or a
+    * truthy non-object location (:421-424): `if location:` runs
+    * location.get('latitude'), so a TRUTHY non-object location (non-zero
+    * number, non-empty string/array, true) raises, while Python-falsy
+    * values (absent, null, false, 0, "", [], {}) skip the block. The
+    * parsed slot is null for every non-object, so the RAW text `locText`
+    * ([[chirpstackLocText]]) decides truthiness (an object location parses
+    * non-null and never reaches it). Residual: the string "false"
+    * (truthy in Python, unquoted by get_json_object here). */
+  private[graft] def chirpstackAppCrash(ma: Column, locText: Column): KeyedCrash = {
+    val locNum = locText.rlike(
+      "^[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?$")
+    val locTruthy = length(locText) > 0 && locText =!= "false" &&
+      trim(locText) =!= "[]" &&
+      (!locNum || locText.cast("double") =!= 0.0)
+    KeyedCrash(chirpstackLocGate(ma) && locTruthy, rxInfo0(ma).isNull,
+      array_contains(_, "rxInfo"))
   }
 
-  /** ChirpStack gateway radio path, protobuf dialect after MessageToJson
-    * (P9; LoraServerIOCollector.py:321-338). gatewayID arrives base64 →
-    * lowercase hex. */
-  def chirpstackProtoRadio(df: DataFrame): DataFrame = {
-    val m = from_json(col("message"), chirpstackProto)
-    val phy = PhyFunctions.phy_decode_b64(m("phyPayload"))
-    val lmi = m("txInfo")("loRaModulationInfo")
-    // F0c: same null-safe size guard as the JSON dialect, plus the proto
-    // struct-crash guard (chirpstackProtoStructCrash — parsing error,
-    // no packet, LoraServerIOCollector.py:324,335-338,496-500)
-    df.filter((m("phyPayload").isNull || length(m("phyPayload")) <= 300) &&
-        !chirpstackProtoStructCrash(col("message"), m))
-      .select(Seq(
-        col("arrival_ts").as("date"),
-        col("topic"),
-        col("data_collector_id"), col("organization_id"),
-        lower(hex(unbase64(m("rxInfo")("gatewayID")))).as("gateway"),
-        nullCol("tmst"),
-        m("rxInfo")("channel").as("chan"),
-        m("rxInfo")("rfChain").as("rfch"),
-        (m("txInfo")("frequency") / 1e6).as("freq"),
-        crcStatusInt(m("rxInfo")("crcStatus")).as("stat"),
-        nullCol("modu"),
-        to_json(struct(
-          lmi("spreadingFactor").as("spread_factor"),
-          lmi("bandwidth").as("bandwidth"))).as("datr"),
-        lmi("codeRate").as("codr"),
-        m("rxInfo")("loRaSNR").as("lsnr"),
-        m("rxInfo")("rssi").as("rssi"),
-        m("rxInfo")("size").as("size"),
-        m("phyPayload").as("data")) ++
-        phyCols(phy) ++ Seq(
-        phy("dev_eui").as("dev_eui"), // JoinRequest-only, as the JSON dialect
-        nullCol("latitude"), nullCol("longitude"), nullCol("altitude"),
-        nullCol("app_name"), nullCol("dev_name"),
-        lit("radio").as("route"),
-        col("seq"), col("message").as("raw_message")): _*)
+  /** Application uplink fields the state machine reads (F1/F2,
+    * :403-446), by Rec field name. They populate for the tagged crash
+    * routes too (chirpStep never reads them there). */
+  private[graft] def chirpstackAppFields(ma: Column): Map[String, Column] = {
+    val rx0 = rxInfo0(ma); val loc = rx0("location")
+    Map("fCount" -> ma("fCnt"), "devEui" -> ma("devEUI"),
+      "appName" -> ma("applicationName"), "devName" -> ma("deviceName"),
+      "latitude" -> loc("latitude"), "longitude" -> loc("longitude"),
+      "altitude" -> loc("altitude"), "gwName" -> rx0("name"))
   }
+
+  /** F3 join fields (:287-304), by Rec field name; `devAddr` is the
+    * [[chirpstackJoinDevAddr]] probe. */
+  private[graft] def chirpstackJoinFields(devAddr: Column, msg: Column): Map[String, Column] =
+    Map("devAddr" -> devAddr, "devEui" -> get_json_object(msg, "$.devEUI"))
+
+  private def datrJson(spreadFactor: Column, bandwidth: Column): Column =
+    to_json(struct(spreadFactor.as("spread_factor"), bandwidth.as("bandwidth")))
+
+  /** Radio metadata, JSON dialect (P8 + P3 + P15;
+    * LoraServerIOCollector.py:339-366), by packet field. Reference quirk
+    * preserved: tmst/freq/gateway/modu/datr come from txInfo when present,
+    * else rxInfo (the `x_info` variable is simply the last one assigned,
+    * :354-360); chan/rfch/stat/codr/rssi/lsnr/size come only from rxInfo. */
+  private def chirpstackJsonMeta(m: Column): Map[String, Column] = {
+    val rx = m("rxInfo"); val x = coalesce(m("txInfo"), rx)
+    Map("gateway" -> x("mac"), "tmst" -> x("timestamp"),
+      "chan" -> rx("channel"), "rfch" -> rx("rfChain"),
+      "freq" -> x("frequency") / 1e6, "stat" -> rx("crcStatus"),
+      "modu" -> x("dataRate")("modulation"),
+      "datr" -> datrJson(x("dataRate")("spreadFactor"), x("dataRate")("bandwidth")),
+      "codr" -> rx("codeRate"), "lsnr" -> rx("loRaSNR"), "rssi" -> rx("rssi"),
+      "size" -> rx("size"))
+  }
+
+  /** Radio metadata, protobuf dialect after MessageToJson (P9 + P10;
+    * LoraServerIOCollector.py:321-338), by packet field: gatewayID
+    * arrives base64 → lowercase hex; no tmst, no modu. */
+  private def chirpstackProtoMeta(m: Column): Map[String, Column] = {
+    val rx = m("rxInfo"); val tx = m("txInfo"); val lmi = tx("loRaModulationInfo")
+    Map("gateway" -> lower(hex(unbase64(rx("gatewayID")))),
+      "chan" -> rx("channel"), "rfch" -> rx("rfChain"),
+      "freq" -> tx("frequency") / 1e6, "stat" -> crcStatusInt(rx("crcStatus")),
+      "datr" -> datrJson(lmi("spreadingFactor"), lmi("bandwidth")),
+      "codr" -> lmi("codeRate"), "lsnr" -> rx("loRaSNR"), "rssi" -> rx("rssi"),
+      "size" -> rx("size"))
+  }
+
+  /** Radio metadata of a row of either dialect, as the fused normalizer
+    * parses it (each row with its own dialect's schema only): `isProto`
+    * picks the protobuf-dialect struct `mp` over the JSON-dialect `mj`. */
+  private[graft] def chirpstackEitherMeta(isProto: Column, mj: Column,
+                                          mp: Column): String => Option[Column] = {
+    val j = chirpstackJsonMeta(mj); val p = chirpstackProtoMeta(mp)
+    f => if (!j.contains(f) && !p.contains(f)) None
+      else Some(when(isProto, p.getOrElse(f, nullCol(f))).otherwise(j.getOrElse(f, nullCol(f))))
+  }
+
+  /** A gateway-radio row's packet columns in [[PacketSchema.packet]]
+    * order: radio metadata from `meta` (a field it lacks is a typed
+    * null), `pay` the base64 PHYPayload, `phy` its decode. The PHY-parsed
+    * dev_eui is kept: JoinRequests carry it (PhyParser.py:24 — the only
+    * m_type that sets it) and have no dev_addr, so the F1 map path
+    * (:380-387) is skipped and the reference saves the packet as-is
+    * (:478-491); data frames parse it null and stateful F1 fills it. */
+  private[graft] def chirpstackRadioPacket(meta: String => Option[Column],
+                                           pay: Column, phy: Column): Seq[Column] =
+    packetColumns.map {
+      case "date" => col("arrival_ts").as("date")
+      case c @ ("topic" | "data_collector_id" | "organization_id") => col(c)
+      case "data" => pay.as("data")
+      case f if f == "dev_eui" || phyFields.contains(f) => phy(f).as(f)
+      case f => meta(f).fold(nullCol(f))(_.as(f))
+    }
+
+  /** One gateway-radio dialect as a branch normalizer (the oracle form):
+    * oversized and struct-crash rows drop (the fused form routes them to
+    * "drop" / "perr"; state ops ignore both). */
+  private def chirpstackRadio(df: DataFrame, schema: StructType,
+                              meta: Column => Map[String, Column],
+                              crash: Column => KeyedCrash): DataFrame = {
+    val m = from_json(col("message"), schema)
+    val pay = m("phyPayload")
+    df.filter(!chirpstackOversized(pay) && !crash(m)(chirpstackKeys(col("message"))))
+      .select(chirpstackRadioPacket(meta(m).get, pay, PhyFunctions.phy_decode_b64(pay)) ++
+        Seq(lit("radio").as("route"), col("seq"), col("message").as("raw_message")): _*)
+  }
+
+  /** ChirpStack gateway radio path, JSON dialect ([[chirpstackJsonMeta]]).
+    * A message that fails JSON decode falls through with null parsed
+    * fields — feed it to [[chirpstackProtoRadio]] or the raw route. */
+  def chirpstackJsonRadio(df: DataFrame): DataFrame =
+    chirpstackRadio(df, chirpstackGateway, chirpstackJsonMeta, chirpstackJsonCrash)
+
+  /** ChirpStack gateway radio path, protobuf dialect
+    * ([[chirpstackProtoMeta]]). */
+  def chirpstackProtoRadio(df: DataFrame): DataFrame =
+    chirpstackRadio(df, chirpstackProto, chirpstackProtoMeta, chirpstackProtoCrash)
 
   // --------------------------------------------------------- generic MQTT
 

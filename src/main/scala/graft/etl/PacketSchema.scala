@@ -1,61 +1,14 @@
 package graft.etl
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.types._
 
-/** The "standard packet" — the reference's normalized record. Column set
-  * recovered from the `Packet(...)` constructor call at
-  * `auditing/db/Service.py:7-46` (the Packet model itself lives outside the
-  * reference repo); FIXTURES.md §3b. One wide nullable row ("sparse tagged
-  * union"): which subset is populated depends on m_type, exactly like the
-  * Postgres table the reference feeds.
-  */
+/** The sink and source-message schemas. */
 object PacketSchema {
 
-  val packet: StructType = StructType(Seq(
-    StructField("date", TimestampType),
-    StructField("topic", StringType),
-    StructField("data_collector_id", LongType),
-    StructField("organization_id", LongType),
-    // radio metadata
-    StructField("gateway", StringType),
-    StructField("tmst", LongType),
-    StructField("chan", IntegerType),
-    StructField("rfch", IntegerType),
-    StructField("freq", DoubleType),
-    StructField("stat", IntegerType),
-    StructField("modu", StringType),
-    StructField("datr", StringType),   // stringified JSON {"spread_factor","bandwidth"}
-    StructField("codr", StringType),
-    StructField("lsnr", DoubleType),
-    StructField("rssi", IntegerType),
-    StructField("size", IntegerType),
-    // payload
-    StructField("data", StringType),   // base64 PHYPayload
-    // LoRaWAN MHDR/MIC
-    StructField("m_type", StringType),
-    StructField("major", StringType),
-    StructField("mic", StringType),
-    // join fields
-    StructField("join_eui", StringType),
-    StructField("dev_eui", StringType),
-    StructField("dev_nonce", IntegerType),
-    // data-frame fields
-    StructField("dev_addr", StringType),
-    StructField("adr", BooleanType),
-    StructField("ack", BooleanType),
-    StructField("adr_ack_req", BooleanType),
-    StructField("f_pending", BooleanType),
-    StructField("class_b", BooleanType),
-    StructField("f_count", LongType),
-    StructField("f_opts", StringType), // stringified JSON array of MAC commands
-    StructField("f_port", IntegerType),
-    // error / enrichment
-    StructField("error", StringType),
-    StructField("latitude", DoubleType),
-    StructField("longitude", DoubleType),
-    StructField("altitude", DoubleType),
-    StructField("app_name", StringType),
-    StructField("dev_name", StringType)))
+  /** The "standard packet" row: the encoder schema of its one definition,
+    * [[graft.state.StateOps.Pkt]] (field comments there). */
+  val packet: StructType = Encoders.product[graft.state.StateOps.Pkt].schema
 
   val packetColumns: Seq[String] = packet.fieldNames.toSeq
 

@@ -32,10 +32,10 @@ import org.apache.spark.unsafe.types.UTF8String
 object ChirpFoldInternal {
 
   /** The exact input column layout the ordinals below index into (the
-    * `Pipeline.toChirpRecs` select order). Callers verify their frame
-    * against it via [[requireInputSchema]] BEFORE folding, so a column
-    * reorder in toChirpRecs fails fast instead of silently corrupting
-    * the fold (getLong on a string offset, wrong-field reads). */
+    * Rec layout that `Pipeline.toChirpRecs` projects). Callers verify
+    * their frame against it via [[requireInputSchema]] BEFORE folding, so
+    * a column reorder in toChirpRecs fails fast instead of silently
+    * corrupting the fold (getLong on a string offset, wrong-field reads). */
   val expectedInput: Seq[String] = Seq("seq", "collectorId", "route",
     "topic", "message", "devAddr", "fCount", "devEui", "appName",
     "devName", "latitude", "longitude", "altitude", "gwName", "packet",
@@ -45,8 +45,10 @@ object ChirpFoldInternal {
     * getDouble/getStruct) — pinned literally, not derived from the Rec
     * encoder, so a type change in toChirpRecs OR in Rec itself fails
     * here instead of as a mid-fold wrong-offset read. Compared via
-    * `.sql` (structural, nullability-insensitive — nullability varies
-    * legitimately with upstream lineage and no accessor depends on it). */
+    * `.sql`: structural and blind to a column's own nullability (which
+    * varies legitimately with upstream lineage; no accessor depends on
+    * it), but a struct's `.sql` spells NOT NULL fields, so the packet
+    * struct must arrive with PacketSchema.packet's all-nullable fields. */
   private val expectedTypes: Seq[DataType] = Seq(
     LongType, LongType, StringType, StringType, StringType, StringType,
     LongType, StringType, StringType, StringType, DoubleType, DoubleType,
@@ -65,7 +67,8 @@ object ChirpFoldInternal {
           .mkString("; "))
   }
 
-  // input column ordinals (radioRecs column order, see Pipeline.radioRecs)
+  // input column ordinals (the one Rec layout: StateOps.Rec field order,
+  // as Pipeline.asRecs projects it)
   private final val SEQ = 0
   private final val COLLECTOR = 1
   private final val ROUTE = 2

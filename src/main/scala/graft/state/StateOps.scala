@@ -32,7 +32,8 @@ object StateOps {
     * cross-batch order is the source's monotonic-seq responsibility),
     * thread state through `step`, collect the output. ONE definition so
     * an ordering change (e.g. a tie-break on seq collisions) cannot
-    * silently diverge across the five hosts. */
+    * silently diverge across the three hosts ([[chirpFlatMap]],
+    * [[locationFlatMap]], [[VerifProcessor]]). */
   def runOrdered[S, O](st0: S, it: Iterator[Rec])(
       step: (S, Rec) => (S, Seq[O])): (S, Seq[O]) = {
     var st = st0
@@ -45,24 +46,44 @@ object StateOps {
     (st, out.result())
   }
 
-  /** The full normalized packet row (PacketSchema.packet as a typed
-    * struct) — travels OPAQUELY through the state machine: the state ops
+  /** The "standard packet" — the reference's normalized record, and the
+    * one definition of the packet layout ([[graft.etl.PacketSchema.packet]]
+    * is its encoder schema). Column set recovered from the `Packet(...)`
+    * constructor call at `auditing/db/Service.py:7-46` (the Packet model
+    * itself lives outside the reference repo); FIXTURES.md §3b. One wide
+    * nullable row ("sparse tagged union"): which subset is populated
+    * depends on m_type, exactly like the Postgres table the reference
+    * feeds.
+    *
+    * It travels OPAQUELY through the state machine: the state ops
     * read/write only the Rec-level fields; carrying the row as a struct
     * (not JSON) avoids a to_json/from_json round trip per packet
     * (~25% of the end-to-end pipeline cost at sf0.1). */
   final case class Pkt(
       date: Option[java.sql.Timestamp], topic: Option[String],
       data_collector_id: Option[Long], organization_id: Option[Long],
+      // radio metadata
       gateway: Option[String], tmst: Option[Long], chan: Option[Int],
       rfch: Option[Int], freq: Option[Double], stat: Option[Int],
-      modu: Option[String], datr: Option[String], codr: Option[String],
-      lsnr: Option[Double], rssi: Option[Int], size: Option[Int],
-      data: Option[String], m_type: Option[String], major: Option[String],
-      mic: Option[String], join_eui: Option[String], dev_eui: Option[String],
-      dev_nonce: Option[Int], dev_addr: Option[String], adr: Option[Boolean],
+      modu: Option[String],
+      datr: Option[String], // stringified JSON {"spread_factor","bandwidth"}
+      codr: Option[String], lsnr: Option[Double], rssi: Option[Int],
+      size: Option[Int],
+      // payload
+      data: Option[String], // base64 PHYPayload
+      // LoRaWAN MHDR/MIC
+      m_type: Option[String], major: Option[String], mic: Option[String],
+      // join fields
+      join_eui: Option[String], dev_eui: Option[String],
+      dev_nonce: Option[Int],
+      // data-frame fields
+      dev_addr: Option[String], adr: Option[Boolean],
       ack: Option[Boolean], adr_ack_req: Option[Boolean],
       f_pending: Option[Boolean], class_b: Option[Boolean],
-      f_count: Option[Long], f_opts: Option[String], f_port: Option[Int],
+      f_count: Option[Long],
+      f_opts: Option[String], // stringified JSON array of MAC commands
+      f_port: Option[Int],
+      // error / enrichment
       error: Option[String], latitude: Option[Double],
       longitude: Option[Double], altitude: Option[Double],
       app_name: Option[String], dev_name: Option[String])

@@ -331,10 +331,10 @@ class StateOpsSpec extends SparkSuite {
       val bits = java.lang.Double.doubleToLongBits(v)
       vint((f << 3) | 1) ++ (0 to 7).map(i => ((bits >>> (8 * i)) & 0xff).toByte)
     }
-    val rawProtoFrame: String = {
+    def rawProtoFrame(frmPayload: Array[Byte]): String = {
       val upBytes = Array(0x40.toByte) ++ graft.codec.Lorawan.hexToLe("44332211") ++
         Array(0x80.toByte) ++ Array(9.toByte, 0.toByte) ++
-        Array(1.toByte) ++ Array(10.toByte, 20.toByte) ++
+        Array(1.toByte) ++ frmPayload ++
         graft.codec.Lorawan.hexToBytes("00000000")
       val lmi = pV(1, 125) ++ pV(2, 9) ++ pLd(3, "4/5".getBytes("UTF-8"))
       val tx = pV(1, 867500000L) ++ pLd(3, lmi)
@@ -360,13 +360,43 @@ class StateOpsSpec extends SparkSuite {
       "application/1/device/e2/rx" -> """{"fCnt":7,"rxInfo":[]}""", // empty rxInfo → perr_app (:419-421)
       "application/1/device/j2/join" -> """{"devEUI":"nope"}""",    // no devAddr key → perr (:288 KeyError)
       "application/1/device/e3/rx" -> "not json @@",                // app decode failure → raw (:243-280)
-      "gateway/gw3/up" -> rawProtoFrame,                           // F0h raw protobuf
+      "gateway/gw3/up" -> rawProtoFrame(Array(10.toByte, 20.toByte)), // F0h raw protobuf
       "application/1/device/e4/rx" -> """{"fCnt":1,"rxInfo":[{"location":5}]}""", // truthy non-object location → perr_app (:421-424)
       "application/1/device/e5/rx" -> """{"fCnt":1,"rxInfo":[{"location":0}]}""", // falsy location skips the block → app
       "application/1/device/e6/rx" -> "null",                       // json.loads-valid null → eat (:416)
       "application/1/device/j3/join" -> "null",                     // None.get('devEUI') → perr (:288)
       "gateway/gw1/rx" -> "null")                                   // 'phyPayload' in None → perr (:311)
-    val raw = cases.zipWithIndex
+    val joinRequest = graft.codec.Lorawan.b64encode(Array(0x00.toByte) ++
+      graft.codec.Lorawan.hexToLe("55d239ac716f234d") ++
+      graft.codec.Lorawan.hexToLe("b827eb891cf50003") ++
+      Array(0xb7.toByte, 0xc9.toByte) ++ graft.codec.Lorawan.hexToBytes("7005c4a5"))
+    // adversarial inputs, each with the route the reference takes
+    def app(loc: String) = s"""{"fCnt":1,"rxInfo":[{"location":$loc}]}"""
+    val adversarial: Seq[((String, String), String)] =
+      // valid-JSON scalar and array roots: on a radio topic `'phyPayload'
+      // in` raises (number) or is False and x_info is never bound
+      // (NameError, :311/:341-358); on an app topic `.get('fCnt')` raises
+      // after prev was consumed (:416); on a join topic `.get('devEUI')`
+      // raises before the append (:288)
+      Seq("5", "[1]", "\"s\"").flatMap(root => Seq(
+        ("gateway/gw1/rx" -> root) -> "perr",
+        ("application/1/device/e8/rx" -> root) -> "perr_app_eat",
+        ("application/1/device/j4/join" -> root) -> "perr")) ++
+      // the empty message fails json.loads on every parsed route (:243-280)
+      Seq("gateway/gw1/rx", "application/1/device/e9/rx",
+        "application/1/device/j5/join").map(t => (t -> "") -> "raw") ++
+      // a truthy non-object rxInfo[0].location raises at location.get
+      // (:419-427); a falsy one skips the block
+      Seq("\"x\"", "[1]", "true").map(l => ("application/1/device/l1/rx" -> app(l)) -> "perr_app") ++
+      Seq("\"\"", "[]", "{}", "false", "null")
+        .map(l => ("application/1/device/l2/rx" -> app(l)) -> "app") ++
+      // a raw base64 frame whose PHYPayload is past 300 chars returns at
+      // the size check (:313-315)
+      Seq(("gateway/gw3/up" -> rawProtoFrame(Array.fill(240)(7.toByte))) -> "drop") ++
+      // a JoinRequest radio frame: its PHY dev_eui rides in the packet
+      // (PhyParser.py:24) and the saved packet keeps it (:478-491)
+      Seq(("gateway/gw1/rx" -> jsonRadio(joinRequest)) -> "radio")
+    val raw = (cases ++ adversarial.map(_._1)).zipWithIndex
       .map { case ((t, m), i) => (t, m, (i % 2).toLong, i.toLong) }
       .toDF("topic", "message", "data_collector_id", "seq")
       .withColumn("organization_id", lit(7L))
@@ -377,8 +407,9 @@ class StateOpsSpec extends SparkSuite {
     // the union form FILTERS oversized payloads AND struct-crash rows
     // inside the per-dialect normalizers; the fused form routes them to
     // "drop" / "perr" (same downstream semantics — state ops ignore both)
-    assert(fused.filter(_.route == "drop").map(_.seq) == Seq(2L, 3L))
-    assert(fused.filter(_.route == "perr").map(_.seq) == Seq(9L, 10L, 13L, 19L, 20L))
+    assert(fused.filter(_.route == "drop").map(_.seq) == Seq(2L, 3L, 41L))
+    assert(fused.filter(_.route == "perr").map(_.seq) ==
+      Seq(9L, 10L, 13L, 19L, 20L, 21L, 23L, 24L, 26L, 27L, 29L))
     assert(fused.filterNot(r => r.route == "drop" || r.route == "perr") == union)
     // routes land where expected — index 5 (non-JSON text on a radio
     // topic) re-routes to raw: the reference's decode-failure path
@@ -391,7 +422,8 @@ class StateOpsSpec extends SparkSuite {
     assert(fused.map(_.route) ==
       Seq("radio", "radio", "drop", "drop", "radio", "raw", "app", "join",
         "raw", "perr", "perr", "perr_app_eat", "perr_app", "perr", "raw",
-        "radio", "perr_app", "app", "perr_app_eat", "perr", "perr"))
+        "radio", "perr_app", "app", "perr_app_eat", "perr", "perr") ++
+        adversarial.map(_._2))
     // the perr_app row keeps its fCount — chirpStep's pair-hit decision
     // needs it (:416)
     assert(fused.find(_.route == "perr_app").get.fCount.contains(7L))
@@ -403,6 +435,36 @@ class StateOpsSpec extends SparkSuite {
     assert(rawProto.packet.get.gateway.contains("aabbccddeeff0011"))
     assert(rawProto.packet.get.dev_addr.contains("44332211"))
     assert(rawProto.packet.get.f_count.contains(9L))
+    assert(fused.last.packet.get.dev_eui.contains("b827eb891cf50003"))
+  }
+
+  test("toChirpRecs plans each JSON probe once and at most three from_json") {
+    implicit val s = spark
+    import org.apache.spark.sql.catalyst.expressions.{GetJsonObject, JsonToStructs}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.functions._
+    // built from spark.range: over a LocalRelation the optimizer folds the
+    // whole projection into the relation and no expression is left to count
+    val raw = spark.range(4).select(
+      col("id").cast("string").as("topic"), col("id").cast("string").as("message"),
+      col("id").as("data_collector_id"), col("id").as("organization_id"),
+      col("id").as("seq"), timestamp_micros(col("id")).as("arrival_ts"))
+    val plan = Pipeline.toChirpRecs(raw).toDF().queryExecution.optimizedPlan
+    val found = plan.flatMap(_.expressions).flatMap(_.collect {
+      case g: GetJsonObject => s"get_json_object ${g.path}"
+      // Spark plans json_object_keys as this StaticInvoke
+      case i: StaticInvoke if i.functionName == "jsonObjectKeys" => "json_object_keys"
+      case _: JsonToStructs => "from_json"
+    })
+    val counts = found.groupBy(identity).map { case (k, v) => k -> v.size }
+    val report = counts.toSeq.sorted.map { case (k, n) => s"$k: $n" }.mkString("; ")
+    info(report)
+    assert(counts.keySet == Set("from_json", "json_object_keys", "get_json_object $",
+      "get_json_object $.rxInfo.gatewayID", "get_json_object $.txInfo.loRaModulationInfo",
+      "get_json_object $.devAddr", "get_json_object $.devEUI",
+      "get_json_object $.rxInfo[0].location"), report)
+    assert((counts - "from_json").values.forall(_ == 1), report)
+    assert(counts("from_json") <= 3, report)
   }
 
   // ------------------------------------------------------ pipeline e2e
