@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * Input contract: a DataFrame of raw messages with columns
   *   topic: String (null for TTN), message: String,
   *   data_collector_id: Long, organization_id: Long,
-  *   gw: String (per-collector config, TTN v2), gw_name: String (TTN v3),
+  *   gw: String (per-collector config, TTN v2),
   *   arrival_ts: Timestamp (event arrival; used for `date` so tests are
   *   deterministic — the reference stamps datetime.now() at process time,
   *   P15).
@@ -262,11 +262,11 @@ object Normalize {
     * :403-446), by Rec field name. They populate for the tagged crash
     * routes too (chirpStep never reads them there). */
   private[graft] def chirpstackAppFields(ma: Column): Map[String, Column] = {
-    val rx0 = rxInfo0(ma); val loc = rx0("location")
+    val loc = rxInfo0(ma)("location")
     Map("fCount" -> ma("fCnt"), "devEui" -> ma("devEUI"),
       "appName" -> ma("applicationName"), "devName" -> ma("deviceName"),
       "latitude" -> loc("latitude"), "longitude" -> loc("longitude"),
-      "altitude" -> loc("altitude"), "gwName" -> rx0("name"))
+      "altitude" -> loc("altitude"))
   }
 
   /** F3 join fields (:287-304), by Rec field name; `devAddr` is the
@@ -664,7 +664,6 @@ object Normalize {
                 get(m("identifiers"), lit(0))("gateway_ids")("eui").isNull), "perr_buf")
               .otherwise("radio"))
           .otherwise("raw").as("route"),
-        col("seq"), col("message").as("raw_message"),
-        col("gw_name")): _*)
+        col("seq"), col("message").as("raw_message")): _*)
   }
 }

@@ -3,7 +3,8 @@ package graft.etl
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.types._
 
-/** The sink and source-message schemas. */
+/** The packet and source-message schemas (the sink row is
+  * [[graft.state.StateOps.Envelope]]'s encoder schema). */
 object PacketSchema {
 
   /** The "standard packet" row: the encoder schema of its one definition,
@@ -11,18 +12,6 @@ object PacketSchema {
   val packet: StructType = Encoders.product[graft.state.StateOps.Pkt].schema
 
   val packetColumns: Seq[String] = packet.fieldNames.toSeq
-
-  /** Envelope written to the sink (`BaseCollector.py:55-56`,
-    * `PacketPersistence.py:35`; FIXTURES.md §3a). */
-  val message: StructType = StructType(Seq(
-    StructField("topic", StringType),
-    StructField("message", StringType),
-    StructField("data_collector_id", LongType)))
-
-  val envelope: StructType = StructType(Seq(
-    StructField("ts", LongType),
-    StructField("packet", packet),
-    StructField("messages", ArrayType(message))))
 
   // ------------------------- source-message schemas (FIXTURES.md §2) ----
 

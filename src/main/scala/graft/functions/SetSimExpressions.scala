@@ -752,43 +752,28 @@ case class WordBigrams(child: Expression) extends EmptyOnNullInput {
 }
 
 /** Non-empty-token variant of [[LiteralSplitKernel]] (r15):
-  * `filter(split(str, sep, -1), w -> w <> '')` as the SAME single byte
-  * walk, skipping zero-length slices — the classifier feature builder's
-  * word stream (q104/q105 training) ran the builtin regex split's three
-  * transcodings AND an interpreted `filter` HOF per token. Emits only
-  * tokens with at least one byte; `"" → []`, all-separator input → [].
-  * Property-pinned against the SQL form in SetSimExpressionsSpec. */
+  * `filter(split(str, sep, -1), w -> w <> '')` as the SAME byte scan
+  * ([[LiteralSplitKernel.tokenEnds]]), skipping zero-length slices — the
+  * classifier feature builder's word stream (q104/q105 training) ran the
+  * builtin regex split's three transcodings AND an interpreted `filter`
+  * HOF per token. Emits only tokens with at least one byte; `"" → []`,
+  * all-separator input → []. Property-pinned against the SQL form in
+  * SetSimExpressionsSpec. */
 object LiteralSplitWordsKernel {
   def eval(s: UTF8String, sep: Array[Byte]): ArrayData = {
     val bytes = s.getBytes // one copy; every token slices it
-    val n = bytes.length
-    val m = sep.length
-    @inline def matchAt(i: Int): Boolean = {
-      var j = 0
-      while (j < m && bytes(i + j) == sep(j)) j += 1
-      j == m
-    }
-    var count = 0
+    val ends = LiteralSplitKernel.tokenEnds(bytes, sep)
+    val out = new Array[Any](ends.length)
+    var k = 0
     var start = 0
     var i = 0
-    while (i + m <= n) {
-      if (matchAt(i)) { if (i > start) count += 1; i += m; start = i }
-      else i += 1
+    while (i < ends.length) {
+      if (ends(i) > start) { out(k) = UTF8String.fromBytes(bytes, start, ends(i) - start); k += 1 }
+      start = ends(i) + sep.length
+      i += 1
     }
-    if (n > start) count += 1
-    val out = new Array[Any](count)
-    var k = 0
-    start = 0
-    i = 0
-    while (i + m <= n) {
-      if (matchAt(i)) {
-        if (i > start) { out(k) = UTF8String.fromBytes(bytes, start, i - start); k += 1 }
-        i += m
-        start = i
-      } else i += 1
-    }
-    if (n > start) out(k) = UTF8String.fromBytes(bytes, start, n - start)
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      if (k == out.length) out else out.take(k))
   }
 }
 

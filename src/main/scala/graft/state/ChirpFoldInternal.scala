@@ -1,8 +1,10 @@
 package graft.state
 
 import graft.etl.PacketSchema
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,7 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Input schema = `Pipeline.toChirpRecs(...).toDF()`, sorted by
   * (collectorId, seq) within collector-hash partitions. Output schema =
-  * [[outputSchema]] (the envelopeFrame K1/K4 shape, enrichment applied).
+  * [[outputSchema]], the encoder schema of [[StateOps.Envelope]] (the
+  * K1/K4 sink row, enrichment applied).
   */
 object ChirpFoldInternal {
 
@@ -38,33 +41,30 @@ object ChirpFoldInternal {
     * corrupting the fold (getLong on a string offset, wrong-field reads). */
   val expectedInput: Seq[String] = Seq("seq", "collectorId", "route",
     "topic", "message", "devAddr", "fCount", "devEui", "appName",
-    "devName", "latitude", "longitude", "altitude", "gwName", "packet",
-    "arrivalTs")
+    "devName", "latitude", "longitude", "altitude", "packet", "arrivalTs")
 
   /** The TYPES the ordinal accessors below read (getLong/getUTF8String/
     * getDouble/getStruct) — pinned literally, not derived from the Rec
     * encoder, so a type change in toChirpRecs OR in Rec itself fails
-    * here instead of as a mid-fold wrong-offset read. Compared via
-    * `.sql`: structural and blind to a column's own nullability (which
-    * varies legitimately with upstream lineage; no accessor depends on
-    * it), but a struct's `.sql` spells NOT NULL fields, so the packet
-    * struct must arrive with PacketSchema.packet's all-nullable fields. */
+    * here instead of as a mid-fold wrong-offset read. Compared with
+    * nullability ignored at every depth: it varies legitimately with
+    * upstream lineage (a packet struct's fields may come out NOT NULL)
+    * and no accessor depends on it. */
   private val expectedTypes: Seq[DataType] = Seq(
     LongType, LongType, StringType, StringType, StringType, StringType,
     LongType, StringType, StringType, StringType, DoubleType, DoubleType,
-    DoubleType, StringType, PacketSchema.packet, LongType)
+    DoubleType, PacketSchema.packet, LongType)
 
   def requireInputSchema(schema: StructType): Unit = {
     require(schema.fieldNames.toSeq == expectedInput,
       s"ChirpFoldInternal input columns [${schema.fieldNames.mkString(", ")}] " +
         s"do not match the ordinal layout [${expectedInput.mkString(", ")}]")
-    val got = schema.fields.map(_.dataType.sql)
-    val want = expectedTypes.map(_.sql)
-    require(got.sameElements(want),
+    val drifted = expectedInput.indices.filterNot(i =>
+      DataTypeUtils.equalsIgnoreNullability(schema.fields(i).dataType, expectedTypes(i)))
+    require(drifted.isEmpty,
       "ChirpFoldInternal input TYPES drifted from the ordinal accessors: " +
-        expectedInput.indices.filter(i => got(i) != want(i))
-          .map(i => s"${expectedInput(i)} is ${got(i)} (fold reads ${want(i)})")
-          .mkString("; "))
+        drifted.map(i => s"${expectedInput(i)} is ${schema.fields(i).dataType.sql} " +
+          s"(fold reads ${expectedTypes(i).sql})").mkString("; "))
   }
 
   // input column ordinals (the one Rec layout: StateOps.Rec field order,
@@ -82,10 +82,8 @@ object ChirpFoldInternal {
   private final val LATITUDE = 10
   private final val LONGITUDE = 11
   private final val ALTITUDE = 12
-  // 13 = gwName: read by the typed path too but never persisted (the
-  // packet row has no gw_name column, matching the reference's Packet model)
-  private final val PACKET = 14
-  private final val ARRIVAL_TS = 15
+  private final val PACKET = 13
+  private final val ARRIVAL_TS = 14
 
   private val pktSchema: StructType = PacketSchema.packet
   private final val PKT_N = pktSchema.length
@@ -97,11 +95,7 @@ object ChirpFoldInternal {
   private final val P_APP = pktSchema.fieldIndex("app_name")
   private final val P_DEV = pktSchema.fieldIndex("dev_name")
 
-  val outputSchema: StructType = StructType(Seq(
-    StructField("ts", LongType, nullable = false),
-    StructField("data_collector_id", LongType, nullable = false),
-    StructField("packet", pktSchema),
-    StructField("messages", ArrayType(PacketSchema.message, containsNull = false))))
+  val outputSchema: StructType = Encoders.product[StateOps.Envelope].schema
 
   private val ROUTE_JOIN = UTF8String.fromString("join")
   private val ROUTE_RADIO = UTF8String.fromString("radio")
@@ -171,8 +165,8 @@ object ChirpFoldInternal {
         str(row, TOPIC), str(row, MESSAGE), row.getLong(COLLECTOR)))
 
     /** Packet column of `pktRow` with the six enrichment overrides applied
-      * — the fused form of chirpStep's Rec enrichment + envelopeFrame's
-      * coalesce(rec-level, packet-level). Null override → packet value. */
+      * — the fused form of chirpStep's Rec enrichment +
+      * [[StateOps.enrichedPacket]]. Null override → packet value. */
     private def packetOut(pktRow: InternalRow, devEui: UTF8String,
                           appName: UTF8String, devName: UTF8String,
                           lat: java.lang.Double, lon: java.lang.Double,

@@ -56,7 +56,8 @@ object StateOps {
     * feeds.
     *
     * It travels OPAQUELY through the state machine: the state ops
-    * read/write only the Rec-level fields; carrying the row as a struct
+    * read/write only the Rec-level fields, which [[enrichedPacket]]
+    * applies to it when an envelope is emitted; carrying the row as a struct
     * (not JSON) avoids a to_json/from_json round trip per packet
     * (~25% of the end-to-end pipeline cost at sf0.1). */
   final case class Pkt(
@@ -107,17 +108,32 @@ object StateOps {
       latitude: Option[Double],
       longitude: Option[Double],
       altitude: Option[Double],
-      gwName: Option[String],
       packet: Option[Pkt],   // full packet row (None: no packet)
       arrivalTs: Long)
 
-  final case class Msg(topic: Option[String], message: String, dataCollectorId: Long)
+  /** One logged message of an envelope (`BaseCollector.py:55-56`). */
+  final case class Msg(topic: Option[String], message: String, data_collector_id: Long)
 
+  /** The sink row (K1; `PacketPersistence.py:35`, FIXTURES.md §3a): its
+    * encoder schema is the one envelope layout, the batch fold's output
+    * schema included. `packet` is already enriched ([[enrichedPacket]]);
+    * None for raw-log envelopes. */
   final case class Envelope(
       ts: Long,
-      collectorId: Long,
-      packet: Option[Rec],    // enriched packet (None for raw-log envelopes)
+      data_collector_id: Long,
+      packet: Option[Pkt],
       messages: Seq[Msg])
+
+  /** The packet a Rec persists: its non-null state-op fields (identity,
+    * location) override the packet's own, as the reference writes them
+    * into its standard_packet in place. */
+  def enrichedPacket(r: Rec): Option[Pkt] = r.packet.map(p => p.copy(
+    dev_eui = r.devEui.orElse(p.dev_eui),
+    app_name = r.appName.orElse(p.app_name),
+    dev_name = r.devName.orElse(p.dev_name),
+    latitude = r.latitude.orElse(p.latitude),
+    longitude = r.longitude.orElse(p.longitude),
+    altitude = r.altitude.orElse(p.altitude)))
 
   final case class DeviceInfo(devEui: Option[String], appName: Option[String],
                               devName: Option[String], fromApp: Boolean)
@@ -130,7 +146,16 @@ object StateOps {
     * because an app-crash (perr_app/perr_app_eat) consumes prev while
     * leaving the buffer to ride into the next saved envelope
     * (LoraServerIOCollector.py:412-413 consume, :496-500 crash without
-    * reset). Every emission therefore prepends prevMsgs. */
+    * reset). Every emission therefore prepends prevMsgs.
+    *
+    * STATE SCHEMA BOUNDARY (v2): deleting `Rec.gwName` (`prev` is a
+    * Rec) and renaming `Msg.dataCollectorId` to `data_collector_id`
+    * (`prevMsgs`) changed the persisted state encoding of the F1-F3 host
+    * (GroupState[ChirpState]). A streaming checkpoint written by the v1
+    * state fails the state-store schema check on restart — discard the
+    * checkpoint (or drain the old query before upgrading); the device
+    * map and the pairing buffer start empty. Same operator contract as
+    * Events.idempotencyKey's KEY VERSION BOUNDARY. */
   final case class ChirpState(
       devices: Map[String, DeviceInfo],
       prev: Option[Rec],
@@ -144,7 +169,7 @@ object StateOps {
   def chirpStep(st: ChirpState, r: Rec): (ChirpState, Seq[Envelope]) = {
     val msg = Msg(r.topic, r.message, r.collectorId)
     def env(p: Option[Rec], ms: Seq[Msg]) =
-      Envelope(r.arrivalTs, r.collectorId, p, ms)
+      Envelope(r.arrivalTs, r.collectorId, p.flatMap(enrichedPacket), ms)
 
     r.route match {
       case "drop" =>
@@ -211,7 +236,7 @@ object StateOps {
           case Some(p) =>
             val cleared = st.copy(prev = None, prevMsgs = Nil)
             if (p.fCount.isDefined && p.fCount == r.fCount) {
-              // pair hit (:415-446): location + gw_name + F1 upsert + enrich
+              // pair hit (:415-446): location + F1 upsert + enrich
               val newDevices = p.devAddr.fold(cleared.devices) { da =>
                 cleared.devices + (da -> DeviceInfo(r.devEui, r.appName, r.devName, fromApp = true))
               }
@@ -219,7 +244,6 @@ object StateOps {
                 latitude = r.latitude.orElse(p.latitude),
                 longitude = r.longitude.orElse(p.longitude),
                 altitude = r.altitude.orElse(p.altitude),
-                gwName = r.gwName.orElse(p.gwName),
                 devEui = r.devEui, appName = r.appName, devName = r.devName)
               (cleared.copy(devices = newDevices),
                 Seq(env(Some(enriched), st.prevMsgs :+ msg)))
@@ -315,7 +339,10 @@ object StateOps {
     * 3-field v1 state fails the state-store schema check on restart —
     * discard the checkpoint (or drain the old query before upgrading);
     * held-location and buffered-message state start empty. Same
-    * operator contract as Events.idempotencyKey's KEY VERSION BOUNDARY. */
+    * operator contract as Events.idempotencyKey's KEY VERSION BOUNDARY.
+    * (v3): renaming `Msg.dataCollectorId` to `data_collector_id` changed
+    * the `pending` encoding again; a v2 checkpoint is discarded the same
+    * way. */
   final case class LocState(lat: Option[Double], lon: Option[Double],
                             alt: Option[Double], pending: Seq[Msg] = Nil)
 
@@ -333,6 +360,8 @@ object StateOps {
   def locationStep(st: Option[LocState], r: Rec): (Option[LocState], Seq[Envelope]) = {
     val msg = Msg(r.topic, r.message, r.collectorId)
     val pend = st.map(_.pending).getOrElse(Nil)
+    def env(p: Option[Rec]) =
+      Seq(Envelope(r.arrivalTs, r.collectorId, p.flatMap(enrichedPacket), pend :+ msg))
     r.route match {
       case "perr" =>
         // PRE-append crash (TTNv3 json.loads / ['result'] / status-data,
@@ -347,20 +376,14 @@ object StateOps {
         (Some(st.getOrElse(LocState(None, None, None))
           .copy(pending = pend :+ msg)), Nil)
       case "location" =>
-        (Some(LocState(r.latitude, r.longitude, r.altitude)),
-          Seq(Envelope(r.arrivalTs, r.collectorId, None, pend :+ msg)))
+        (Some(LocState(r.latitude, r.longitude, r.altitude)), env(None))
       case "radio" =>
         st match {
           case Some(l) =>
-            val enriched = r.copy(latitude = l.lat, longitude = l.lon,
-              altitude = l.alt)
-            (None, Seq(Envelope(r.arrivalTs, r.collectorId, Some(enriched), pend :+ msg)))
-          case None =>
-            (None, Seq(Envelope(r.arrivalTs, r.collectorId, Some(r), pend :+ msg)))
+            (None, env(Some(r.copy(latitude = l.lat, longitude = l.lon, altitude = l.alt))))
+          case None => (None, env(Some(r)))
         }
-      case _ =>
-        (st.map(_.copy(pending = Nil)),
-          Seq(Envelope(r.arrivalTs, r.collectorId, None, pend :+ msg)))
+      case _ => (st.map(_.copy(pending = Nil)), env(None))
     }
   }
 

@@ -11,11 +11,16 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
   *
   * {{{
   * raw messages (topic, message, data_collector_id, organization_id,
-  *               seq, arrival_ts [, gw, gw_name])
+  *               seq, arrival_ts [, gw])
   *   → route (F0) → per-dialect normalize (P*) → Rec
   *   → keyed state (F1+F2+F3 ChirpStack / F4 TTN)  [one shuffle on collector]
-  *   → envelopes {ts, packet, messages[]}           (K1 shape)
+  *   → envelopes {ts, data_collector_id, packet, messages[]}  (K1 shape)
   * }}}
+  *
+  * The state steps emit the sink row itself: [[StateOps.Envelope]], its
+  * packet already enriched by [[StateOps.enrichedPacket]], so
+  * [[envelopeFrame]] is the Dataset as a DataFrame and the batch fold's
+  * output schema is the same encoder schema.
   *
   * The same transforms run in batch (tests, replay) and streaming
   * (readStream → the parquet file sink of [[startEnvelopeSink]]).
@@ -53,15 +58,13 @@ object Pipeline {
   }
 
   /** Normalized radio rows (any dialect) → Recs. */
-  private def radioRecs(norm: DataFrame, gwName: Column)(
-      implicit s: SparkSession): Dataset[Rec] =
+  private def radioRecs(norm: DataFrame)(implicit s: SparkSession): Dataset[Rec] =
     asRecs(norm, "route" -> col("route"), "message" -> col("raw_message"),
       "devAddr" -> col("dev_addr"), "fCount" -> col("f_count"),
       "devEui" -> col("dev_eui"), "appName" -> col("app_name"),
       "devName" -> col("dev_name"), "latitude" -> col("latitude"),
       "longitude" -> col("longitude"), "altitude" -> col("altitude"),
-      "gwName" -> gwName, "packet" -> packetStructCol,
-      "arrivalTs" -> col("date").cast("long"))
+      "packet" -> packetStructCol, "arrivalTs" -> col("date").cast("long"))
 
   /** ChirpStack: route + normalization → Dataset[Rec] over ONE scan, as a
     * STAGED column program. Every rule is one [[Normalize]] definition,
@@ -147,11 +150,8 @@ object Pipeline {
       "devAddr" -> when(rt === "radio", phy("dev_addr")).when(rt === "join", join("devAddr")),
       "fCount" -> when(rt === "radio", phy("f_count")).when(isApp, app("fCount")),
       "devEui" -> when(rt === "join", join("devEui")).when(isApp, app("devEui")),
-      // the typed-null branch makes every packet field nullable, as the
-      // fold's schema check expects
       "packet" -> when(rt === "radio", struct(chirpstackRadioPacket(
-        chirpstackEitherMeta(isProto, mj, mp), col("pay"), phy): _*))
-        .otherwise(lit(null).cast(PacketSchema.packet))) ++
+        chirpstackEitherMeta(isProto, mj, mp), col("pay"), phy): _*))) ++
       (app -- Seq("fCount", "devEui")).map { case (k, v) => k -> when(isApp, v) }: _*)
   }
 
@@ -167,7 +167,7 @@ object Pipeline {
     val notJson = chirpstackNotJson(msg)
     // a radio Rec leaves devEui to its packet: the fused form sets it on
     // join and app rows only
-    def chirpRadioRecs(norm: DataFrame) = radioRecs(norm, lit(null).cast("string"))
+    def chirpRadioRecs(norm: DataFrame) = radioRecs(norm)
       .withColumn("devEui", lit(null).cast("string")).as[Rec]
 
     val radio = routed.filter(col("route") === "radio")
@@ -211,12 +211,9 @@ object Pipeline {
     * (routes radio|location|raw|perr|perr_buf). */
   def toTtnRecs(df: DataFrame, v3: Boolean)(implicit s: SparkSession): Dataset[Rec] = {
     val norm = if (v3) Normalize.ttnV3(df) else Normalize.ttnV2(df)
-    // v2 has no gateway name; radioRecs reads the gwName EXPRESSION, so
-    // no placeholder column is projected onto the v2 frame
-    val gwName = if (v3) col("gw_name") else lit(null).cast("string")
     // location + raw rows share the radio column layout here (the packet
     // struct is ignored downstream for non-radio routes)
-    radioRecs(norm, gwName)
+    radioRecs(norm)
   }
 
   // ------------------------------------------------------- state hookups
@@ -231,7 +228,7 @@ object Pipeline {
 
   /** Generic-MQTT: normalize → Dataset[Rec] (routes radio|perr_buf). */
   def toGenericRecs(df: DataFrame)(implicit s: SparkSession): Dataset[Rec] =
-    radioRecs(Normalize.genericMqtt(df), lit(null).cast("string"))
+    radioRecs(Normalize.genericMqtt(df))
 
   /** Batch/streaming: generic-MQTT per-message envelopes. The reference's
     * generic collector keeps no enrichment state — only the message
@@ -278,28 +275,10 @@ object Pipeline {
 
   // ---------------------------------------------------------- K1/K4 shape
 
-  /** Envelope dataset → the sink DataFrame {ts, packet struct,
-    * messages array} (FIXTURES.md §3a), packet enriched with the state
-    * ops' outputs. */
-  def envelopeFrame(envs: Dataset[Envelope]): DataFrame = {
-    val p = col("packet")
-    val pkt = p("packet") // the typed Pkt struct, no deserialization needed
-    val enriched = pkt
-      .withField("dev_eui", coalesce(p("devEui"), pkt("dev_eui")))
-      .withField("app_name", coalesce(p("appName"), pkt("app_name")))
-      .withField("dev_name", coalesce(p("devName"), pkt("dev_name")))
-      .withField("latitude", coalesce(p("latitude"), pkt("latitude")))
-      .withField("longitude", coalesce(p("longitude"), pkt("longitude")))
-      .withField("altitude", coalesce(p("altitude"), pkt("altitude")))
-    envs.toDF().select(
-      col("ts"),
-      col("collectorId").as("data_collector_id"),
-      when(p.isNotNull, enriched).as("packet"),
-      transform(col("messages"), m => struct(
-        m("topic").as("topic"),
-        m("message").as("message"),
-        m("dataCollectorId").as("data_collector_id"))).as("messages"))
-  }
+  /** Envelope dataset → the sink DataFrame {ts, data_collector_id,
+    * packet, messages[]} (FIXTURES.md §3a): the Envelope layout as is,
+    * its packet enriched by the state steps. */
+  def envelopeFrame(envs: Dataset[Envelope]): DataFrame = envs.toDF()
 
   /** K1/K4 streaming sink: Spark's parquet file sink, partitioned by
     * collector (the dev stand-in for the RabbitMQ durable queue).

@@ -19,18 +19,12 @@ object Measure {
   final case class PlanMetrics(
       shuffleBytes: Long, shuffleRecords: Long, exchanges: Int, rows: Long)
 
-  /** Execute `df`'s OWN plan and return its metrics. `df.count()` would
-    * not do: it wraps the plan in a new aggregate with a NEW
-    * QueryExecution, leaving this one's metrics untouched — the classic
-    * observability trap. `toRdd.count()` runs exactly this plan. */
-  def run(df: DataFrame): PlanMetrics = {
-    val rows = org.apache.spark.sql.GraftColumnBridge.toInternalRdd(df).count()
-    of(df).copy(rows = rows)
-  }
-
   /** Walk the EXECUTED plan (through AQE roots and reused exchanges)
     * and sum shuffle write metrics. Call only after an action on THIS
-    * DataFrame's own QueryExecution (see [[run]]). */
+    * DataFrame's own QueryExecution: `GraftColumnBridge.forceOwnPlan(df)`,
+    * as Bench does. `df.count()` would not do: it wraps the plan in a new
+    * aggregate with a NEW QueryExecution, leaving this one's metrics
+    * untouched — the classic observability trap. */
   def of(df: DataFrame): PlanMetrics = {
     var bytes = 0L
     var records = 0L

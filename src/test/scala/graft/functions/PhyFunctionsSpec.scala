@@ -33,7 +33,7 @@ class PhyFunctionsSpec extends SparkSuite {
     val q = graft.streaming.Pipeline.startEnvelopeSink(envs, out, ckpt)
     try {
       stream.addData(graft.state.StateOps.Rec(1, 5L, "raw", Some("t"), "m",
-        None, None, None, None, None, None, None, None, None, None, 1234L))
+        None, None, None, None, None, None, None, None, None, 1234L))
       q.processAllAvailable()
       assert(java.nio.file.Files.isDirectory(
         java.nio.file.Paths.get(out, "_spark_metadata")))

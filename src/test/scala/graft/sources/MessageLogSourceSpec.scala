@@ -97,7 +97,7 @@ class MessageLogSourceSpec extends SparkSuite {
       val out = spark.table("msglog_envs")
         .as[graft.state.StateOps.Envelope].collect()
       assert(out.length == 1)
-      assert(out.head.packet.get.devEui.contains("cafe01"))
+      assert(out.head.packet.get.dev_eui.contains("cafe01"))
       assert(out.head.messages.size == 2)
     } finally q.stop()
   }

@@ -116,8 +116,8 @@ class PipelineRestartSpec extends SparkSuite {
           devEui: Option[String] = None, appName: Option[String] = None,
           devName: Option[String] = None, lat: Option[Double] = None): Rec =
       Rec(seq, 1L, route, Some(s"t/$seq"), msg, devAddr, fCount, devEui,
-        appName, devName, lat, lat.map(_ + 1), lat.map(_ + 2), None, None,
-        2000 + seq)
+        appName, devName, lat, lat.map(_ + 1), lat.map(_ + 2),
+        RecFixtures.packetFor(route, devAddr, fCount), 2000 + seq)
     // batch 1 leaves EVERY kind of chirp state populated at the
     // restart boundary: a join-sourced devices_map entry (aa01), a
     // pending prev_packet (cc03@7), and crash residue in prevMsgs
@@ -154,22 +154,22 @@ class PipelineRestartSpec extends SparkSuite {
     // the buffered up-c, and the app message, enriched from the app row
     val pairEnv = actual.find(_.messages.exists(_.message == "app-c")).get
     assert(pairEnv.messages.map(_.message) == Seq("up-b", "up-c", "app-c"))
-    assert(pairEnv.packet.get.devEui.contains("eui-app"))
+    assert(pairEnv.packet.get.dev_eui.contains("eui-app"))
     assert(pairEnv.packet.get.latitude.contains(4.0))
     // join-sourced map entry recovered: up-a enriched with joined1
     val upAEnv = actual.find(_.messages.exists(_.message == "up-a")).get
-    assert(upAEnv.packet.get.devEui.contains("joined1"))
+    assert(upAEnv.packet.get.dev_eui.contains("joined1"))
     // app-sourced map entry written post-restart enriches the b3 uplink
     val upC2Env = actual.find(_.messages.exists(_.message == "up-c2")).get
-    assert(upC2Env.packet.get.devEui.contains("eui-app"))
-    assert(upC2Env.packet.get.appName.contains("appX"))
-    assert(upC2Env.packet.get.devName.contains("devX"))
+    assert(upC2Env.packet.get.dev_eui.contains("eui-app"))
+    assert(upC2Env.packet.get.app_name.contains("appX"))
+    assert(upC2Env.packet.get.dev_name.contains("devX"))
   }
 
   test("F4 location host restart: held location AND pending crash buffer survive") {
     def r(seq: Long, route: String, msg: String, lat: Option[Double] = None): Rec =
       Rec(seq, 1L, route, None, msg, None, None, None, None, None,
-        lat, lat.map(_ + 1), lat.map(_ + 2), None, None, 1000 + seq)
+        lat, lat.map(_ + 1), lat.map(_ + 2), RecFixtures.packetFor(route), 1000 + seq)
     // batch 1 ends with BOTH state kinds pending: a held location and
     // two buffered crash messages; the restart must recover them so
     // the first radio row after recovery emits one envelope carrying

@@ -19,7 +19,7 @@ class StateOpsSpec extends SparkSuite {
       Option(devAddr), Option(fCount).map(_.toLong), Option(devEui),
       Option(appName), Option(devName),
       Option(lat).map(_.toDouble), Option(lat).map(_.toDouble), Option(lat).map(_.toDouble),
-      None, None, 1000 + seq)
+      RecFixtures.packetFor(route, Option(devAddr), Option(fCount).map(_.toLong)), 1000 + seq)
 
   /** A data uplink PHYPayload (b64) for `daHex` at frame counter `fCnt`. */
   private def mkUp(daHex: String, fCnt: Int): String = graft.codec.Lorawan.b64encode(
@@ -41,8 +41,8 @@ class StateOpsSpec extends SparkSuite {
       rec(2, "app", fCount = 7L, devEui = "deadbeef", appName = "ap", devName = "dv", lat = 1.5))
     assert(out.size == 1)
     val env = out.head
-    assert(env.packet.get.devEui.contains("deadbeef"))
-    assert(env.packet.get.appName.contains("ap"))
+    assert(env.packet.get.dev_eui.contains("deadbeef"))
+    assert(env.packet.get.app_name.contains("ap"))
     assert(env.packet.get.latitude.contains(1.5))
     assert(env.messages.size == 2) // gateway msg + app msg
     // F1 updated through the pairing path
@@ -55,7 +55,7 @@ class StateOpsSpec extends SparkSuite {
       rec(1, "radio", devAddr = "aa01", fCount = 7L),
       rec(2, "app", fCount = 8L, devEui = "deadbeef"))
     assert(out.size == 1)
-    assert(out.head.packet.get.devEui.isEmpty)
+    assert(out.head.packet.get.dev_eui.isEmpty)
     assert(out.head.messages.size == 2)
     assert(st.devices.isEmpty)
   }
@@ -65,7 +65,7 @@ class StateOpsSpec extends SparkSuite {
       rec(1, "radio", devAddr = "aa01", fCount = 7L),
       rec(2, "radio", devAddr = "bb02", fCount = 9L))
     assert(out.size == 1)         // first packet flushed un-enriched
-    assert(out.head.packet.get.devAddr.contains("aa01"))
+    assert(out.head.packet.get.dev_addr.contains("aa01"))
     assert(st.prev.get.devAddr.contains("bb02")) // second now buffered
   }
 
@@ -75,7 +75,7 @@ class StateOpsSpec extends SparkSuite {
       rec(2, "radio", devAddr = "aa01", fCount = 3L))
     assert(out.size == 2)
     assert(out(0).packet.isEmpty)                  // F3 raw-log envelope
-    assert(out(1).packet.get.devEui.contains("cafe01"))
+    assert(out(1).packet.get.dev_eui.contains("cafe01"))
     assert(st.prev.isEmpty)
     // join-sourced entries carry no app/dev names (fromApp = false)
     assert(!st.devices("aa01").fromApp)
@@ -91,7 +91,7 @@ class StateOpsSpec extends SparkSuite {
       rec(1, "radio", devAddr = "aa01", fCount = 7L),
       rec(2, "raw"))
     assert(out.size == 2)
-    assert(out(0).packet.get.devAddr.contains("aa01"))
+    assert(out(0).packet.get.dev_addr.contains("aa01"))
     assert(out(1).packet.isEmpty)
     assert(st.prev.isEmpty)
   }
@@ -242,7 +242,7 @@ class StateOpsSpec extends SparkSuite {
     val joinEnv = out(0)
     assert(joinEnv.packet.isEmpty && joinEnv.messages.map(_.topic) == Seq(Some("t1"), Some("t2")))
     val flush = out(1)
-    assert(flush.packet.get.devAddr.contains("aa01") && flush.messages.isEmpty)
+    assert(flush.packet.get.dev_addr.contains("aa01") && flush.messages.isEmpty)
     assert(st.prev.get.devAddr.contains("cc03"))
     // persistence gate: the message-less flush never reaches the sink
     assert(Seq(joinEnv, flush).filter(_.messages.nonEmpty) == Seq(joinEnv))
@@ -304,6 +304,22 @@ class StateOpsSpec extends SparkSuite {
     val f = fast.collect().map(_.toString).sorted.toSeq
     assert(f.size == t.size)
     assert(f == t)
+  }
+
+  test("fold input check ignores nullability and still names a drifted type") {
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types._
+    def recFrame(field: String, dt: DataType) = spark.createDataFrame(
+      java.util.List.of[Row](),
+      StructType(Encoders.product[Rec].schema.fields.map(f =>
+        if (f.name == field) f.copy(dataType = dt) else f))).schema
+    // a packet struct whose fields came out NOT NULL: no accessor reads it
+    val strictPacket = StructType(graft.etl.PacketSchema.packet.fields.map(_.copy(nullable = false)))
+    ChirpFoldInternal.requireInputSchema(recFrame("packet", strictPacket))
+    val e = intercept[IllegalArgumentException](
+      ChirpFoldInternal.requireInputSchema(recFrame("fCount", IntegerType)))
+    assert(e.getMessage.contains("input TYPES drifted") &&
+      e.getMessage.contains("fCount is INT (fold reads BIGINT)"), e.getMessage)
   }
 
   test("fused single-pass normalize equals the 5-branch union over mixed dialects") {
@@ -506,12 +522,12 @@ class StateOpsSpec extends SparkSuite {
       .collect().sortBy(_.ts)
     assert(envs.length == 3)
     val paired = envs(0)
-    assert(paired.packet.get.devEui.contains("cafe01"))
+    assert(paired.packet.get.dev_eui.contains("cafe01"))
     assert(paired.packet.get.latitude.contains(1.0))
     assert(paired.messages.size == 2)
     val enriched = envs(1)
-    assert(enriched.packet.get.devEui.contains("cafe01"))
-    assert(enriched.packet.get.appName.contains("app1"))
+    assert(enriched.packet.get.dev_eui.contains("cafe01"))
+    assert(enriched.packet.get.app_name.contains("app1"))
     assert(enriched.messages.size == 1)
     val joinLog = envs(2)
     assert(joinLog.packet.isEmpty)
@@ -526,6 +542,46 @@ class StateOpsSpec extends SparkSuite {
     assert(pkt.getAs[Double]("latitude") == 1.0)
     assert(pkt.getAs[String]("dev_addr") == "017fc1c4")
     assert(pkt.getAs[String]("datr") == """{"spread_factor":7,"bandwidth":125}""")
+  }
+
+  test("one envelope layout: typed hosts, batch fold and parquet sink") {
+    implicit val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val raw = chirpSeq.toDF("topic", "message", "seq")
+      .withColumn("data_collector_id", lit(1L))
+      .withColumn("organization_id", lit(2L))
+      .withColumn("arrival_ts", to_timestamp(lit("2024-06-01 12:00:00")))
+    val want = Encoders.product[Envelope].schema
+    Seq(Pipeline.chirpEnvelopeFrameBatch(raw),
+        Pipeline.envelopeFrame(Pipeline.chirpEnvelopes(Pipeline.toChirpRecs(raw))))
+      .foreach(df => assert(DataTypeUtils.equalsIgnoreNullability(df.schema, want),
+        df.schema.treeString))
+
+    // the sink writes that layout and reads back as the same envelopes
+    // (its partition column is re-inferred as INT and moves last)
+    val recs = Pipeline.toChirpRecs(raw).collect().toSeq
+    val stream = MemoryStream[Rec]
+    val out = java.nio.file.Files.createTempDirectory("envlayout").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("envlayout_ckpt").toString
+    val q = Pipeline.startEnvelopeSink(Pipeline.envelopeFrame(Pipeline.chirpEnvelopes(stream.toDS())),
+      out, ckpt, org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try { stream.addData(recs: _*); q.processAllAvailable() } finally q.stop()
+    val back = spark.read.parquet(out)
+    def names(t: DataType): Seq[String] = t match {
+      case st: StructType => st.fieldNames.toSeq
+      case ArrayType(e, _) => names(e)
+      case _ => Nil
+    }
+    assert(back.schema.fieldNames.toSet == Set("ts", "data_collector_id", "packet", "messages"))
+    assert(names(back.schema("packet").dataType) == graft.etl.PacketSchema.packetColumns)
+    assert(names(back.schema("messages").dataType) == Seq("topic", "message", "data_collector_id"))
+    assert(back.as[Envelope].collect().toSeq.sortBy(_.toString) ==
+      Pipeline.chirpEnvelopes(recs.toDS()).collect().toSeq.sortBy(_.toString))
   }
 
   test("TTN v3 pipeline end-to-end: status location consumed once by the next uplink") {
@@ -622,7 +678,7 @@ class StateOpsSpec extends SparkSuite {
         q.processAllAvailable()
         val out = spark.table("rocksdb_envs").as[Envelope].collect().sortBy(_.ts)
         assert(out.length == 2)
-        assert(out(1).packet.get.devEui.contains("cafe01")) // enriched from RocksDB state
+        assert(out(1).packet.get.dev_eui.contains("cafe01")) // enriched from RocksDB state
       } finally q.stop()
     } finally prev match {
       case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
@@ -711,15 +767,16 @@ class StateOpsSpec extends SparkSuite {
       val cid = (i % 2).toLong
       rndLoc.nextInt(6) match {
         case 0 => Rec(i, cid, "location", None, s"loc$i", None, None, None,
-          None, None, Some(i * 1.0), Some(2.0), Some(3.0), None, None, 1000 + i)
+          None, None, Some(i * 1.0), Some(2.0), Some(3.0), None, 1000 + i)
         case 1 | 2 => Rec(i, cid, "radio", None, s"up$i", Some("aa"), Some(1L),
-          None, None, None, None, None, None, None, None, 1000 + i)
+          None, None, None, None, None, None,
+          RecFixtures.packetFor("radio", Some("aa"), Some(1L)), 1000 + i)
         case 3 => Rec(i, cid, "raw", None, s"raw$i", None, None, None,
-          None, None, None, None, None, None, None, 1000 + i)
+          None, None, None, None, None, None, 1000 + i)
         case 4 => Rec(i, cid, "perr_buf", None, s"crash$i", None, None, None,
-          None, None, None, None, None, None, None, 1000 + i)
+          None, None, None, None, None, None, 1000 + i)
         case _ => Rec(i, cid, "perr", None, s"bad$i", None, None, None,
-          None, None, None, None, None, None, None, 1000 + i)
+          None, None, None, None, None, None, 1000 + i)
       }
     }
     val locEnvs = streamEqualsBatch("loc_mixed", locRecs, locRecs.length / 2,

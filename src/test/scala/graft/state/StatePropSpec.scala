@@ -15,7 +15,7 @@ object StatePropSpec extends Properties("ChirpState") {
     fCnt <- Gen.option(Gen.choose(0L, 3L))
     devEui <- Gen.option(Gen.oneOf("e1", "e2"))
   } yield Rec(0, 1L, route, Some("t"), "m", devAddr, fCnt, devEui,
-    None, None, None, None, None, None, None, 0)
+    None, None, None, None, None, RecFixtures.packetFor(route, devAddr, fCnt), 0)
 
   private def runAll(recs: List[Rec]): (ChirpState, Seq[Envelope]) =
     recs.zipWithIndex.foldLeft((ChirpState.empty, Seq.empty[Envelope])) {
@@ -80,7 +80,7 @@ object StatePropSpec extends Properties("ChirpState") {
     "suffix of raws never changes the device map") =
     forAll(Gen.listOfN(20, genRec)) { recs =>
       val raws = List.fill(3)(Rec(0, 1L, "raw", Some("t"), "m", None, None,
-        None, None, None, None, None, None, None, None, 0))
+        None, None, None, None, None, None, None, 0))
       runAll(recs ++ raws)._1.devices == runAll(recs)._1.devices
     }
 }

@@ -11,7 +11,7 @@ class VerifProcessorSpec extends SparkSuite {
 
   private def rec(seq: Long, cid: Long): Rec =
     Rec(seq, cid, "radio", Some(s"t$seq"), "m",
-      None, None, None, None, None, None, None, None, None, None, 1000 + seq)
+      None, None, None, None, None, None, None, None, None, 1000 + seq)
 
   test("gate + in-plan timer: flip emits, pre-verification rows skip, timeout fails") {
     implicit val s = spark

@@ -7,10 +7,17 @@ class MeasureSpec extends SparkSuite {
 
   import spark.implicits._
 
+  /** Bench's sequence: force the query's own plan, then read its metrics,
+    * rows being the forcing count. */
+  private def measured(df: org.apache.spark.sql.DataFrame): Measure.PlanMetrics = {
+    val rows = org.apache.spark.sql.GraftColumnBridge.forceOwnPlan(df)
+    Measure.of(df).copy(rows = rows)
+  }
+
   test("rolls up shuffle bytes and exchange count from the executed plan") {
     val df = spark.range(10000).select((col("id") % 100).as("k"), col("id"))
       .groupBy(col("k")).agg(sum(col("id")).as("s"))
-    val m = Measure.run(df)
+    val m = measured(df)
     assert(m.exchanges >= 1, m.toString)
     assert(m.shuffleBytes > 0, m.toString)
     assert(m.shuffleRecords > 0, m.toString)
@@ -21,7 +28,7 @@ class MeasureSpec extends SparkSuite {
     // the exchange carries at-most groups x maptasks records — orders of
     // magnitude under the row count. This measures the property PlanSpec
     // pins structurally.
-    val m = Measure.run(
+    val m = measured(
       graft.queries.Relational.q01PricingSummary(spark, "/root/testdata/sf0.001"))
     assert(m.rows == 6, m.toString)
     assert(m.shuffleRecords > 0 && m.shuffleRecords < 1000, m.toString)
@@ -29,7 +36,7 @@ class MeasureSpec extends SparkSuite {
 
   test("a shuffle-free scan reports zero exchanges") {
     val df = spark.range(1000).select(col("id") + 1)
-    val m = Measure.run(df)
+    val m = measured(df)
     assert(m.exchanges == 0 && m.shuffleBytes == 0, m.toString)
   }
 
