@@ -3,9 +3,10 @@ package graft.streaming
 import graft.etl.{Normalize, PacketSchema}
 import graft.state.StateOps
 import graft.state.StateOps.{Envelope, Rec}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 
 /** End-to-end packet pipeline assembly (SURVEY §3.2):
   *
@@ -23,7 +24,8 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
   * output schema is the same encoder schema.
   *
   * The same transforms run in batch (tests, replay) and streaming
-  * (readStream → the parquet file sink of [[startEnvelopeSink]]).
+  * (readStream → the parquet file sink of [[startEnvelopeSink]]); every
+  * stream starts through [[startStream]] (checkpoints: [[LocalCheckpointFiles]]).
   * Scale: normalization + codec are data-parallel map work before the
   * single state shuffle; only the order-dependent pairing serializes
   * per collector — exactly the
@@ -291,15 +293,32 @@ object Pipeline {
     * follows that log; a partition subdirectory or a glob bypasses it
     * and can see the files of an uncommitted or aborted batch. A wire
     * sink without such a log dedups at the consumer with
-    * [[Events.idempotencyKey]] ([[WireClients.startJdbcSink]]). */
+    * [[Events.idempotencyKey]] ([[WireClients.startJdbcSink]]).
+    *
+    * Checkpoint I/O: each micro-batch writes an offsets file, a commits
+    * file, state-store deltas with their checksum files and the
+    * `_spark_metadata` entry, each a temp file + rename. [[startStream]]
+    * writes them with [[LocalCheckpointFiles]], so a local checkpoint forks
+    * no `chmod` or `readlink` (~2.5 ms each without the native Hadoop
+    * library: 26.9 vs 0.07 ms per 12 KB atomic write). */
   def startEnvelopeSink(envs: DataFrame, outDir: String, checkpoint: String,
                         trigger: Trigger = Trigger.ProcessingTime("1 second")) =
-    envs.writeStream
+    startStream(envs.writeStream
       .format("parquet")
       .partitionBy("data_collector_id")
       .option("path", outDir)
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+      .trigger(trigger), envs.sparkSession)
+
+  /** Starts one of the program's streams on [[LocalCheckpointFiles]]. The
+    * conf is set only while `start()` runs, when the query builds its logs
+    * and clones the session its state stores read: the caller's session is
+    * left as it was. A manager the caller set wins. */
+  private[streaming] def startStream(w: DataStreamWriter[Row], s: SparkSession): StreamingQuery =
+    if (s.conf.getOption(LocalCheckpointFiles.ManagerKey).isDefined) w.start()
+    else {
+      s.conf.set(LocalCheckpointFiles.ManagerKey, classOf[LocalCheckpointFiles].getName)
+      try w.start() finally s.conf.unset(LocalCheckpointFiles.ManagerKey)
+    }
 }

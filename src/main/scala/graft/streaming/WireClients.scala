@@ -105,12 +105,11 @@ object WireClients {
                     queueName: String, routingKey: String, checkpoint: String,
                     trigger: Trigger = Trigger.ProcessingTime("1 second"))
       : StreamingQuery =
-    envs.withColumn("body", envelopeBody)
+    Pipeline.startStream(envs.withColumn("body", envelopeBody)
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreach(new AmqpEnvelopeWriter(connector, queueName, routingKey))
-      .start()
+      .foreach(new AmqpEnvelopeWriter(connector, queueName, routingKey)), envs.sparkSession)
 
   // ------------------------------------------------------------- JDBC
 
@@ -170,13 +169,12 @@ object WireClients {
                     checkpoint: String,
                     trigger: Trigger = Trigger.ProcessingTime("1 second"))
       : StreamingQuery =
-    envs
+    Pipeline.startStream(envs
       .withColumn("_idem_key", Events.idempotencyKey)
       .withColumn("packet_json", to_json(col("packet")))
       .withColumn("messages_json", to_json(col("messages")))
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreach(new JdbcEnvelopeWriter(connector, table))
-      .start()
+      .foreach(new JdbcEnvelopeWriter(connector, table)), envs.sparkSession)
 }

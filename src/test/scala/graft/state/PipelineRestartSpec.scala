@@ -262,4 +262,90 @@ class PipelineRestartSpec extends SparkSuite {
       s"sink ${written.size} rows vs batch ${batch.size}: " +
         s"${written.diff(batch).size} extra, ${batch.diff(written).size} missing")
   }
+
+  /** The envelope-sink assembly of the re-run test above under `root`:
+    * `publish(i)` moves segment i (of three) into the message log, `frame()`
+    * is the envelope frame over the log as a stream, `batch()` the batch
+    * oracle's row hashes and `written()` the sink's. */
+  private final class EnvelopeLog(val root: java.nio.file.Path) {
+    import java.nio.file.{Files, StandardCopyOption}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    private implicit val s: SparkSession = spark
+    private val log = Files.createDirectories(root.resolve("log"))
+    private val staging = Files.createDirectories(root.resolve("staging"))
+    val sink: String = root.resolve("sink").toString
+    val checkpoint: String = root.resolve("checkpoint").toString
+    private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    private val segments = mixedRows.grouped(30).toIndexedSeq.map(_.map {
+      case (topic, message, _, seq) =>
+        val o = mapper.createObjectNode()
+        o.put("topic", topic); o.put("message", message)
+        o.put("data_collector_id", seq % 2); o.put("organization_id", 7L)
+        o.put("seq", seq); o.put("arrival_ts", seq * 1000000L)
+        mapper.writeValueAsString(o)
+    }.mkString("\n"))
+    def publish(i: Int): Unit = {
+      val seg = Files.write(staging.resolve(f"seg-$i%04d.jsonl"), segments(i).getBytes("UTF-8"))
+      Files.move(seg, log.resolve(seg.getFileName), StandardCopyOption.ATOMIC_MOVE)
+    }
+    def frame(): DataFrame = Pipeline.envelopeFrame(Pipeline.chirpEnvelopes(Pipeline.toChirpRecs(
+      spark.readStream.format("graft.sources.MessageLogSource").load(log.toString))))
+    private def rowHashes(df: DataFrame): Seq[Long] = df
+      .select(xxhash64(col("ts"), col("data_collector_id").cast("long"),
+        col("packet"), col("messages")))
+      .collect().map(_.getLong(0)).toSeq.sorted
+    def batch(): Seq[Long] = rowHashes(Pipeline.chirpEnvelopeFrameBatch(
+      spark.read.format("graft.sources.MessageLogSource").load(log.toString)))
+    def written(): Seq[Long] = rowHashes(spark.read.parquet(sink))
+    def commits: Seq[String] =
+      root.resolve("checkpoint/commits").toFile.list().filter(_.forall(_.isDigit)).toSeq.sorted
+  }
+
+  test("envelope sink: checkpoint and sink-log writes fork no process; the session conf is kept") {
+    import graft.streaming.{LocalCheckpointFiles, LocalCheckpointFilesSpec}
+    import org.apache.spark.sql.streaming.Trigger
+    val env = new EnvelopeLog(java.nio.file.Files.createTempDirectory("envsink_forks"))
+    val before = spark.conf.getOption(LocalCheckpointFiles.ManagerKey)
+    val (_, commands) = LocalCheckpointFilesSpec.processStarts {
+      val q = Pipeline.startEnvelopeSink(env.frame(), env.sink, env.checkpoint,
+        Trigger.ProcessingTime(0))
+      assert(spark.conf.getOption(LocalCheckpointFiles.ManagerKey) == before)
+      try {
+        env.publish(0); q.processAllAvailable()
+        env.publish(1); q.processAllAvailable()
+      } finally q.stop()
+      // the control: the recording sees a process this test starts
+      new ProcessBuilder("ls", env.root.toString).start().waitFor()
+    }
+    val name = env.root.getFileName.toString
+    assert(commands.exists(c => c.startsWith("ls ") && c.contains(name)), commands.take(5))
+    val logs = commands.filter(c =>
+      c.contains(s"$name/checkpoint") || c.contains(s"$name/sink/_spark_metadata"))
+    assert(logs.isEmpty, s"${logs.size} process starts, e.g. ${logs.take(3).mkString("; ")}")
+    assert(env.commits == Seq("0", "1"))
+    assert(env.written().nonEmpty)
+    assert(env.written() == env.batch())
+  }
+
+  test("envelope sink: a checkpoint begun under Spark's default file manager resumes") {
+    import org.apache.spark.sql.streaming.Trigger
+    val env = new EnvelopeLog(java.nio.file.Files.createTempDirectory("envsink_upgrade"))
+    // the same sink started with a plain writeStream: Spark's own manager
+    val q1 = env.frame().writeStream.format("parquet").partitionBy("data_collector_id")
+      .option("path", env.sink).outputMode(OutputMode.Append)
+      .option("checkpointLocation", env.checkpoint).trigger(Trigger.ProcessingTime(0)).start()
+    try {
+      env.publish(0); q1.processAllAvailable()
+      env.publish(1); q1.processAllAvailable()
+    } finally q1.stop()
+    val q2 = Pipeline.startEnvelopeSink(env.frame(), env.sink, env.checkpoint,
+      Trigger.ProcessingTime(0))
+    try {
+      env.publish(2); q2.processAllAvailable()
+    } finally q2.stop()
+    assert(env.commits == Seq("0", "1", "2"))
+    assert(env.written().nonEmpty)
+    assert(env.written() == env.batch())
+  }
 }
